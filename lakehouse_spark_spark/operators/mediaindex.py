@@ -48,6 +48,11 @@ from lakehouse_spark_spark.operators.neardup import (
     fingerprint_block_rows,
     fingerprint_pair_block_rows,
 )
+from lakehouse_spark_spark.sources.sinks import (
+    gc_versioned_dirs,
+    resolve_versioned_dir,
+    write_manifest_atomic,
+)
 
 
 def _block_rows(df: DataFrame, id_col: str, fp_col: str, blocks: int, pair: bool) -> DataFrame:
@@ -74,22 +79,6 @@ class MediaFpIndex(NamedTuple):
     pair_blocks: bool = False
     aux_fp_cols: tuple = ()  # persisted verify signals (see write_media_fp_index)
     approx_rows: int | None = None  # footer-derived fingerprint count (free)
-
-
-def _mf_manifest_path(path: str) -> str:
-    return os.path.join(path, "manifest.json")
-
-
-def _mf_resolve_dir(path: str, mf: dict, family: str) -> str:
-    from lakehouse_spark_spark.sources.sinks import resolve_versioned_dir
-
-    return resolve_versioned_dir(path, mf, family)
-
-
-def _mf_write_manifest(path: str, manifest: dict) -> None:
-    from lakehouse_spark_spark.sources.sinks import write_manifest_atomic
-
-    write_manifest_atomic(path, manifest)
 
 
 def write_media_fp_index(
@@ -144,7 +133,7 @@ def write_media_fp_index(
     _block_rows(stored, "__id", "fp", blocks, pair_blocks).write.mode("overwrite").parquet(
         f"{path}/blocks"
     )
-    _mf_write_manifest(
+    write_manifest_atomic(
         path,
         {"format": 1, "blocks": int(blocks), "modality": str(modality),
          "pair_blocks": bool(pair_blocks), "aux_fp_cols": aux, "last_batch_id": None},
@@ -164,11 +153,11 @@ def load_media_fp_index(spark: SparkSession, path: str) -> MediaFpIndex:
     fold, which only errs toward the safe non-broadcast side)."""
     from lakehouse_spark_spark.sources.sinks import load_tombstones, parquet_footer_rows
 
-    with open(_mf_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
-    fp_dir = _mf_resolve_dir(path, mf, "fingerprints")
+    fp_dir = resolve_versioned_dir(path, mf, "fingerprints")
     fps = spark.read.parquet(fp_dir)
-    blocks = spark.read.parquet(_mf_resolve_dir(path, mf, "blocks"))
+    blocks = spark.read.parquet(resolve_versioned_dir(path, mf, "blocks"))
     tomb = load_tombstones(spark, path)
     if tomb is not None:
         tomb = tomb.select("__id")
@@ -213,9 +202,9 @@ def delete_from_media_fp_index(
     if (ids is None) == (clip_ids is None):
         raise ValueError("delete_from_media_fp_index: pass exactly one of ids= / clip_ids=")
     if clip_ids is not None:
-        with open(_mf_manifest_path(path)) as fh:
+        with open(os.path.join(path, "manifest.json")) as fh:
             mf = json.load(fh)
-        raw = spark.read.parquet(_mf_resolve_dir(path, mf, "fingerprints"))
+        raw = spark.read.parquet(resolve_versioned_dir(path, mf, "fingerprints"))
         clips = ids_to_frame(spark, clip_ids, "__clip")
         frame = (
             raw.select("__id")
@@ -248,7 +237,7 @@ def update_media_fp_index(
     change. Append ORDER is fingerprints-then-blocks (see module
     docstring for why the reverse order is the dangerous one)."""
     spark = batch_fps.sparkSession
-    with open(_mf_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     last = mf.get("last_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
@@ -267,12 +256,12 @@ def update_media_fp_index(
         )
         .localCheckpoint(eager=True)  # one upstream (decode+hash) pass feeds both appends
     )
-    clean.write.mode("append").parquet(_mf_resolve_dir(path, mf, "fingerprints"))
+    clean.write.mode("append").parquet(resolve_versioned_dir(path, mf, "fingerprints"))
     _block_rows(
         clean, "__id", "fp", int(mf["blocks"]), bool(mf.get("pair_blocks", False))
-    ).write.mode("append").parquet(_mf_resolve_dir(path, mf, "blocks"))
+    ).write.mode("append").parquet(resolve_versioned_dir(path, mf, "blocks"))
     if batch_id is not None:
-        _mf_write_manifest(path, {**mf, "last_batch_id": int(batch_id)})
+        write_manifest_atomic(path, {**mf, "last_batch_id": int(batch_id)})
     return load_media_fp_index(spark, path)
 
 
@@ -288,16 +277,16 @@ def compact_media_fp_index(spark: SparkSession, path: str, target_file_mb: int =
     re-append purged rows)."""
     import math
 
-    from lakehouse_spark_spark.sources.sinks import gc_versioned_dirs, load_tombstones
+    from lakehouse_spark_spark.sources.sinks import load_tombstones
 
-    with open(_mf_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     tomb = load_tombstones(spark, path)
     new_dirs: dict[str, str] = {}
     counts: list[int] = []
     for family in ("fingerprints", "blocks"):
         cur = mf.get(f"{family}_dir", family)
-        src = _mf_resolve_dir(path, mf, family)
+        src = resolve_versioned_dir(path, mf, family)
         size = sum(
             os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(src) for f in fs
         )
@@ -312,14 +301,14 @@ def compact_media_fp_index(spark: SparkSession, path: str, target_file_mb: int =
         ).parquet(os.path.join(path, next_dir))
         new_dirs[family] = next_dir
         counts.append(n_files)
-    _mf_write_manifest(
+    write_manifest_atomic(
         path,
         {**mf, "fingerprints_dir": new_dirs["fingerprints"], "blocks_dir": new_dirs["blocks"]},
     )
     for family in ("fingerprints", "blocks"):
         gc_versioned_dirs(
             path, family, new_dirs[family],
-            retain_dir=os.path.basename(_mf_resolve_dir(path, mf, family)),
+            retain_dir=os.path.basename(resolve_versioned_dir(path, mf, family)),
         )
     if tomb is not None:
         # audit evidence (r15): the deletions this rewrite carried are
@@ -572,11 +561,11 @@ def record_probe_skew(path: str, stats: dict, batch_id: int | None = None) -> No
     manifest-bearing persisted index dir (the neardup band index reuses
     it verbatim). Single-writer contract (run it from the ingest loop
     that owns the index)."""
-    with open(_mf_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     trail = list(mf.get("skew_trail", []))[-(_SKEW_TRAIL_MAX - 1):]
     trail.append({**stats, "batch_id": None if batch_id is None else int(batch_id)})
-    _mf_write_manifest(path, {**mf, "skew_trail": trail})
+    write_manifest_atomic(path, {**mf, "skew_trail": trail})
 
 
 def media_index_skew_health(spark: SparkSession, path: str) -> DataFrame:
@@ -588,7 +577,7 @@ def media_index_skew_health(spark: SparkSession, path: str) -> DataFrame:
     real work (tune it with data, not faith); all-zero rows say the cap
     is pure insurance. Pure manifest read — no index data scanned.
     Indexes that never recorded return zero rows."""
-    with open(_mf_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     rows = [
         (

@@ -30,6 +30,11 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from lakehouse_spark_spark.operators.text import norm_text
+from lakehouse_spark_spark.sources.sinks import (
+    gc_versioned_dirs,
+    resolve_versioned_dir,
+    write_manifest_atomic,
+)
 
 
 def word_shingles(
@@ -603,38 +608,6 @@ class NeardupIndex(NamedTuple):
     approx_band_rows: int | None = None  # footer-derived band-table count (free)
 
 
-def _nd_manifest_path(path: str) -> str:
-    return os.path.join(path, "manifest.json")
-
-
-def _nd_resolve_dir(path: str, mf: dict, family: str) -> str:
-    """The manifest-pointed dir for ``family`` ("signatures"/"bands";
-    pre-r11 manifests lack the pointer fields and mean the original
-    unversioned dirs) — the shared versioned-dir protocol
-    (sources/sinks.resolve_versioned_dir), including the
-    read-path-purity ``__old`` fallback; :func:`update_neardup_index`
-    performs the durable repair."""
-    from lakehouse_spark_spark.sources.sinks import resolve_versioned_dir
-
-    return resolve_versioned_dir(path, mf, family)
-
-
-def _nd_gc_versions(path: str, family: str, keep_dir: str, retain_dir: str | None) -> None:
-    """One-version-retention GC after a pointer flip — the shared
-    protocol (sources/sinks.gc_versioned_dirs)."""
-    from lakehouse_spark_spark.sources.sinks import gc_versioned_dirs
-
-    gc_versioned_dirs(path, family, keep_dir, retain_dir)
-
-
-def _nd_write_manifest(path: str, manifest: dict) -> None:
-    """Atomic whole-file pointer write — the shared manifest-commit
-    shape (sources/sinks.write_manifest_atomic)."""
-    from lakehouse_spark_spark.sources.sinks import write_manifest_atomic
-
-    write_manifest_atomic(path, manifest)
-
-
 def write_neardup_index(
     corpus: DataFrame,
     id_col: str,
@@ -659,7 +632,7 @@ def write_neardup_index(
     band_rows(stored, "__id", bands, num_hashes).write.mode("overwrite").parquet(
         f"{path}/bands"
     )
-    _nd_write_manifest(
+    write_manifest_atomic(
         path,
         {"format": 1, "n": int(n), "num_hashes": int(num_hashes), "bands": int(bands),
          "last_batch_id": None},
@@ -677,10 +650,10 @@ def load_neardup_index(spark: SparkSession, path: str) -> NeardupIndex:
     probe's hot-set broadcast decision uses (r14)."""
     from lakehouse_spark_spark.sources.sinks import load_tombstones, parquet_footer_rows
 
-    with open(_nd_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
-    band_dir = _nd_resolve_dir(path, mf, "bands")
-    sigs = spark.read.parquet(_nd_resolve_dir(path, mf, "signatures"))
+    band_dir = resolve_versioned_dir(path, mf, "bands")
+    sigs = spark.read.parquet(resolve_versioned_dir(path, mf, "signatures"))
     bands = spark.read.parquet(band_dir)
     tomb = load_tombstones(spark, path)
     if tomb is not None:
@@ -746,7 +719,7 @@ def update_neardup_index(
     surface a candidate whose signature is missing and silently drop
     the pair at the re-attach join."""
     spark = batch.sparkSession
-    with open(_nd_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     last = mf.get("last_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
@@ -765,12 +738,12 @@ def update_neardup_index(
         signatures.select(F.col(id_col).alias("__id"), "signature")
         .localCheckpoint(eager=True)  # one shingle pass feeds both appends
     )
-    sigs.write.mode("append").parquet(_nd_resolve_dir(path, mf, "signatures"))
+    sigs.write.mode("append").parquet(resolve_versioned_dir(path, mf, "signatures"))
     band_rows(sigs, "__id", int(mf["bands"]), int(mf["num_hashes"])).write.mode("append").parquet(
-        _nd_resolve_dir(path, mf, "bands")
+        resolve_versioned_dir(path, mf, "bands")
     )
     if batch_id is not None:
-        _nd_write_manifest(path, {**mf, "last_batch_id": int(batch_id)})
+        write_manifest_atomic(path, {**mf, "last_batch_id": int(batch_id)})
     return load_neardup_index(spark, path)
 
 
@@ -792,14 +765,14 @@ def compact_neardup_index(spark: SparkSession, path: str, target_file_mb: int = 
 
     from lakehouse_spark_spark.sources.sinks import load_tombstones
 
-    with open(_nd_manifest_path(path)) as fh:
+    with open(os.path.join(path, "manifest.json")) as fh:
         mf = json.load(fh)
     tomb = load_tombstones(spark, path)
     new_dirs: dict[str, str] = {}
     counts: list[int] = []
     for family in ("signatures", "bands"):
         cur = mf.get(f"{family}_dir", family)
-        src = _nd_resolve_dir(path, mf, family)
+        src = resolve_versioned_dir(path, mf, family)
         size = sum(
             os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(src) for f in fs
         )
@@ -814,16 +787,16 @@ def compact_neardup_index(spark: SparkSession, path: str, target_file_mb: int = 
         ).parquet(os.path.join(path, next_dir))
         new_dirs[family] = next_dir
         counts.append(n_files)
-    _nd_write_manifest(
+    write_manifest_atomic(
         path,
         {**mf, "signatures_dir": new_dirs["signatures"], "bands_dir": new_dirs["bands"]},
     )
     for family in ("signatures", "bands"):
         # retain the dir the rewrite actually read (== the pointed dir,
         # except in the legacy crash state where data lives at __old)
-        _nd_gc_versions(
+        gc_versioned_dirs(
             path, family, new_dirs[family],
-            retain_dir=os.path.basename(_nd_resolve_dir(path, mf, family)),
+            retain_dir=os.path.basename(resolve_versioned_dir(path, mf, family)),
         )
     if tomb is not None:
         # audit evidence (r15): the deletions this rewrite carried are

@@ -70,6 +70,14 @@ def registry() -> dict[str, Q]:
     return dict(_REGISTRY)
 
 
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: q.builder for name, q in _REGISTRY.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: q.oracle for name, q in _REGISTRY.items() if q.oracle is not None}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -427,813 +435,6 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank_in_customer") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", F.col("rank_in_customer").cast("long").alias("rank_in_customer"))
     )
-
-
-# The driver's correctness gate covers the FIRST 50 entries of
-# ``queries()`` (observed: CORRECTNESS_r{1..4} key sets are exactly the
-# registry-order prefix). Rounds 1-4 gated 104 distinct entries; this
-# list ROTATES 50 MORE never-yet-gated oracle-bearing queries to the
-# front for round 5 (round-4 verdict ask #2) — the two round-5-authored
-# queries (gopher_line_flags, curation_v3_disposition) plus 48 drawn
-# from the never-gated pool, including every query the verdict named
-# (weekly_retention_sketch, snapshot_time_travel_read,
-# zorder_pruned_read, scd2_user_event_type, monthly_cohort_retention,
-# events_gapfill_ffill, bucketed_join_order_revenue,
-# partition_pruned_monthly_revenue, levenshtein_prefix_pairs,
-# price_variance_by_segment). r01∪…∪r05 then covers 154 distinct
-# driver-verified queries. Everything previously gated stays green
-# under the committed full-registry attestation
-# (CORRECTNESS_LOCAL_r5.json, both SFs).
-_GATE_ROTATION_R5 = [
-    # round-5 authored: composed curation chain, Gopher line rules,
-    # real-pixel JPEG/PNG resize geometry
-    "curation_v3_disposition",
-    "gopher_line_flags",
-    "multimodal_resize",
-    # judge-named never-gated entries (round-4 verdict ask #2)
-    "weekly_retention_sketch",
-    "snapshot_time_travel_read",
-    "zorder_pruned_read",
-    "scd2_user_event_type",
-    "monthly_cohort_retention",
-    "events_gapfill_ffill",
-    "bucketed_join_order_revenue",
-    "partition_pruned_monthly_revenue",
-    "levenshtein_prefix_pairs",
-    "price_variance_by_segment",
-    # remaining never-gated pool (custom source, variant, layout,
-    # sketches, windows, LM, streaming-twin and relational shapes)
-    "documents_jsonl_robust_scan",
-    "orders_variant_extract",
-    "order_quartiles_by_segment",
-    "events_cube",
-    "embedding_stats_by_label",
-    "nation_customer_supplier_full",
-    "region_priority_grid",
-    "training_corpus_report",
-    "forecast_revenue_change",
-    "rolling_7d_customer_spend",
-    "training_corpus_disposition_cc",
-    "doc_unigram_logprob",
-    "source_reputation",
-    "events_grouping_sets",
-    "nation_market_share",
-    "product_type_profit",
-    "important_part_value",
-    "daily_event_anomaly",
-    "events_metrics_unpivot",
-    "orders_year_status_pivot",
-    "top_event_types_approx",
-    "session_window_stats",
-    "event_type_bag_ops",
-    "doc_tokens_outer_explode",
-    "doc_unigram_logprob_headtail",
-    "event_type_audience_overlap",
-    "order_price_histogram",
-    "brand_qty_price_corr",
-    "orders_column_profile",
-    "incremental_revenue_refresh",
-    "events_key_skew_report",
-    "user_funnel_counts",
-    "customer_order_statuses",
-    "latest_event_per_user_maxby",
-    "orders_integrity_checksum",
-    "top_orders_per_customer_ties",
-    "price_qty_histogram2d",
-]
-
-
-# Round-7 rotation (r6 verdict ask #2): retire the ENTIRE verification
-# debt. r01∪…∪r06 gate keys cover 154 distinct queries; the 35 never
-# gated all fit in the 50-query window at once — 24 oracle-bearing
-# (full hash check, including entity_resolution_clusters post-canopy
-# and the two queries that gained oracles this round) front-loaded,
-# then the 11 rows-only-by-design entries (driver records the weaker
-# rows-only check; each has a twin/property test). The remaining 15
-# slots re-gate queries whose code changed since they were last gated
-# (ER canopy blocking → levenshtein_prefix_pairs; jpegcodec hardening →
-# multimodal_resize; sketches guard → weekly_retention_sketch /
-# top_event_types_approx) plus the headline composition chain and
-# LLM-data operators. After r7, every registry query has appeared in a
-# driver CORRECTNESS artifact at least once.
-_GATE_ROTATION_R7 = [
-    # -- never-gated, oracle-bearing (24) --
-    "entity_resolution_clusters",
-    "user_interarrival_stats",
-    "doc_sentences_udtf",
-    "documents_jsonl_roundtrip",
-    "active_buyers_intersect",
-    "silent_users_except",
-    "nullsafe_value_match",
-    "order_priority_check",
-    "shipmode_priority_counts",
-    "promo_revenue_share",
-    "customer_first_last_order",
-    "large_volume_customers",
-    "top_supplier_by_revenue",
-    "daily_rollup_from_hourly",
-    "top_bigrams",
-    "customer_order_histogram",
-    "disjunctive_promo_revenue",
-    "wealthy_inactive_customers",
-    "shipping_priority",
-    "returned_item_customers",
-    "waiting_suppliers",
-    "min_cost_supplier",
-    "supplier_part_counts",
-    "promotion_suppliers",
-    # -- never-gated, rows-only by design (11) --
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "multimodal_frame_sample",
-    "multimodal_audio_features",
-    "segment_price_percentiles_approx",
-    "user_reach_sketch_rollup",
-    "wordpiece_token_stats",
-    "rolling_7d_reach_sketch",
-    "semantic_dedup_kept",
-    "sequence_packing_bfd",
-    "bpe_learned_merges",
-    # -- re-gate: code changed since last gated, or headline (15) --
-    "levenshtein_prefix_pairs",
-    "multimodal_resize",
-    "weekly_retention_sketch",
-    "top_event_types_approx",
-    "curation_v3_disposition",
-    "gopher_line_flags",
-    "supplier_pagerank",
-    "exact_dedup_documents",
-    "ngram_jaccard_capped",
-    "decontaminated_corpus",
-    "embedding_topk_cosine",
-    "bm25_doc_search",
-    "doc_perplexity_buckets",
-    "duplicated_span_stats",
-    "training_corpus_report",
-]
-
-
-# Round-8 rotation: r01∪…∪r07 covers 189 of 190 registry queries; the
-# one never-gated entry (similarity_graph_triangles, added after the r7
-# gate ran — the r7 verdict's red light) leads. Then the queries whose
-# CODE or ORACLE changed this round and need fresh driver hashes: the
-# ER family (slim-row canopy join rework: levenshtein_prefix_pairs,
-# entity_resolution_clusters, and the triangle query all share
-# _er_candidate_pairs), doc_sentences_udtf (oracle whitespace-class
-# fix), curation_v3_disposition (pin-dir contract), and
-# multimodal_audio_features (registry projection to driver-hashable
-# scalars — the r7 red row). The rest of the window re-gates the
-# STALEST coverage: everything last gated in r2/r3 (oracle-bearing
-# front, rows-only tail), so driver freshness rotates across rounds.
-# Invariant (tests/test_gate_rotation.py): any query added to the
-# registry after this list was cut MUST be added here in the same
-# commit — registry ⊆ gated(r01..r07) ∪ this prefix.
-_GATE_ROTATION_R8 = [
-    # -- never-gated (1) --
-    "similarity_graph_triangles",
-    # -- new in r8, oracle-bearing: bloom-prefiltered incremental dedup
-    #    (gated in its birth round; displaced dim_date — r3-gated and
-    #    untouched since — to keep the window at 50) --
-    "bloom_incremental_dedup",
-    # -- re-gate: code/oracle changed in r8 (4 oracle-bearing) --
-    "entity_resolution_clusters",
-    "levenshtein_prefix_pairs",
-    "doc_sentences_udtf",
-    "curation_v3_disposition",
-    # -- staleness re-gate: last gated r2 (3 oracle-bearing) --
-    "corpus_token_accounting",
-    "deduped_corpus",
-    "quality_filter_documents",
-    # -- staleness re-gate: last gated r3, oracle-bearing (37) --
-    "asof_purchase_last_view",
-    "avg_ticket_per_order",
-    "brand_sales",
-    "click_to_purchase_5min",
-    "customer_order_gaps",
-    "customers_with_big_order",
-    "daily_user_reach",
-    "dim_customer_unknown",
-    "doc_fingerprints",
-    "doc_quality",
-    "dq_summary",
-    "embedding_neardup_lsh_verified",
-    "events_daily_pivot",
-    "events_hourly",
-    "events_props_extract",
-    "fk_stamp_orders",
-    "inactive_customers_90d",
-    "lang_id_documents",
-    "latest_event_per_user",
-    "multimodal_decode",
-    "orders_by_status_month",
-    "orders_rollup",
-    "orphan_events_audit",
-    "pricing_summary",
-    "revenue_by_customer_90d",
-    "revenue_by_nation",
-    "salted_event_type_stats",
-    "segment_price_percentiles",
-    "session_stats",
-    "sessionize_events",
-    "small_quantity_orders",
-    "stream_static_enrich_batch",
-    "stream_stream_within_batch",
-    "supplier_nation_volume",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_orders_per_customer",
-    # -- rows-only tail (4): the r7 red row (now scalar-projected), the
-    #    oldest rows-only coverage (last gated r2), and the two
-    #    round-8 learned-classifier queries (new — gated in their
-    #    birth round; top100_orders, r3-gated and untouched since,
-    #    was displaced to keep the window at 50) --
-    "multimodal_audio_features",
-    "embedding_ann_ivf",
-    "quality_classifier_scores",
-    "curation_v4_learned_disposition",
-]
-
-
-# Round-9 rotation: r01∪…∪r08 covers the whole pre-r9 registry (gate
-# debt hit zero in r8), so this round is pure freshness + birth-round
-# gating. Leads: the two NEW r9 queries (persisted-Bloom ingest run 2,
-# curation v5 shipped accounting), then the queries whose CODE or
-# ORACLE changed this round (bloom_incremental_dedup: null-filtered
-# build + lineage truncation + broadcast cap; curation_v3_disposition:
-# shared-CTE oracle refactor adds f.source to `final` and the builder
-# became the docs-level wrapper). The staleness re-gate pulls the
-# OLDEST driver hashes: everything last gated r3 (7 oracle-bearing +
-# the 4 rows-only in the tail) and the first 33 of the 44 r4-gated
-# oracle-bearing queries (alphabetical; the remaining 11 are r10's
-# staleness pool). Rows-only tail also re-gates the two classifier
-# queries (their md5-rank training sample changed to numeric order
-# this round). Invariant (tests/test_gate_rotation.py): any query
-# added after this list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R9 = [
-    # -- new in r9, oracle-bearing (2) --
-    "bloom_persisted_ingest_run2",
-    "curation_v5_shipped_accounting",
-    # -- re-gate: code/oracle changed in r9 (2 oracle-bearing) --
-    "bloom_incremental_dedup",
-    "curation_v3_disposition",
-    # -- staleness re-gate: last gated r3, oracle-bearing (7) --
-    "dim_date",
-    "embedding_neardup_pairs",
-    "ngram_jaccard_pairs",
-    "salted_join_events_customer",
-    "sql_revenue_by_customer_90d",
-    "top100_orders",
-    "volume_shipping_by_nation_pair",
-    # -- staleness re-gate: last gated r4, oracle-bearing (33 of 44;
-    #    the alphabetical tail from sequence_packing on is r10's pool) --
-    "blocklist_flagged_docs",
-    "cluster_canonical_docs",
-    "corpus_kl_drift_en_de",
-    "corpus_mixture_plan",
-    "corpus_split_assignment",
-    "curation_disposition_v2",
-    "customer_spend_distribution",
-    "daily_events_ewma",
-    "doc_bigram_logprob",
-    "doc_chunking",
-    "doc_length_outliers",
-    "doc_quality_score",
-    "doc_repetition",
-    "doc_trigram_logprob_interp",
-    "dpp_selective_year_revenue",
-    "dsir_importance_weights",
-    "event_transition_matrix",
-    "events_sliding_1h_30m",
-    "gopher_quality_flags",
-    "incremental_dedup_batch",
-    "incremental_minmax_refresh",
-    "incremental_neardup_batch",
-    "langid_confusion_matrix",
-    "neardup_cluster_stats",
-    "neardup_components",
-    "ngram_containment_pairs",
-    "order_price_exact_percentiles",
-    "order_price_recency_skyline",
-    "orders_json_roundtrip",
-    "pii_redacted",
-    "pii_scan",
-    "price_quantiles_monthly_tier",
-    "semantic_decontamination_flags",
-    # -- rows-only tail (6): the two classifier queries (training
-    #    sample changed this round) + the r3-stale rows-only set --
-    "quality_classifier_scores",
-    "curation_v4_learned_disposition",
-    "daily_user_reach_approx",
-    "embedding_ann_lsh",
-    "minhash_lsh_candidates",
-    "simhash_candidates",
-]
-
-
-# Round-10 rotation: gate debt is zero (every registry query driver-
-# gated at least once across r01..r09), so the window is birth-round
-# gating + code-changed re-gates + maximal staleness refresh. Leads:
-# the NEW r10 queries (steady-state persisted-Bloom ingest and the
-# persisted-index family), then the queries whose CODE changed this
-# round (the bloom layout rework touches both bloom queries; the
-# curation_v5 ship/accounting family changed in corpus.py). The
-# staleness re-gate drains the r4 pool the r9 list left (11 queries —
-# the oldest driver hashes in the fleet) and then starts on the
-# r6-gated set (alphabetical). Rows-only entries sit at the tail per
-# the standing front-load invariant. Invariant
-# (tests/test_gate_rotation.py): any query added to the registry after
-# this list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R10 = [
-    # -- new in r10, oracle-bearing --
-    "bloom_persisted_ingest_steady",
-    # -- re-gate: code changed in r10 (bloom manifest/watermark layout;
-    #    curation_v5 ship fixes) --
-    "bloom_persisted_ingest_run2",
-    "bloom_incremental_dedup",
-    "curation_v5_shipped_accounting",
-    # -- staleness re-gate: last gated r4 (the final 11 of the r4 pool,
-    #    all oracle-bearing) --
-    "sequence_packing",
-    "sequence_packing_stats",
-    "source_dedup_leakage",
-    "source_token_entropy",
-    "span_trimmed_corpus",
-    "stratified_sample_documents",
-    "temperature_mixture_plan",
-    "tfidf_cosine_pairs_blocked",
-    "token_budget_sample_docs",
-    "training_corpus_disposition",
-    "weighted_doc_sample",
-    # -- staleness re-gate: last gated r6, oracle-bearing
-    #    (alphabetical prefix of the 43-query r6 pool) --
-    "brand_qty_price_corr",
-    "bucketed_join_order_revenue",
-    "customer_order_statuses",
-    "daily_event_anomaly",
-    "doc_tokens_outer_explode",
-    "doc_unigram_logprob",
-    "doc_unigram_logprob_headtail",
-    "documents_jsonl_robust_scan",
-    "embedding_stats_by_label",
-    "event_type_audience_overlap",
-    "event_type_bag_ops",
-    "events_cube",
-    "events_gapfill_ffill",
-    "events_grouping_sets",
-    "events_key_skew_report",
-    "events_metrics_unpivot",
-    "forecast_revenue_change",
-    "important_part_value",
-    "incremental_revenue_refresh",
-    "latest_event_per_user_maxby",
-    "monthly_cohort_retention",
-    "nation_customer_supplier_full",
-    "nation_market_share",
-    "order_price_histogram",
-    "order_quartiles_by_segment",
-    "orders_column_profile",
-    "orders_integrity_checksum",
-    "orders_variant_extract",
-    "orders_year_status_pivot",
-    # -- rows-only tail: the new r10 persisted-index queries
-    #    (birth-round gated; rows-only is justified in their
-    #    registration comments) plus re-gates of the rows-only queries
-    #    whose CODE the r10 shared-helper refactor touched (the
-    #    adc_dist/sq_dist/band_rows extraction — plans verified
-    #    byte-identical in PLANS.md, and the driver hash re-confirms) --
-    "neardup_persisted_ingest",
-    "embedding_ivfpq_persisted_topk",
-    "embedding_semdedup_persisted_ingest",
-    "embedding_pq_topk",
-    "embedding_ivfpq_topk",
-    "minhash_lsh_candidates",
-]
-
-
-# Round-11 rotation: gate debt is zero, so the window is birth-round
-# gating + code-changed re-gates + maximal staleness refresh. The
-# staleness re-gate drains the LAST 14 of the r6-gated pool (the oldest
-# driver hashes in the fleet) and starts on the r7-gated set
-# (alphabetical prefix of its 35 oracle-bearing queries; the 5
-# remaining + its 8 rows-only queries are r12's stalest). Rows-only
-# entries sit at the tail per the standing front-load invariant: the
-# two queries born this round (the batch-scale distributed IVF-PQ probe
-# and the ANN drift-health diag) plus re-gates of the rows-only queries
-# whose code r11 touched (the shared vectorized LUT kernel feeds
-# embedding_ivfpq_topk and the persisted search; semantic_dedup_
-# against_index's multi-probe restructure feeds the semdedup ingest;
-# the hot-bucket cap touched the near-dup probe). Invariant
-# (tests/test_gate_rotation.py): any query added to the registry after
-# this list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R11 = [
-    # -- new in r11, oracle-bearing: the steady-state persisted
-    #    decontamination ingest (the one persisted family whose probe
-    #    is oracle-exact; displaced top_event_types_approx — r7-stale —
-    #    to keep the window at 50) --
-    "decon_persisted_ingest",
-    # -- staleness re-gate: last gated r6 (the final 14 of the r6 pool,
-    #    all oracle-bearing) --
-    "partition_pruned_monthly_revenue",
-    "price_qty_histogram2d",
-    "price_variance_by_segment",
-    "product_type_profit",
-    "region_priority_grid",
-    "rolling_7d_customer_spend",
-    "scd2_user_event_type",
-    "session_window_stats",
-    "snapshot_time_travel_read",
-    "source_reputation",
-    "top_orders_per_customer_ties",
-    "training_corpus_disposition_cc",
-    "user_funnel_counts",
-    "zorder_pruned_read",
-    # -- staleness re-gate: last gated r7, oracle-bearing (alphabetical
-    #    prefix of the 35-query oracle-bearing r7 pool) --
-    "active_buyers_intersect",
-    "bm25_doc_search",
-    "customer_first_last_order",
-    "customer_order_histogram",
-    "daily_rollup_from_hourly",
-    "decontaminated_corpus",
-    "disjunctive_promo_revenue",
-    "doc_perplexity_buckets",
-    "documents_jsonl_roundtrip",
-    "duplicated_span_stats",
-    "embedding_topk_cosine",
-    "exact_dedup_documents",
-    "gopher_line_flags",
-    "large_volume_customers",
-    "min_cost_supplier",
-    "multimodal_resize",
-    "ngram_jaccard_capped",
-    "nullsafe_value_match",
-    "order_priority_check",
-    "promo_revenue_share",
-    "promotion_suppliers",
-    "returned_item_customers",
-    "shipmode_priority_counts",
-    "shipping_priority",
-    "silent_users_except",
-    "supplier_pagerank",
-    "supplier_part_counts",
-    "top_bigrams",
-    # -- rows-only tail: born in r11 (justified in their registration
-    #    comments) + re-gates of rows-only queries whose code changed
-    #    in r11 (top_supplier_by_revenue yielded its stale slot to the
-    #    late-added index-join query; it stays in the r12 stale pool) --
-    "embedding_ivfpq_distributed_topk",
-    "ann_index_health_diag",
-    "embedding_semantic_join_indexes",
-    "embedding_ivfpq_persisted_topk",
-    "embedding_semdedup_persisted_ingest",
-    "embedding_ivfpq_topk",
-    "neardup_persisted_ingest",
-]
-
-
-# Round-12 rotation: gate debt stays zero. Window = the two queries
-# born this round + rows-only re-gates of everything the r12 reworks
-# touched (the recall panel + occupancy tracker ride write/update_
-# ann_index, so every persisted-ANN fixture is rebuilt under new code;
-# ann_index_health grew three columns; the near-dup probe gained the
-# exact-signature rescue) + maximal staleness refresh: the LAST 7
-# oracle-bearing and all 8 rows-only r7-gated queries (the oldest
-# driver hashes in the fleet), then the alphabetical prefix of the
-# r8-gated oracle pool. The r12 sinks work (ledger-safe compaction,
-# floor manifest) has no gated-query surface — it is pinned by
-# tests/test_maintenance.py instead. Oracle-bearing entries first per
-# the standing front-load invariant; invariant (tests/
-# test_gate_rotation.py): any query added to the registry after this
-# list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R12 = [
-    # -- staleness re-gate: the r7 remnants, oracle-bearing (includes
-    #    the two slots displaced in r10/r11) --
-    "top_event_types_approx",
-    "top_supplier_by_revenue",
-    "training_corpus_report",
-    "user_interarrival_stats",
-    "waiting_suppliers",
-    "wealthy_inactive_customers",
-    "weekly_retention_sketch",
-    # -- staleness re-gate: start of the r8-gated oracle pool
-    #    (alphabetical prefix of its 44 oracle-bearing queries) --
-    "asof_purchase_last_view",
-    "avg_ticket_per_order",
-    "brand_sales",
-    "click_to_purchase_5min",
-    "corpus_token_accounting",
-    "customer_order_gaps",
-    "customers_with_big_order",
-    "daily_user_reach",
-    "deduped_corpus",
-    "dim_customer_unknown",
-    "doc_fingerprints",
-    "doc_quality",
-    "doc_sentences_udtf",
-    "dq_summary",
-    "embedding_neardup_lsh_verified",
-    "entity_resolution_clusters",
-    "events_daily_pivot",
-    "events_hourly",
-    "events_props_extract",
-    "fk_stamp_orders",
-    "inactive_customers_90d",
-    "lang_id_documents",
-    "latest_event_per_user",
-    "levenshtein_prefix_pairs",
-    "multimodal_decode",
-    # -- rows-only tail: born in r12 (image dHash + pHash near-dup; the
-    #    p=2 multi-probe SemDeDup twin; the occupancy-flagged rebuild
-    #    cycle — their slots displaced orders_rollup and
-    #    orders_by_status_month, both r8-stale, back to the r13 pool) --
-    "image_neardup_dhash",
-    "image_neardup_phash",
-    "audio_neardup_afp",
-    "video_neardup_phash",
-    "multimodal_dedup_disposition",
-    "embedding_semdedup_multiprobe",
-    "ann_index_rebuild_cycle",
-    # -- rows-only re-gates: code touched in r12 (recall panel +
-    #    occupancy tracker in write/update_ann_index rebuild every ANN
-    #    fixture; ann_index_health grew occupancy/recall columns; the
-    #    semantic dedup/join operators gained the max_cell branch; the
-    #    near-dup probe gained the exact-signature rescue) --
-    "ann_index_health_diag",
-    "embedding_semdedup_persisted_ingest",
-    "embedding_semantic_join_indexes",
-    "embedding_ivfpq_persisted_topk",
-    "embedding_ivfpq_distributed_topk",
-    "neardup_persisted_ingest",
-    # -- staleness re-gate: 5 of the 8 rows-only r7-gated queries
-    #    (wordpiece_token_stats, user_reach_sketch_rollup, and
-    #    semantic_dedup_kept — r7-gated, untouched since — yield their
-    #    slots to the audio / video / cross-modal birth-gates; they
-    #    head the r13 pool) --
-    "bpe_learned_merges",
-    "multimodal_frame_sample",
-    "rolling_7d_reach_sketch",
-    "segment_price_percentiles_approx",
-    "sequence_packing_bfd",
-]
-
-
-# Round-13 rotation: gate debt stays zero. Window = the query born
-# this round (the persisted media-fingerprint ingest) + rows-only
-# re-gates of everything the r13 reworks touched (the shared
-# Hamming-block join gained the hot-bucket cap, the equal-fingerprint
-# rescue star, and auto block-mode selection — simhash_candidates and
-# all four media wrappers ride it; the disposition additionally gained
-# the pair-safe block bump and the candidate-pair verify stage) +
-# maximal staleness refresh: the LAST 3 rows-only r7-gated queries and
-# the whole r8-gated remnant (19 oracle-bearing + 2 rows-only — the
-# oldest driver hashes in the fleet), then the alphabetical prefix of
-# the r9-gated oracle pool (19 of 31). Oracle-bearing entries first per
-# the standing front-load invariant; invariant
-# (tests/test_gate_rotation.py): any query added to the registry after
-# this list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R13 = [
-    # -- staleness re-gate: the r8 remnant, oracle-bearing (19) --
-    "orders_by_status_month",
-    "orders_rollup",
-    "orphan_events_audit",
-    "pricing_summary",
-    "quality_filter_documents",
-    "revenue_by_customer_90d",
-    "revenue_by_nation",
-    "salted_event_type_stats",
-    "segment_price_percentiles",
-    "session_stats",
-    "sessionize_events",
-    "similarity_graph_triangles",
-    "small_quantity_orders",
-    "stream_static_enrich_batch",
-    "stream_stream_within_batch",
-    "supplier_nation_volume",
-    "tfidf_top_terms",
-    "token_counts",
-    "top_orders_per_customer",
-    # -- staleness re-gate: start of the r9-gated oracle pool
-    #    (alphabetical prefix of its 31 oracle-bearing queries) --
-    "blocklist_flagged_docs",
-    "cluster_canonical_docs",
-    "corpus_kl_drift_en_de",
-    "corpus_mixture_plan",
-    "corpus_split_assignment",
-    "curation_disposition_v2",
-    "curation_v3_disposition",
-    "customer_spend_distribution",
-    "daily_events_ewma",
-    "dim_date",
-    "doc_bigram_logprob",
-    "doc_chunking",
-    "doc_length_outliers",
-    "doc_quality_score",
-    "doc_repetition",
-    "doc_trigram_logprob_interp",
-    "dpp_selective_year_revenue",
-    "dsir_importance_weights",
-    "embedding_neardup_pairs",
-    # -- rows-only tail: staleness re-gates (the 3 r7 remnants — the
-    #    oldest rows-only driver hashes — and the 2 rows-only r8
-    #    remnants, draining both pools to zero) --
-    "semantic_dedup_kept",
-    "user_reach_sketch_rollup",
-    "wordpiece_token_stats",
-    "embedding_ann_ivf",
-    "multimodal_audio_features",
-    # -- rows-only re-gates: code touched in r13 (the shared join's
-    #    max_bucket cap + rescue star + auto block mode ride
-    #    simhash_candidates and all four media wrappers; the
-    #    disposition adds the pair-safe bump + verify stage; afp_audio
-    #    quarantines odd multichannel payloads) --
-    "simhash_candidates",
-    "image_neardup_dhash",
-    "image_neardup_phash",
-    "audio_neardup_afp",
-    "video_neardup_phash",
-    "multimodal_dedup_disposition",
-    # -- born in r13: the persisted media-fingerprint ingest --
-    "media_neardup_persisted_ingest",
-]
-
-
-# Round-14 rotation: gate debt stays zero. Window = the three queries
-# born this round (the takedown lifecycle across all five persisted
-# families, the probe-skew health surface, the Bloom saturation cycle)
-# + rows-only re-gates of everything the r14 reworks touched (the
-# tombstone anti-join rides every persisted family's load path — all
-# five families' persisted-ingest/probe/health queries; the shared
-# Hamming join and all four media wrappers gained the size-aware
-# hot-set broadcast + approx_count plumbing; the disposition now
-# passes footer-derived counts) + maximal staleness refresh: the whole
-# 26-key r9-gated remnant — the oldest driver hashes in the fleet —
-# plus the alphabetical prefix of the r10-gated oracle pool (2).
-# Oracle-bearing entries first per the standing front-load invariant;
-# invariant (tests/test_gate_rotation.py): any query added to the
-# registry after this list was cut MUST be added here in the same
-# commit.
-_GATE_ROTATION_R14 = [
-    # -- staleness re-gate: the r9 remnant, oracle-bearing (22) --
-    "event_transition_matrix",
-    "events_sliding_1h_30m",
-    "gopher_quality_flags",
-    "incremental_dedup_batch",
-    "incremental_minmax_refresh",
-    "incremental_neardup_batch",
-    "langid_confusion_matrix",
-    "neardup_cluster_stats",
-    "neardup_components",
-    "ngram_containment_pairs",
-    "ngram_jaccard_pairs",
-    "order_price_exact_percentiles",
-    "order_price_recency_skyline",
-    "orders_json_roundtrip",
-    "pii_redacted",
-    "pii_scan",
-    "price_quantiles_monthly_tier",
-    "salted_join_events_customer",
-    "semantic_decontamination_flags",
-    "sql_revenue_by_customer_90d",
-    "top100_orders",
-    "volume_shipping_by_nation_pair",
-    # -- oracle-bearing re-gates: code touched in r14 (tombstone
-    #    anti-join on the bloom/decon load paths; ledger fixes) --
-    "bloom_incremental_dedup",
-    "bloom_persisted_ingest_run2",
-    "bloom_persisted_ingest_steady",
-    "decon_persisted_ingest",
-    # -- staleness re-gate: start of the r10-gated oracle pool --
-    "brand_qty_price_corr",
-    "bucketed_join_order_revenue",
-    # -- rows-only staleness re-gates: the r9 remnant's rows-only tail --
-    "curation_v4_learned_disposition",
-    "daily_user_reach_approx",
-    "embedding_ann_lsh",
-    "quality_classifier_scores",
-    # -- rows-only re-gates: code touched in r14 (size-aware hot-set
-    #    broadcast + approx_count in the shared Hamming join and every
-    #    media wrapper; tombstone anti-joins on the neardup/media/ann
-    #    load paths and the ANN search tails; skew recording in the
-    #    ingest loops; the disposition's footer-derived counts) --
-    "simhash_candidates",
-    "image_neardup_dhash",
-    "image_neardup_phash",
-    "audio_neardup_afp",
-    "video_neardup_phash",
-    "multimodal_dedup_disposition",
-    "media_neardup_persisted_ingest",
-    "neardup_persisted_ingest",
-    "embedding_ivfpq_persisted_topk",
-    "embedding_ivfpq_distributed_topk",
-    "embedding_semdedup_persisted_ingest",
-    "embedding_semdedup_multiprobe",
-    "embedding_semantic_join_indexes",
-    "ann_index_rebuild_cycle",
-    "ann_index_health_diag",
-    # -- born in r14: deletion/retraction + the two health surfaces --
-    "index_takedown_lifecycle",
-    "media_index_skew_health",
-    "bloom_saturation_cycle",
-]
-
-
-# Round-15 rotation: gate debt stays zero. Window = the two queries
-# born this round (the takedown compliance audit and the retraction-
-# aware shipped accounting) + re-gates of everything the r15 reworks
-# execute (the takedown lifecycle rewritten: kept-ledger leg +
-# threaded probes + purge-state recording; the bloom fill stats moved
-# onto the write job via df.observe, riding both persisted-ingest
-# entries and the saturation cycle; the media streaming loop records
-# the kept-ledger owner sidecar, riding the skew-health query) +
-# maximal staleness refresh: the ENTIRE 41-key r10-gated remnant — the
-# oldest driver hashes in the fleet — plus the alphabetical prefix of
-# the r11-gated oracle pool (2). Oracle-bearing entries first per the
-# standing front-load invariant; invariant
-# (tests/test_gate_rotation.py): any query added to the registry after
-# this list was cut MUST be added here in the same commit.
-_GATE_ROTATION_R15 = [
-    # -- staleness re-gate: the r10 remnant, oracle-bearing (39) --
-    "curation_v5_shipped_accounting",
-    "customer_order_statuses",
-    "daily_event_anomaly",
-    "doc_tokens_outer_explode",
-    "doc_unigram_logprob",
-    "doc_unigram_logprob_headtail",
-    "documents_jsonl_robust_scan",
-    "embedding_stats_by_label",
-    "event_type_audience_overlap",
-    "event_type_bag_ops",
-    "events_cube",
-    "events_gapfill_ffill",
-    "events_grouping_sets",
-    "events_key_skew_report",
-    "events_metrics_unpivot",
-    "forecast_revenue_change",
-    "important_part_value",
-    "incremental_revenue_refresh",
-    "latest_event_per_user_maxby",
-    "monthly_cohort_retention",
-    "nation_customer_supplier_full",
-    "nation_market_share",
-    "order_price_histogram",
-    "order_quartiles_by_segment",
-    "orders_column_profile",
-    "orders_integrity_checksum",
-    "orders_variant_extract",
-    "orders_year_status_pivot",
-    "sequence_packing",
-    "sequence_packing_stats",
-    "source_dedup_leakage",
-    "source_token_entropy",
-    "span_trimmed_corpus",
-    "stratified_sample_documents",
-    "temperature_mixture_plan",
-    "tfidf_cosine_pairs_blocked",
-    "token_budget_sample_docs",
-    "training_corpus_disposition",
-    "weighted_doc_sample",
-    # -- born in r15, oracle-bearing: the retraction-aware shipped
-    #    accounting (the production shipped_retraction_accounting
-    #    surface under a deterministic pseudo-takedown rule) --
-    "curation_v5_retraction_accounting",
-    # -- oracle-bearing re-gates: code touched in r15 (bloom fill
-    #    stats observed on the write job — no parquet re-read) --
-    "bloom_persisted_ingest_run2",
-    "bloom_persisted_ingest_steady",
-    # -- staleness re-gate: start of the r11-gated oracle pool --
-    "active_buyers_intersect",
-    "bm25_doc_search",
-    # -- rows-only staleness re-gates: the r10 remnant's rows-only tail --
-    "embedding_pq_topk",
-    "minhash_lsh_candidates",
-    # -- rows-only: born in r15 (compliance audit) + re-gates of code
-    #    touched in r15 (lifecycle rewritten with the kept-ledger leg +
-    #    threaded probes; saturation cycle rides the observed fill
-    #    stats + retained-ledger rebuild; skew health rides the media
-    #    loop's owner-sidecar write) --
-    "takedown_audit",
-    "index_takedown_lifecycle",
-    "bloom_saturation_cycle",
-    "media_index_skew_health",
-]
-
-
-def _ordered_names() -> list[str]:
-    rot = [n for n in _GATE_ROTATION_R15 if n in _REGISTRY]
-    rest = [n for n in _REGISTRY if n not in set(rot)]
-    return rot + rest
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _REGISTRY[name].builder for name in _ordered_names()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name].oracle
-        for name in _ordered_names()
-        if _REGISTRY[name].oracle is not None
-    }
 
 
 # ==========================================================================
@@ -8998,15 +8199,20 @@ def _er_candidate_pairs(d: DataFrame, cap: int = _ER_BLOCK_CAP) -> DataFrame:
     caller's exact distance filter). Deterministic, so oracle-stable:
     the strict value comparison at every test SF proves the candidate
     set unchanged there; at corpus scale a collision is a recall
-    perturbation of the same order as the canopy heuristic itself."""
+    perturbation of the same order as the canopy heuristic itself.
+    ``xxhash64`` skips null inputs, so (NULL, 'x', g) and ('x', NULL, g)
+    would hash to one block; rows with a null ``lang`` or ``source`` are
+    dropped before the hash, as the oracle's equi-join drops them."""
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length("pfx") - 3, F.lit(1))),
             lambda i: F.substring(F.col("pfx"), i, F.lit(4)),
         )
     )
-    gr = d.select("doc_id", "lang", "source", F.explode(grams).alias("gram")).select(
-        "doc_id", F.xxhash64("lang", "source", "gram").alias("blk")
+    gr = (
+        d.filter(F.col("lang").isNotNull() & F.col("source").isNotNull())
+        .select("doc_id", "lang", "source", F.explode(grams).alias("gram"))
+        .select("doc_id", F.xxhash64("lang", "source", "gram").alias("blk"))
     )
     ok = (
         gr.groupBy("blk")

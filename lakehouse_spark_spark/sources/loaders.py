@@ -176,10 +176,6 @@ def parallelize_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     heavier per-row work it unlocks; operators whose first step is
     already a shuffle (explode + groupBy) gain only the pre-shuffle
     expression work and may skip this."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_TP"):  # A/B kill switch for bench experiments
-        return df
     target = min_parts or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

@@ -47,13 +47,16 @@ def test_block_cap_drops_hot_grams(spark):
     """A gram whose posting list exceeds the cap contributes NO
     candidates: 120 docs sharing one hot prefix produce zero pairs
     through that gram (120 > cap=50), while two docs sharing a rare
-    prefix still pair."""
+    prefix still pair. ``xxhash64`` skips nulls, so (NULL, 'x', g) and
+    ('x', NULL, g) hash alike; like the oracle's equi-join, they must
+    not pair."""
     from pyspark.sql import functions as F
 
     from lakehouse_spark_spark.plans.queries import _er_candidate_pairs
 
     rows = [(i, "en", "cc", "hotprefixhotprefix") for i in range(120)]
     rows += [(200, "en", "cc", "rareuniqueprefix"), (201, "en", "cc", "rareuniqueprefix")]
+    rows += [(300, None, "x", "abcd"), (301, "x", None, "abcd")]
     d = spark.createDataFrame(
         rows, "doc_id BIGINT, lang STRING, source STRING, pfx STRING"
     ).select("doc_id", "lang", "source", F.col("pfx"))

@@ -32,4 +32,5 @@ def test_entry_smoke(spark):
 
     df = e.entry(spark)
     assert df.count() > 0
-    assert set(e.oracle_sql()) <= set(e.queries())
+    assert set(e.queries()) == set(registry())
+    assert set(e.oracle_sql()) == {n for n, q in registry().items() if q.oracle}
