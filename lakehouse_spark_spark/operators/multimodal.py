@@ -697,9 +697,7 @@ def image_neardup_dhash(
     media: DataFrame,
     max_hamming: int = 3,
     blocks: int = 4,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
 ) -> DataFrame:
     """Image near-dup candidates: dHash fingerprints joined by the
     pigeonhole Hamming-block equi-join (full recall for
@@ -708,16 +706,12 @@ def image_neardup_dhash(
     fingerprint) are excluded rather than colliding at a sentinel.
     Returns (id_a, id_b, hamming), id_a < id_b. Scale: the block join
     is O(sum of per-(block, value) bucket sizes) — near-identical
-    images share blocks, unrelated scenes don't; never all-pairs.
-    ``block_pairs=None`` auto-selects the large-corpus pair join past
-    the measured ~10^6-fingerprint crossover (pass ``approx_count`` to
-    skip the plan-time count — for this wrapper that count re-decodes
-    nothing, the fingerprint table is checkpointed first); real
+    images share blocks, unrelated scenes don't; never all-pairs. Real
     corpora are SKEWED (solid-color frames hash identically by the
     million), so set ``max_bucket`` to bound any one (block, value)
     bucket — exact-duplicate clusters above the cap still dedup
-    through the equal-fingerprint rescue star. All three knobs are the
-    shared join's (operators/neardup.simhash_candidates)."""
+    through the equal-fingerprint rescue star. ``max_bucket`` is the
+    shared join's knob (operators/neardup.simhash_candidates)."""
     from lakehouse_spark_spark.operators.neardup import simhash_candidates
 
     fp = (
@@ -726,8 +720,7 @@ def image_neardup_dhash(
         .withColumnRenamed("dhash", "simhash")
     )
     return simhash_candidates(
-        fp, "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-        max_bucket=max_bucket, approx_count=approx_count,
+        fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
     )
 
 
@@ -864,9 +857,7 @@ def image_neardup_phash(
     media: DataFrame,
     max_hamming: int = 10,
     blocks: int = 8,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
     verify_dhash_max_hamming: int | None = None,
 ) -> DataFrame:
     """Resize-robust image near-dup: pHash fingerprints through the
@@ -882,12 +873,12 @@ def image_neardup_phash(
     ``blocks = max_hamming + 1`` (11) restores the full guarantee but
     its 5-bit blocks collide ~30% of ALL pairs — the candidate join
     degrades toward all-pairs on a large corpus (review catch). Returns
-    (id_a, id_b, hamming), id_a < id_b. ``block_pairs``/``max_bucket``/
-    ``approx_count`` are the shared join's scale knobs — see
-    :func:`image_neardup_dhash` (same semantics; letterbox bars and
-    solid-color stills are pHash's hot-bucket mode too).
+    (id_a, id_b, hamming), id_a < id_b. ``max_bucket`` is the shared
+    join's hot-bucket guard — see :func:`image_neardup_dhash` (same
+    semantics; letterbox bars and solid-color stills are pHash's
+    hot-bucket mode too).
 
-    ``verify_dhash_max_hamming`` (r13) adds the text family's own
+    ``verify_dhash_max_hamming`` adds the text family's own
     candidates→verify shape: pHash's single-signal false-pair mode is
     phase-adjacent scenes whose low-frequency DCT SIGNS collide — but
     those scenes' pixel GRADIENTS differ, so a dHash check on the
@@ -909,8 +900,7 @@ def image_neardup_phash(
             .withColumnRenamed("phash", "simhash")
         )
         return simhash_candidates(
-            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-            max_bucket=max_bucket, approx_count=approx_count,
+            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
         )
     hashes = (
         image_hashes(media)
@@ -919,8 +909,7 @@ def image_neardup_phash(
     )
     cand = simhash_candidates(
         hashes.select("doc_id", F.col("phash").alias("simhash")),
-        "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-        max_bucket=max_bucket, approx_count=approx_count,
+        "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
     )
     d_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("dhash").alias("__dh_a"))
     d_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("dhash").alias("__dh_b"))
@@ -1101,9 +1090,7 @@ def audio_neardup_afp(
     media: DataFrame,
     max_hamming: int = 6,
     blocks: int = 8,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
     verify_alt_max_hamming: int | None = None,
 ) -> DataFrame:
     """Audio near-dup candidates: acoustic fingerprints joined by the
@@ -1114,12 +1101,12 @@ def audio_neardup_afp(
     candidate join with p ~= 1-(255/256)^8 ~= 3%, kept bounded exactly
     as for the image joins. Undecodable payloads (NULL fingerprint) are
     excluded rather than colliding at a sentinel. Returns
-    (id_a, id_b, hamming), id_a < id_b. ``block_pairs``/``max_bucket``/
-    ``approx_count`` are the shared join's scale knobs — see
-    :func:`image_neardup_dhash` (same semantics; SILENCE is audio's
-    hot-bucket mode — every silent clip fingerprints identically).
+    (id_a, id_b, hamming), id_a < id_b. ``max_bucket`` is the shared
+    join's hot-bucket guard — see :func:`image_neardup_dhash` (same
+    semantics; SILENCE is audio's hot-bucket mode — every silent clip
+    fingerprints identically).
 
-    ``verify_alt_max_hamming`` (r13) adds the candidates→verify shape:
+    ``verify_alt_max_hamming`` adds the candidates→verify shape:
     a SECOND fingerprint geometry (4 frames × 17 bands — different
     time/frequency resolution, decorrelated near-ties) checked on the
     candidate pairs only. A true re-levelled/dithered copy agrees in
@@ -1136,8 +1123,7 @@ def audio_neardup_afp(
             .withColumnRenamed("afp", "simhash")
         )
         return simhash_candidates(
-            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-            max_bucket=max_bucket, approx_count=approx_count,
+            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
         )
     hashes = (
         audio_hashes(media)
@@ -1146,8 +1132,7 @@ def audio_neardup_afp(
     )
     cand = simhash_candidates(
         hashes.select("doc_id", F.col("afp").alias("simhash")),
-        "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-        max_bucket=max_bucket, approx_count=approx_count,
+        "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
     )
     a_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("afp_alt").alias("__alt_a"))
     a_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("afp_alt").alias("__alt_b"))
@@ -1180,16 +1165,25 @@ def video_frame_fingerprints(
     media-fingerprint index (operators/mediaindex — a video index IS a
     media_fp index over these composite-keyed frame fingerprints, so
     fold/probe/compaction machinery is reused, not re-implemented).
-    Requires frame_idx < stride and clip_id < 2^63/stride.
+    Requires frame_idx < stride and clip_id < 2^63/stride. A frame at
+    or past the stride fails the query: its key would alias a frame of
+    the next clip and the frame vote would pair unrelated clips.
     Undecodable frames are dropped (NULL quarantine)."""
     frames = sample_frames(media, every_n=every_n)
-    return (
-        phash_images(
-            frames.select(
-                (F.col("doc_id") * F.lit(frame_key_stride) + F.col("frame_idx")).alias("doc_id"),
-                F.col("frame").alias("media"),
+    key = F.when(
+        F.col("frame_idx") < F.lit(frame_key_stride),
+        F.col("doc_id") * F.lit(frame_key_stride) + F.col("frame_idx"),
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"video_frame_fingerprints: frame_idx %d of clip %d >= frame_key_stride "
+                f"{frame_key_stride}; raise the stride",
+                F.col("frame_idx"), F.col("doc_id"),
             )
         )
+    )
+    return (
+        phash_images(frames.select(key.alias("doc_id"), F.col("frame").alias("media")))
         .filter(F.col("phash").isNotNull())
         .withColumnRenamed("phash", "fp")
     )
@@ -1202,9 +1196,7 @@ def video_neardup_phash(
     blocks: int = 8,
     min_matched_frames: int = 3,
     frame_key_stride: int = 1_000_000,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
 ) -> DataFrame:
     """Video near-dup candidates: sample every Nth frame, pHash each
     decoded frame, join frames by the pigeonhole Hamming-block
@@ -1229,22 +1221,19 @@ def video_neardup_phash(
     candidate pairs. ``every_n`` is the cost knob: cost scales with
     sampled frames, recall degrades gracefully (a true near-dup clip
     pair loses votes, not its best frames).
-    ``block_pairs``/``max_bucket``/``approx_count`` are the shared
-    join's scale knobs over the FRAME population (approx_count = the
-    expected sampled-frame count, not the clip count); solid-color /
-    black frames are video's hot-bucket mode — a million title-card
-    frames fingerprint identically, and without ``max_bucket`` the
-    frame join materializes that cluster's square. The equal-
-    fingerprint rescue star keeps exact-frame dups flowing into the
-    vote."""
+    ``max_bucket`` is the shared join's hot-bucket guard over the FRAME
+    population; solid-color / black frames are video's hot-bucket
+    mode — a million title-card frames fingerprint identically, and
+    without ``max_bucket`` the frame join materializes that cluster's
+    square. The equal-fingerprint rescue star keeps exact-frame dups
+    flowing into the vote."""
     from lakehouse_spark_spark.operators.neardup import simhash_candidates
 
     fp = video_frame_fingerprints(
         media, every_n=every_n, frame_key_stride=frame_key_stride
     ).withColumnRenamed("fp", "simhash")
     cand = simhash_candidates(
-        fp, "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=block_pairs,
-        max_bucket=max_bucket, approx_count=approx_count,
+        fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
     )
     pairs = cand.select(
         F.expr(f"id_a DIV {frame_key_stride}").alias("clip_a"),
@@ -1290,10 +1279,7 @@ def multimodal_dedup_disposition(
     video_blocks: int = 8,
     video_min_matched_frames: int = 3,
     video_every_n: int = 4,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
-    video_approx_frame_count: int | None = None,
     min_modalities: int = 1,
     verify: bool = False,
     image_verify_dhash_max_hamming: int = 8,
@@ -1310,28 +1296,15 @@ def multimodal_dedup_disposition(
     fixpoint independent of iteration order.
 
     Scale: each modality's edges are its existing bounded candidate
-    join (``block_pairs`` threads through for the large-corpus
-    regime — None auto-selects per modality past the ~10^6 crossover;
-    ``max_bucket`` is the shared hot-bucket guard, essential on real
-    media where solid-color frames / silence / boilerplate text hash
-    identically by the million — exact-dup clusters above the cap
+    join (``max_bucket`` is the shared hot-bucket guard, essential on
+    real media where solid-color frames / silence / boilerplate text
+    hash identically by the million — exact-dup clusters above the cap
     still dedup through the rescue star); the union is
     edge-count-sized; connected components is the pointer-jumping
     loop (O(E) per round, rounds ~ log diameter — dup clusters are
     shallow). No stage sees an asset×asset product.
 
-    Pair-join recall guard (r13): when ``block_pairs=True`` is forced,
-    any modality whose radius the SINGLE-block join covered completely
-    (max_hamming <= blocks - 1) but the pair join would not
-    (> blocks - 2) gets its block count bumped to ``max_hamming + 2``
-    — with the defaults that is the TEXT modality (radius 3, 4 blocks
-    → bumped to 5 blocks), which would otherwise silently drop from
-    pigeonhole-complete to lossy. Both geometries are complete at the
-    radius, so the candidate set after the exact Hamming filter is
-    identical. Auto mode never needs the bump (it only picks pairs
-    when the radius is pair-complete).
-
-    ``verify=True`` (r13) runs the candidates→verify second signal on
+    ``verify=True`` runs the candidates→verify second signal on
     the two modalities with a single-signal false-pair mode: image
     pHash edges additionally require dHash agreement
     (``image_verify_dhash_max_hamming``), audio afp edges a
@@ -1345,48 +1318,23 @@ def multimodal_dedup_disposition(
     twins still caught, while ``min_modalities=2`` would kill the
     false merges AND every planted twin (each duplicates exactly one
     modality). Video already has its own verify (the frame vote);
-    text near-dup callers wanting one use verify_pairs_jaccard.
-
-    ``approx_count`` (r14): the ASSET count, if the caller knows it
-    cheaply (parquet footer rows — sources/sinks.parquet_footer_rows —
-    or catalog stats). Auto block-mode selection then never runs a
-    plan-time ``count()`` against the text/image/audio fingerprint
-    frames — which would materialize each modality's DECODE pass just
-    to pick a join shape (the r13 thread-pool fix treated the
-    serialization symptom; this removes the count). Fingerprint counts
-    are <= the asset count, so the estimate only errs toward the pair
-    join near the crossover — both modes are output-identical (pinned
-    by tests). Video's fingerprint population is FRAMES, not assets —
-    pass ``video_approx_frame_count`` (assets x expected sampled
-    frames) separately, else video alone keeps the counting fallback
-    (overlapped by the builder threads)."""
+    text near-dup callers wanting one use verify_pairs_jaccard."""
     from lakehouse_spark_spark.operators.graph import connected_components
     from lakehouse_spark_spark.operators.neardup import simhash, simhash_candidates
-
-    def _pair_safe(blocks: int, mh: int) -> int:
-        # bump ONLY the forced-pairs single-complete/pairs-incomplete
-        # window; auto (None) and single mode keep the caller geometry
-        if block_pairs is True and blocks - 2 < mh <= blocks - 1:
-            return mh + 2
-        return blocks
 
     def _text_edges():
         fp = simhash(assets.select(F.col(id_col), F.col(text_col)), id_col, text_col)
         e = simhash_candidates(
-            fp, id_col, max_hamming=text_max_hamming,
-            blocks=_pair_safe(text_blocks, text_max_hamming),
-            block_pairs=block_pairs, max_bucket=max_bucket,
-            approx_count=approx_count,
+            fp, id_col, max_hamming=text_max_hamming, blocks=text_blocks,
+            max_bucket=max_bucket,
         )
         return e.select("id_a", "id_b", F.lit("text").alias("modality"))
 
     def _image_edges():
         med = assets.select(F.col(id_col).alias("doc_id"), F.col(image_col).alias("media"))
         e = image_neardup_phash(
-            med, max_hamming=image_max_hamming,
-            blocks=_pair_safe(image_blocks, image_max_hamming),
-            block_pairs=block_pairs, max_bucket=max_bucket,
-            approx_count=approx_count,
+            med, max_hamming=image_max_hamming, blocks=image_blocks,
+            max_bucket=max_bucket,
             verify_dhash_max_hamming=(image_verify_dhash_max_hamming if verify else None),
         )
         return e.select("id_a", "id_b", F.lit("image").alias("modality"))
@@ -1394,10 +1342,8 @@ def multimodal_dedup_disposition(
     def _audio_edges():
         med = assets.select(F.col(id_col).alias("doc_id"), F.col(audio_col).alias("media"))
         e = audio_neardup_afp(
-            med, max_hamming=audio_max_hamming,
-            blocks=_pair_safe(audio_blocks, audio_max_hamming),
-            block_pairs=block_pairs, max_bucket=max_bucket,
-            approx_count=approx_count,
+            med, max_hamming=audio_max_hamming, blocks=audio_blocks,
+            max_bucket=max_bucket,
             verify_alt_max_hamming=(audio_verify_alt_max_hamming if verify else None),
         )
         return e.select("id_a", "id_b", F.lit("audio").alias("modality"))
@@ -1408,10 +1354,9 @@ def multimodal_dedup_disposition(
             med,
             every_n=video_every_n,
             max_hamming=video_max_hamming,
-            blocks=_pair_safe(video_blocks, video_max_hamming),
+            blocks=video_blocks,
             min_matched_frames=video_min_matched_frames,
-            block_pairs=block_pairs, max_bucket=max_bucket,
-            approx_count=video_approx_frame_count,
+            max_bucket=max_bucket,
         )
         return e.select("id_a", "id_b", F.lit("video").alias("modality"))
 
@@ -1427,15 +1372,13 @@ def multimodal_dedup_disposition(
         raise ValueError("multimodal_dedup_disposition: supply at least one modality column")
     if len(builders) > 1:
         # build edge frames CONCURRENTLY (one thread per modality):
-        # auto block-mode selection runs a plan-time count that
-        # materializes the modality's fingerprint checkpoint, and on
-        # the main thread four such counts would SERIALIZE the four
-        # decode passes (measured 9.3 s vs 5.0 s at the sf0.1 gated
-        # fixture). Spark sessions are thread-safe and jobs from
-        # separate driver threads schedule concurrently, so the four
-        # materializations overlap exactly as the single-job exec DAG
-        # overlapped them before auto mode existed. Result order stays
-        # the fixed modality order — determinism is unaffected.
+        # the builders launch no Spark job, but each spends driver time
+        # constructing and analyzing its plan (decode UDFs, block
+        # explode, hot-bucket guard, verify joins). The pool overlaps
+        # that time: at the sf0.01 gated fixture on 4 vCPUs the four
+        # warm builders took 0.8-1.0 s together with it and 1.5-2.1 s
+        # one after another. Result order stays the fixed modality
+        # order — determinism is unaffected.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(builders)) as pool:

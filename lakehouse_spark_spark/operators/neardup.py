@@ -74,7 +74,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
-    materialize: bool = True,
     hash_shingles: bool = True,
     allow_bruteforce: bool = False,
     max_rows_uncapped: int = 1_000_000,
@@ -93,10 +92,10 @@ def ngram_jaccard_pairs(
     identical across engines despite last-ulp float noise.)
 
     The (id, shingle) relation feeds four plan branches (df cap, sizes,
-    both self-join sides); ``materialize`` (default) lazily
-    localCheckpoints it so normalization+shingling runs once instead of
-    per branch — the in-plan stand-in for persisting the shingle table
-    between pipeline stages at scale.
+    both self-join sides); it is lazily localCheckpointed so
+    normalization+shingling runs once instead of per branch — the
+    in-plan stand-in for persisting the shingle table between pipeline
+    stages at scale.
 
     ``hash_shingles`` (default) hashes each shingle at MATERIALIZATION
     (xxhash64 over the token slice, inside word_shingles' transform —
@@ -113,8 +112,7 @@ def ngram_jaccard_pairs(
 
         guard_bruteforce(df, max_rows_uncapped, "ngram_jaccard_pairs (uncapped)", allow_bruteforce)
     sh = word_shingles(df, id_col, text_col, n, hashed=hash_shingles)
-    if materialize:
-        sh = sh.localCheckpoint(eager=False)
+    sh = sh.localCheckpoint(eager=False)
     if max_df is not None:
         hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > max_df)
         sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
@@ -177,7 +175,7 @@ def band_rows(signatures: DataFrame, id_col: str, bands: int = 16, num_hashes: i
 
 
 def minhash_lsh_candidates(
-    signatures: DataFrame, id_col: str, bands: int = 16, num_hashes: int = 64, materialize: bool = True
+    signatures: DataFrame, id_col: str, bands: int = 16, num_hashes: int = 64
 ) -> DataFrame:
     """LSH banding: split each signature into ``bands`` bands, hash each
     band, equi-join on (band, band_hash) → candidate pairs with their
@@ -186,16 +184,13 @@ def minhash_lsh_candidates(
     Shuffle discipline (the 100 TB part): the band join and the
     pair-dedup carry ONLY (id, band, band_hash) — 24 bytes/row — never
     the ~0.5 KB signature arrays; signatures are re-attached to the
-    deduped pairs afterwards. ``materialize`` (default) lazily
-    localCheckpoints the signature table so the three plan references
-    (band explode + two re-attach joins) compute the expensive
-    shingle→minhash pass exactly once — the single-query stand-in for
-    what a production pipeline does by persisting the signature table
-    between stages (:func:`write_neardup_index`). Pass False when the
-    caller's ``signatures`` is already a cheap scan of a materialized
-    table."""
-    if materialize:
-        signatures = signatures.localCheckpoint(eager=False)
+    deduped pairs afterwards. The signature table is lazily
+    localCheckpointed so the three plan references (band explode + two
+    re-attach joins) compute the expensive shingle→minhash pass exactly
+    once — the single-query stand-in for what a production pipeline
+    does by persisting the signature table between stages
+    (:func:`write_neardup_index`)."""
+    signatures = signatures.localCheckpoint(eager=False)
     banded = band_rows(signatures, id_col, bands, num_hashes)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
@@ -242,23 +237,14 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(F.col(id_col), fingerprint.alias("simhash"))
 
 
-# Measured single-vs-pairs crossover (tools/scale_stress_hamming.py,
-# r12: 2.02M uniform fingerprints ran 53.7 s single / 14.35 s pairs and
-# the gap widens quadratically; at 10^5-10^6 single wins on its narrower
-# explode). Auto mode (block_pairs=None) switches at this count.
-BLOCK_PAIRS_CROSSOVER = 1_000_000
-
-# Hot-set broadcast ceiling (r14; r13 ADVICE): the hot-bucket guard's
-# anti-join side is bounded by n_fp * keys_per_fp / max_bucket rows —
-# tiny at gated scale, but at the 10^9-fingerprint scale the knob
-# targets it can reach tens of millions of (block, value) keys, past
-# driver broadcast comfort. When a fingerprint count is available
-# (approx_count, the auto-mode count, or a persisted index's footer
-# rows) the hint is SIZE-AWARE: broadcast below this many bound keys,
-# unhinted above it (AQE picks the strategy from the real aggregated
-# size at runtime). 4M keys x ~24 B/row ≈ 100 MB. With no count
-# available the one-shot join keeps the broadcast hint — its hot set is
-# tiny by construction at any scale auto mode wouldn't have counted.
+# Hot-set broadcast ceiling: the hot-bucket guard's anti-join side is
+# bounded by n_fp * keys_per_fp / max_bucket rows — tiny at gated scale,
+# but at 10^9 fingerprints it can reach tens of millions of (block,
+# value) keys, past driver broadcast comfort. The persisted-index probes
+# know n_fp from parquet footer rows, so their hint is SIZE-AWARE:
+# broadcast below this many bound keys, unhinted above it (AQE picks the
+# strategy from the real aggregated size at runtime). 4M keys x ~24
+# B/row ≈ 100 MB.
 HOT_BROADCAST_CAP_KEYS = 4_000_000
 
 
@@ -284,49 +270,12 @@ def fingerprint_block_rows(
     return df.select(*cols, F.posexplode(F.array(*bl)).alias("block", "block_val"))
 
 
-def fingerprint_pair_block_rows(
-    df: DataFrame, id_col: str, fp_col: str, blocks: int, keep_fp: bool = False
-) -> DataFrame:
-    """(id, block, block_val, block_val2) Manku pair-key rows — one row
-    per PAIR of blocks (C(blocks,2) per fingerprint), the large-corpus
-    candidate key (value space squared; complete for
-    max_hamming <= blocks - 2). Shared by :func:`simhash_candidates`'s
-    ``block_pairs`` mode and the persisted media-fingerprint index's
-    pair geometry (operators/mediaindex.write_media_fp_index
-    ``pair_blocks=True``), so index candidates stay byte-identical to
-    in-plan ones in BOTH geometries."""
-    width = 64 // blocks
-    mask = (1 << width) - 1
-    bl = [F.shiftright(fp_col, width * i).bitwiseAND(F.lit(mask)) for i in range(blocks)]
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(i * blocks + j).alias("block"),
-                bl[i].alias("va"),
-                bl[j].alias("vb"),
-            )
-            for i in range(blocks)
-            for j in range(i + 1, blocks)
-        ]
-    )
-    cols = [F.col(id_col)] + ([F.col(fp_col)] if keep_fp else [])
-    return df.select(*cols, F.explode(keys).alias("k")).select(
-        *([id_col] + ([fp_col] if keep_fp else [])),
-        F.col("k.block").alias("block"),
-        F.col("k.va").alias("block_val"),
-        F.col("k.vb").alias("block_val2"),
-    )
-
-
 def simhash_candidates(
     sim: DataFrame,
     id_col: str,
     max_hamming: int = 3,
     blocks: int = 4,
-    materialize: bool = True,
-    block_pairs: bool | None = None,
     max_bucket: int | None = None,
-    approx_count: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates by the pigeonhole principle: split the 64-bit
     fingerprint into ``blocks`` equal-width blocks; any pair with
@@ -335,46 +284,20 @@ def simhash_candidates(
 
     RECALL GUARANTEE: complete only for max_hamming <= blocks - 1;
     pairs at wider distances surface only if they happen to share a
-    block. Size ``blocks = max_hamming + 1`` for full recall.
-    ``materialize`` localCheckpoints the fingerprint table so the
-    64-column vote aggregation inside ``simhash`` runs once, not once
-    per self-join side.
+    block. Size ``blocks = max_hamming + 1`` for full recall. The
+    fingerprint table is lazily localCheckpointed so the vote
+    aggregation inside ``simhash`` (or a media decode pass) runs once,
+    not once per self-join side. The plan launches no action of its
+    own: the join's shape does not depend on the corpus size.
 
-    ``block_pairs=True`` is the LARGE-CORPUS join (the multi-table
-    shape of Manku/Jain/Sarma, "Detecting Near-Duplicates for Web
-    Crawling", WWW 2007 — public): join on every PAIR of blocks
-    agreeing instead of any single block. At radius <= blocks - 2 a
-    near-dup pair flips at most max_hamming blocks, leaving >= 2
-    intact, and SOME intact pair is one of the C(blocks, 2) join keys
-    — so the filtered output is IDENTICAL to the single-block join
-    (pinned by test), while random collisions need 2·width matching
-    bits instead of width. The single-block join's bucket-value space
-    is only 2^width (256 at blocks=8): bucket sizes grow LINEARLY with
-    the corpus and the join output grows ~n²·blocks/2^width —
-    quadratic with a small constant, fine at 10^5-10^6 fingerprints,
-    a scale-killer at web scale. Pairing squares the value space
-    (2^16 at blocks=8): ~n²·C(blocks,2)/2^(2·width) — the same
-    asymptotic with a 2^width/(blocks-1)/2 ≈ 18x smaller constant at
-    blocks=8, bought for a C(blocks,2)/blocks ≈ 3.5x wider explode
-    (measured crossover in tools/scale_stress_hamming.py). RECALL:
-    complete only for max_hamming <= blocks - 2; the radius-(blocks-1)
-    tail the single-block join still guarantees is lost.
+    The single-block join's bucket-value space is only 2^width (256 at
+    blocks=8), so its output grows ~n²·blocks/2^width — fine at the
+    10^5-10^6 fingerprints an in-plan join sees. A corpus past that
+    lives in the persisted media-fingerprint index, whose
+    ``pair_blocks=True`` geometry squares the value space
+    (operators/mediaindex.write_media_fp_index).
 
-    ``block_pairs=None`` (the default, r13) picks the mode from the
-    fingerprint count at plan time: pairs when the corpus exceeds
-    ``BLOCK_PAIRS_CROSSOVER`` (the measured ~10^6 crossover) AND the
-    radius keeps the pair join complete (max_hamming <= blocks - 2);
-    single-block otherwise. The count is ``approx_count`` when the
-    caller passes one (any cheap upstream estimate — row counts from a
-    manifest, a partition-size heuristic), else one ``sim.count()``
-    against the materialized fingerprint table the join scans anyway.
-    Explicit True/False always wins; explicit True at
-    blocks-2 < max_hamming <= blocks-1 — a radius the SINGLE join
-    covers completely but the pair join does not — warns loudly about
-    the silent recall regression (size blocks >= max_hamming + 2 to
-    keep the guarantee in pairs mode).
-
-    ``max_bucket`` (r13) is the hot-bucket guard the MinHash family's
+    ``max_bucket`` is the hot-bucket guard the MinHash family's
     ``max_df`` is for shingles: real media corpora are pathologically
     skewed (solid-color/black frames, silence, letterbox bars hash
     IDENTICALLY by the million), one (block, value) bucket holds the
@@ -388,56 +311,23 @@ def simhash_candidates(
     cluster minimum (O(cluster) star rows, never the square), so the
     flat-frame cluster the cap suppresses still dedups. Candidate
     output is bounded by n·blocks·max_bucket + rescue rows."""
-    if materialize:
-        sim = sim.localCheckpoint(eager=False)
-    n_fp = approx_count
-    if block_pairs is None:
-        # NOTE (r13 ADVICE): with materialize=False and no approx_count
-        # this count() replays the ENTIRE upstream plan (for media
-        # wrappers, a full decode pass) once before the join — pass
-        # approx_count (any cheap upstream estimate: parquet footer
-        # rows, an asset-table count, a manifest) or keep materialize
-        # on so the count reads the checkpoint the join needs anyway.
-        if n_fp is None:
-            n_fp = sim.count()
-        block_pairs = max_hamming <= blocks - 2 and n_fp > BLOCK_PAIRS_CROSSOVER
-    elif block_pairs and blocks - 2 < max_hamming <= blocks - 1:
-        import warnings
-
-        warnings.warn(
-            f"simhash_candidates(block_pairs=True, max_hamming={max_hamming}, "
-            f"blocks={blocks}): the pair join is complete only to blocks-2="
-            f"{blocks - 2}; the single-block join would cover this radius "
-            f"completely — true pairs at distance {blocks - 1} may be missed. "
-            f"Use blocks >= {max_hamming + 2} to keep the guarantee.",
-            stacklevel=2,
-        )
-    if block_pairs:
-        exploded = fingerprint_pair_block_rows(sim, id_col, "simhash", blocks, keep_fp=True)
-        join_on = ["block", "block_val", "block_val2"]
-    else:
-        exploded = fingerprint_block_rows(sim, id_col, "simhash", blocks, keep_fp=True)
-        join_on = ["block", "block_val"]
+    sim = sim.localCheckpoint(eager=False)
+    exploded = fingerprint_block_rows(sim, id_col, "simhash", blocks, keep_fp=True)
+    join_on = ["block", "block_val"]
     if max_bucket is not None:
         # hot-bucket guard: count DISTINCT docs per join key (a doc can
         # contribute one row per key by construction, but distinct is
         # the future-proof contract the minhash probe cap settled on),
         # drop buckets above the cap from BOTH join sides at once. The
-        # hot set is bounded by n·keys_per_fp/max_bucket rows; the
-        # broadcast hint is size-aware when a count is available
-        # (HOT_BROADCAST_CAP_KEYS — r13 ADVICE: an unconditional
-        # broadcast grows with the corpus at the 10^9 scale the knob
-        # targets).
+        # hot set is bounded by n·blocks/max_bucket rows, tiny at the
+        # scale an in-plan join runs, so it is broadcast.
         hot = (
             exploded.groupBy(*join_on)
             .agg(F.count_distinct(id_col).alias("__df"))
             .filter(F.col("__df") > max_bucket)
             .select(*join_on)
         )
-        keys_per_fp = blocks * (blocks - 1) // 2 if block_pairs else blocks
-        exploded = exploded.join(
-            _hot_hint(hot, n_fp, keys_per_fp, max_bucket), join_on, "left_anti"
-        )
+        exploded = exploded.join(F.broadcast(hot), join_on, "left_anti")
     a = exploded.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), *join_on)
     b = exploded.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), *join_on)
     pairs = a.join(b, join_on).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b", "sim_a", "sim_b")

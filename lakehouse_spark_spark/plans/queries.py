@@ -2155,23 +2155,14 @@ def _disposition_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_dedup_disposition",
     oracle=None,  # perceptual/acoustic/simhash-function-specific
-    doc="cross-modal dedup: one keep/drop per asset from the union of text/image/audio/video near-dup edges (rotating planted twin modality; r13 verify stage on)",
+    doc="cross-modal dedup: one keep/drop per asset from the union of text/image/audio/video near-dup edges (rotating planted twin modality; verify stage on)",
 )
 def multimodal_dedup_disposition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_spark_spark.operators.multimodal import multimodal_dedup_disposition
 
-    # r14: auto block-mode needs a fingerprint count — derive it from
-    # the SOURCE table (one column-pruned parquet count, no decode):
-    # each sampled doc synthesizes itself + one twin, 6 frames/clip.
-    # The plan-time count() this replaces materialized each modality's
-    # decode pass (the r13 thread-pool fix overlapped them; this makes
-    # them unnecessary).
-    n_assets = 2 * _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 40 == 0).count()
     out = multimodal_dedup_disposition(
         _disposition_assets(spark, sf_dir),
         "doc_id",
-        approx_count=n_assets,
-        video_approx_frame_count=n_assets * 6,
         text_col="text",
         image_col="image",
         audio_col="audio",
@@ -2183,10 +2174,10 @@ def multimodal_dedup_disposition_q(spark: SparkSession, sf_dir: str) -> DataFram
         # scale the 16-value block space is harmless
         text_max_hamming=12,
         text_blocks=16,
-        # r13: the candidates→verify second signal on image/audio edges
+        # the candidates→verify second signal on image/audio edges
         # (dHash ∧ pHash conjunction; second afp geometry) — measured at
         # sf0.1: the 6 organic single-image phase-adjacent merges drop
-        # to 0, all 125 planted twins survive (COVERAGE.md r13 row)
+        # to 0, all 125 planted twins survive (COVERAGE.md verify row)
         verify=True,
     )
     # registry projection: the driver hashes rows as tuples, so the
@@ -7728,7 +7719,10 @@ _CURATION_V3_CTES = """
     s1 AS (SELECT doc_id, source, nrm, toks, n_tokens FROM allflags
            WHERE word_ok AND line_ok AND lang_ok AND NOT blocked),
     keepers AS (SELECT md5(nrm) AS h, MIN(doc_id) AS keep_id FROM s1 GROUP BY 1),
-    s2 AS (SELECT s1.* FROM s1
+    -- s2 and edges feed the recursive closure below: MATERIALIZED keeps
+    -- DuckDB from re-running the whole filter/shingle/join tree under
+    -- them on every recursion step (minutes instead of seconds at sf0.001)
+    s2 AS MATERIALIZED (SELECT s1.* FROM s1
            JOIN keepers ON md5(s1.nrm) = keepers.h AND s1.doc_id = keepers.keep_id),
     elig AS (SELECT doc_id, toks AS wt FROM s2 WHERE len(toks) >= 3),
     sh3 AS (SELECT DISTINCT doc_id,
@@ -7743,7 +7737,7 @@ _CURATION_V3_CTES = """
               JOIN sizes sa ON sa.doc_id = doc_a
               JOIN sizes sb ON sb.doc_id = doc_b
               WHERE ROUND(shared * 1.0 / (sa.set_size + sb.set_size - shared), 6) >= 0.8),
-    edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+    edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
               UNION ALL SELECT doc_b, doc_a FROM pairs),
     reach(node, r) AS (
       SELECT doc_id, doc_id FROM s2

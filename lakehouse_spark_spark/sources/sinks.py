@@ -559,8 +559,8 @@ def load_tombstones(spark, base_dir: str) -> "DataFrame | None":
 def parquet_footer_rows(path: str) -> int | None:
     """Total row count of a parquet directory from file FOOTERS alone —
     driver-side pyarrow metadata reads, no Spark job, no data pages
-    touched. The free ``approx_count`` source the persisted probes use
-    instead of a plan-time ``count()`` (r14): an index's row count is
+    touched. The persisted probes size their hot-set broadcast hint
+    from it instead of a plan-time ``count()``: an index's row count is
     sitting in its footers already. Returns None when the directory has
     no readable parquet files (callers fall back to their documented
     default)."""

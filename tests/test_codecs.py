@@ -763,32 +763,28 @@ def test_video_neardup_quarantines_and_samples(spark):
     assert got == [(1, 2, 3)]  # frames 0,2,4 sampled -> 3 exact votes
 
 
-def test_audio_neardup_block_pairs_identical(spark):
-    """r12: the large-corpus block-PAIR join, threaded through the
-    modality wrappers, returns byte-identical output to the
-    single-block join at the audio default (radius 6 = blocks - 2,
-    inside the pair guarantee)."""
-    from lakehouse_spark_spark.operators.multimodal import audio_neardup_afp, make_wav_pcm
+def test_video_frame_key_past_stride_fails_loudly(spark):
+    """A frame index at or past ``frame_key_stride`` would alias the
+    composite key of the next clip's frames, so the vote would pair
+    unrelated clips (here clip 1's frames 4-5 would take the keys of
+    clip 2's frames 0-1). The fingerprint pass refuses such a frame
+    instead of returning a false pair; with the default stride the
+    same clips share nothing."""
+    from lakehouse_spark_spark.operators.multimodal import (
+        encode_png_pixels,
+        make_framestack,
+        video_neardup_phash,
+    )
 
-    RATE = 8000
-    rows = []
-    for i in range(15):
-        s = _audio_scene(i)
-        rows.append((i, bytearray(make_wav_pcm(s, RATE))))
-        if i % 5 == 0:
-            rng = np.random.RandomState(10_000 + i)
-            twin = 0.5 * s + rng.uniform(-0.002, 0.002, size=len(s))
-            rows.append((1000 + i, bytearray(make_wav_pcm(twin, RATE))))
+    same = encode_png_pixels(_video_scene(1, 0))
+    rows = [
+        (1, bytearray(make_framestack([same] * 6))),
+        (2, bytearray(make_framestack([encode_png_pixels(_video_scene(2, f)) for f in range(6)]))),
+    ]
     media = spark.createDataFrame(rows, "doc_id bigint, media binary")
-
-    def run(pairs):
-        return sorted(
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in audio_neardup_afp(media, block_pairs=pairs).collect()
-        )
-
-    single, paired = run(False), run(True)
-    assert single == paired and {(a, b) for a, b, _ in paired} >= {(0, 1000), (5, 1005), (10, 1010)}
+    with pytest.raises(Exception, match="frame_key_stride"):
+        video_neardup_phash(media, every_n=1, frame_key_stride=4, min_matched_frames=3).collect()
+    assert video_neardup_phash(media, every_n=1, min_matched_frames=3).collect() == []
 
 
 def test_multimodal_dedup_disposition_attributes_each_modality(spark):
@@ -983,64 +979,6 @@ def test_disposition_verify_drops_false_merge_keeps_twin(spark):
     assert not on[100]["keep"] and on[100]["component"] == 0  # twin still drops
     mm = run(min_modalities=2)
     assert mm[100]["keep"]  # the min_modalities trade: the true twin survives
-
-
-def test_multimodal_disposition_pair_safe_text_blocks(spark):
-    """r13 (r12 ADVICE): forcing block_pairs=True with the text
-    defaults (radius 3, 4 blocks) used to silently drop the text
-    modality from pigeonhole-complete to lossy — the pair join is
-    complete only to blocks-2. The disposition now bumps such a
-    modality's block count to max_hamming+2, so no recall-regression
-    warning fires and a twin at EXACTLY the radius boundary (SimHash
-    distance 3) is caught identically in both modes."""
-    import warnings
-
-    from lakehouse_spark_spark.operators.multimodal import multimodal_dedup_disposition
-    from lakehouse_spark_spark.operators.neardup import simhash
-
-    base = " ".join("w%05d" % (i * 7) for i in range(60))
-    cands = [(k, " ".join(base.split()[:-1] + ["z%04d" % k])) for k in range(60)]
-    sims = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash(
-            spark.createDataFrame([(9999, base), *cands], ["doc_id", "text"]), "doc_id", "text"
-        ).collect()
-    }
-    pick, d = min(
-        (
-            (k, bin(sims[9999] ^ sims[k]).count("1"))
-            for k, _ in cands
-            # distance 0 (a swap that flips no vote signs) can't exercise
-            # the completeness window — any geometry catches it
-            if sims[9999] != sims[k]
-        ),
-        key=lambda t: t[1],
-    )
-    assert 1 <= d <= 12, d  # one changed token lands in the SimHash near-dup band
-    assets = spark.createDataFrame(
-        [(0, base), (1, dict(cands)[pick])], "doc_id long, text string"
-    )
-
-    def run(pairs):
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            out = sorted(
-                map(
-                    tuple,
-                    multimodal_dedup_disposition(
-                        assets, "doc_id", text_col="text", block_pairs=pairs,
-                        # radius d with d+1 blocks: the exact window where
-                        # single is complete but the pair join is not
-                        text_max_hamming=d, text_blocks=d + 1,
-                    ).collect(),
-                )
-            )
-            assert not [x for x in w if "complete only to blocks-2" in str(x.message)]
-        return out
-
-    forced_pairs, single = run(True), run(False)
-    assert forced_pairs == single
-    assert [(i, c, k) for i, c, k, _m in forced_pairs] == [(0, 0, True), (1, 0, False)]
 
 
 def test_multimodal_disposition_min_modalities_vote(spark):

@@ -332,13 +332,11 @@ def test_hashed_shingles_output_identical_to_string_shingles(spark):
         assert hashed == exact, fn.__name__
 
 
-def test_simhash_block_pairs_join_identical_within_guarantee(spark):
-    """r12: the block-PAIR join (the Manku WWW'07 multi-table shape for
-    large corpora) returns EXACTLY the single-block join's output for
-    max_hamming <= blocks - 2 — including planted twins at the radius
-    boundary — and both equal a brute-force Hamming scan. At
-    max_hamming = blocks - 1 (outside the pair guarantee) the pair
-    join may only LOSE pairs, never invent them."""
+def test_simhash_join_equals_bruteforce_with_boundary_twins(spark):
+    """The single-block join returns EXACTLY a brute-force Hamming
+    scan at max_hamming = blocks - 2 and at blocks - 1 (the edge of its
+    pigeonhole guarantee), and catches every planted twin at distance
+    6."""
     import itertools
 
     import numpy as np
@@ -351,7 +349,7 @@ def test_simhash_block_pairs_join_identical_within_guarantee(spark):
         fp = int(rng.randint(0, 2**31)) << 32 | int(rng.randint(0, 2**31))
         fp &= (1 << 63) - 1
         rows.append((i, fp))
-        if i % 6 == 0:  # twin at EXACTLY Hamming 6 (the radius boundary)
+        if i % 6 == 0:  # twin at EXACTLY Hamming 6
             pos = rng.choice(63, size=6, replace=False)
             tw = fp
             for p in pos:
@@ -359,12 +357,10 @@ def test_simhash_block_pairs_join_identical_within_guarantee(spark):
             rows.append((1000 + i, tw))
     sim = spark.createDataFrame(rows, "doc_id bigint, simhash bigint")
 
-    def run(mh, pairs):
+    def run(mh):
         return sorted(
             (r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_candidates(
-                sim, "doc_id", max_hamming=mh, blocks=8, block_pairs=pairs
-            ).collect()
+            for r in simhash_candidates(sim, "doc_id", max_hamming=mh, blocks=8).collect()
         )
 
     fps = dict(rows)
@@ -375,58 +371,10 @@ def test_simhash_block_pairs_join_identical_within_guarantee(spark):
             if bin(fps[a] ^ fps[b]).count("1") <= mh
         )
 
-    got_single, got_paired = run(6, False), run(6, True)
-    assert got_single == brute(6)  # single join complete to blocks-1=7
-    assert got_paired == got_single  # pair join complete to blocks-2=6
-    assert {(a, b) for a, b, _ in got_paired} >= {(i, 1000 + i) for i in range(0, 60, 6)}
-    # outside the pair guarantee: subset, never superset — and r13
-    # warns about exactly this silent regression (7 = blocks-1 is
-    # single-complete but pair-incomplete)
-    import warnings as _w
-
-    with _w.catch_warnings():
-        _w.simplefilter("ignore")
-        assert set(run(7, True)) <= set(run(7, False)) == set(brute(7))
-    with pytest.warns(UserWarning, match="complete only to blocks-2"):
-        run(7, True)
-
-
-def test_simhash_block_mode_auto_selects_from_count(spark):
-    """r13: block_pairs=None picks the join shape at plan time — single
-    below the measured ~10^6 crossover, the pair join above it (via the
-    approx_count hint; the real count path is the same branch), and
-    NEVER pairs when the radius breaks the pair guarantee. The pair
-    plan is identifiable by its block_val2 join key."""
-    import numpy as np
-
-    from lakehouse_spark_spark.operators.neardup import simhash_candidates
-
-    rng = np.random.RandomState(3)
-    rows = [(i, int(rng.randint(0, 2**62))) for i in range(40)]
-    sim = spark.createDataFrame(rows, "doc_id bigint, simhash bigint")
-
-    def plan(df):
-        return df._jdf.queryExecution().analyzed().toString()
-
-    # small corpus (real count): single-block, equal to explicit False
-    auto = simhash_candidates(sim, "doc_id", max_hamming=6, blocks=8)
-    assert "block_val2" not in plan(auto)
-    got_auto = sorted(map(tuple, auto.collect()))
-    got_single = sorted(
-        map(tuple, simhash_candidates(sim, "doc_id", max_hamming=6, blocks=8, block_pairs=False).collect())
-    )
-    assert got_auto == got_single
-    # large-corpus hint: pair join chosen (radius inside the guarantee)
-    big = simhash_candidates(
-        sim, "doc_id", max_hamming=6, blocks=8, approx_count=2_000_000
-    )
-    assert "block_val2" in plan(big)
-    assert sorted(map(tuple, big.collect())) == got_auto  # identical output
-    # same hint, radius OUTSIDE the pair guarantee: stays single-block
-    wide = simhash_candidates(
-        sim, "doc_id", max_hamming=7, blocks=8, approx_count=2_000_000
-    )
-    assert "block_val2" not in plan(wide)
+    got6 = run(6)
+    assert got6 == brute(6)
+    assert {(a, b) for a, b, _ in got6} >= {(i, 1000 + i) for i in range(0, 60, 6)}
+    assert run(7) == brute(7)  # complete to blocks-1=7
 
 
 def test_simhash_max_bucket_bounds_skew_and_rescues_exact_dups(spark):

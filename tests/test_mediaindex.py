@@ -44,9 +44,7 @@ def _oneshot_cross_pairs(corpus, batch, max_hamming: int, blocks: int):
     restricted to (batch, corpus) pairs, reoriented to
     (new_id, corpus_id)."""
     union = corpus.unionByName(batch).withColumnRenamed("fp", "simhash")
-    cand = simhash_candidates(
-        union, "doc_id", max_hamming=max_hamming, blocks=blocks, block_pairs=False
-    )
+    cand = simhash_candidates(union, "doc_id", max_hamming=max_hamming, blocks=blocks)
     c_ids = corpus.select(F.col("doc_id").alias("cid"))
     b_ids = batch.select(F.col("doc_id").alias("bid"))
     ab = cand.join(b_ids, cand.id_a == F.col("bid")).join(c_ids, cand.id_b == F.col("cid")).select(

@@ -158,6 +158,87 @@ def test_simhash_is_deterministic_and_valid(spark, texts):
     assert all(0 <= v < (1 << 63) for v in a.values())
 
 
+_MASK64 = (1 << 64) - 1
+_FP64 = st.integers(-(2**63), 2**63 - 1)
+_EDGE_FP = st.sampled_from([0, 2**63 - 1, -1, -(2**63)])
+
+
+def _signed64(v: int) -> int:
+    v &= _MASK64
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+@st.composite
+def _hamming_cases(draw):
+    """(blocks, max_hamming, max_bucket, [(id, fp | None)]): random
+    fingerprints with planted edge values (nulls, 0, 2**63-1, negative
+    longs), near twins a few bit flips from a base fingerprint (some at,
+    some just past the radius), and one identical-fingerprint cluster
+    larger than ``max_bucket``. Ids are a random permutation so the
+    cluster minimum is not the first row."""
+    blocks = draw(st.integers(2, 16))  # at 1 the 64-bit block mask overflows a long
+    max_hamming = draw(st.integers(0, blocks - 1))
+    max_bucket = draw(st.integers(1, 3))
+    fps = draw(st.lists(st.one_of(st.none(), _EDGE_FP, _FP64), min_size=1, max_size=20))
+    for i, flips in draw(
+        st.lists(
+            st.tuples(
+                st.integers(0, len(fps) - 1),
+                st.lists(st.integers(0, 63), max_size=blocks + 1, unique=True),
+            ),
+            max_size=10,
+        )
+    ):
+        if fps[i] is not None:
+            v = fps[i]
+            for b in flips:
+                v ^= 1 << b
+            fps.append(_signed64(v))
+    hot = draw(st.one_of(_EDGE_FP, _FP64))
+    fps += [hot] * (max_bucket + draw(st.integers(1, 3)))
+    ids = draw(st.permutations(range(len(fps))))
+    return blocks, max_hamming, max_bucket, list(zip(ids, fps))
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(case=_hamming_cases())
+def test_simhash_candidates_matches_bruteforce(spark, case):
+    """The Hamming candidate join == a brute-force popcount(a ^ b) <= r
+    scan over a < b for ANY fingerprint set at a radius inside the
+    pigeonhole guarantee (null fingerprints never pair). With the
+    hot-bucket cap the output is a subset of that scan, and every member
+    of an equal-fingerprint cluster is still paired with the cluster
+    minimum at distance 0."""
+    import itertools
+
+    from lakehouse_spark_spark.operators.neardup import simhash_candidates
+
+    blocks, max_hamming, max_bucket, rows = case
+    sim = spark.createDataFrame(rows, "doc_id bigint, simhash bigint")
+    known = sorted((i, v) for i, v in rows if v is not None)
+    brute = set()
+    for (a, va), (b, vb) in itertools.combinations(known, 2):
+        d = bin((va ^ vb) & _MASK64).count("1")
+        if d <= max_hamming:
+            brute.add((a, b, d))
+
+    def run(**kw):
+        out = simhash_candidates(sim, "doc_id", max_hamming=max_hamming, blocks=blocks, **kw)
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(set(got))  # no duplicate pairs
+        return set(got)
+
+    assert run() == brute
+    capped = run(max_bucket=max_bucket)
+    assert capped <= brute
+    clusters: dict[int, list[int]] = {}
+    for i, v in known:
+        clusters.setdefault(v, []).append(i)
+    for ids in clusters.values():
+        lo = min(ids)
+        assert {(lo, i, 0) for i in ids if i != lo} <= capped
+
+
 class TestDecimalAvg6Formula:
     """The integer micro-unit half-away-from-zero average must equal
     exact decimal arithmetic for ANY 6-decimal sum and positive count —

@@ -4,10 +4,9 @@ must RECORD nonzero skip counts — the numbers an operator tunes
 ``max_bucket`` with — while the capped probe output stays the
 O(cluster) rescue star the r13 stress pinned.
 
-Method (the scale_stress_hamming --skewed fixture, transposed to the
-persisted index): an organic uniform-fingerprint corpus + a single
-repeated "flat frame" fingerprint cluster is written as a persisted
-media-fingerprint index; one guarded micro-batch (organic probes +
+Method (a skewed-fingerprint fixture on the persisted index): an
+organic uniform-fingerprint corpus + a single repeated "flat frame"
+fingerprint cluster is written as a persisted media-fingerprint index; one guarded micro-batch (organic probes +
 planted radius twins + ONE member of the flat-frame cluster) runs
 through the streaming ingest loop with ``max_bucket``, which measures
 and records the skew row into the index manifest
