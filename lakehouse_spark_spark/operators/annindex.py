@@ -91,11 +91,8 @@ def _manifest_path(path: str) -> str:
 
 
 def _resolve_cells_dir(path: str, mf: dict) -> str:
-    """The manifest-pointed cells dir (``cells_dir``; pre-r11 manifests
-    lack the field and mean the original ``cells``) — the shared
-    versioned-dir protocol (sources/sinks.resolve_versioned_dir),
-    including the read-path-purity ``__old`` fallback; the write path
-    (:func:`update_ann_index`) performs the durable repair."""
+    """The manifest-pointed cells dir (``cells_dir``) — the shared
+    versioned-dir protocol (sources/sinks.resolve_versioned_dir)."""
     from lakehouse_spark_spark.sources.sinks import resolve_versioned_dir
 
     return resolve_versioned_dir(path, mf, "cells")
@@ -292,7 +289,7 @@ def _panel_recall(index: "AnnIndex", path: str, mf: dict) -> float | None:
     pinfo = (mf or {}).get("panel")
     if not pinfo:
         return None
-    pdir = os.path.join(path, pinfo.get("dir", "panel"))
+    pdir = os.path.join(path, pinfo["dir"])
     if not os.path.isdir(pdir):
         return None
     spark = index.cells.sparkSession
@@ -305,8 +302,8 @@ def _panel_recall(index: "AnnIndex", path: str, mf: dict) -> float | None:
         panel.select(index.id_col, "vec"),
         "vec",
         k=int(pinfo["k"]),
-        n_probe=int(pinfo.get("n_probe", 4)),
-        shortlist=int(pinfo.get("shortlist", 50)),
+        n_probe=int(pinfo["n_probe"]),
+        shortlist=int(pinfo["shortlist"]),
     )
     got: dict = {}
     for r in res.select("query_id", "neighbor_id").collect():
@@ -384,7 +381,7 @@ def write_ann_index(
     panel_info = _write_recall_panel(rb, id_col, path, panel_n, panel_k)
     mf = {"format": 1, "id_col": id_col, "n_cells": int(n_cells), "m": int(m),
           "k": int(k), "cells_dir": "cells", "last_batch_id": None,
-          "cell_counts": dict(baseline.get("cell_counts") or {}),
+          "cell_counts": dict(baseline["cell_counts"]),
           "panel": panel_info,
           "health": {"baseline": baseline, "trail": []}}
     _write_manifest(path, mf)
@@ -411,9 +408,10 @@ def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:
     with open(_manifest_path(path)) as fh:
         mf = json.load(fh)
     # model tables resolve through the manifest like the cells dir —
-    # pre-r12 manifests lack the keys and mean the legacy fixed names;
-    # rebuild_ann_index versions them so a model swap is one atomic
-    # pointer flip, never a half-old-half-new read
+    # write_ann_index writes them at the fixed names `centroids` and
+    # `codebooks` with no `<fam>_dir` key; rebuild_ann_index versions
+    # them so a model swap is one atomic pointer flip, never a
+    # half-old-half-new read
     cents_rows = spark.read.parquet(resolve_versioned_dir(path, mf, "centroids")).collect()
     cents = [list(r["centroid"]) for r in sorted(cents_rows, key=lambda r: r["cell"])]
     book_rows = spark.read.parquet(resolve_versioned_dir(path, mf, "codebooks")).collect()
@@ -489,11 +487,6 @@ def update_ann_index(
     last = mf.get("last_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
         return load_ann_index(spark, path)
-    # single-writer path: repair a legacy interrupted-_swap_dirs crash
-    # (only cells__old on disk) before appending — readers never mutate
-    cur_dir = os.path.join(path, mf.get("cells_dir", "cells"))
-    if not os.path.exists(cur_dir) and os.path.exists(cur_dir + "__old"):
-        os.rename(cur_dir + "__old", cur_dir)
     idx = load_ann_index(spark, path)
     if encoded is None:
         # eager pin: the frame feeds both the append and the drift
@@ -503,49 +496,42 @@ def update_ann_index(
         ).localCheckpoint(eager=True)
     encoded.select(idx.id_col, "cell", "codes", "vec").write.mode(
         "append"
-    ).partitionBy("cell").parquet(cur_dir)
-    # drift observability (r11): per-fold residual/occupancy stats ride
+    ).partitionBy("cell").parquet(idx.cells_path)
+    # drift observability: per-fold residual/occupancy stats ride
     # the SAME manifest write as the watermark — a crash before it
     # loses neither or both, and a replayed epoch (no-op above) never
     # double-records. Trail is capped; ann_index_health reads it.
     stats = _residual_stats(encoded.select("cell", "vec"), idx.centroids)
-    # cumulative occupancy (r12): fold the batch's per-cell counts into
+    # cumulative occupancy: fold the batch's per-cell counts into
     # the manifest tracker — the residual signal never notices a
     # same-distribution corpus outgrowing its frozen n_cells, so the
     # fullest cell's count vs the BUILD-time mean is its own trigger.
     # Advisory by design: compact_ann_index id-dedups replayed rows the
     # tracker counted, so it can only over-state occupancy (flag early,
-    # never late). Pre-r12 manifests (no tracker) record NULL ratios.
-    # pre-r12 manifests carry no build-time tracker; seeding one from a
-    # single fold would understate the corpus and fake a LOW ratio, so
-    # those indexes keep NULL occupancy until a rebuild writes a real
-    # seed. Only max_cell (a plain int — JSON-safe) is persisted; the
+    # never late). write_ann_index and rebuild_ann_index seed the
+    # tracker. Only max_cell (a plain int — JSON-safe) is persisted; the
     # ratio, whose zero-baseline edge is infinite, is computed at read
-    # time by ann_index_health, exactly like resid_ratio.
-    has_tracker = mf.get("cell_counts") is not None
-    cum = {str(c): int(n) for c, n in (mf.get("cell_counts") or {}).items()}
-    batch_counts = stats.pop("cell_counts", None) or {}
-    if has_tracker:
-        for c, n in batch_counts.items():
-            cum[c] = cum.get(c, 0) + int(n)
-    max_cell = max(cum.values()) if has_tracker and cum else None
+    # time by ann_index_health, exactly like resid_ratio. An empty
+    # tracker (empty corpus, all-dup folds so far) records NULL.
+    cum = {str(c): int(n) for c, n in mf["cell_counts"].items()}
+    for c, n in stats.pop("cell_counts").items():
+        cum[c] = cum.get(c, 0) + int(n)
+    max_cell = max(cum.values()) if cum else None
     recall = None
     if measure_recall and mf.get("panel"):
         # measured recall on the persisted probe panel: the index AFTER
         # this append (fresh load — the pre-append frame's file listing
         # is already pinned), vs build-time exact ground truth
         recall = _panel_recall(load_ann_index(spark, path), path, mf)
-    health = dict(mf.get("health") or {})
-    trail = list(health.get("trail", []))[-(_ANN_HEALTH_TRAIL_MAX - 1):]
+    health = mf["health"]
+    trail = health["trail"][-(_ANN_HEALTH_TRAIL_MAX - 1):]
     trail.append({
         **stats,
         "batch_id": None if batch_id is None else int(batch_id),
         "max_cell": max_cell,
         "recall_at_k": recall,
     })
-    mf2 = {**mf, "health": {**health, "trail": trail}}
-    if has_tracker:
-        mf2["cell_counts"] = cum
+    mf2 = {**mf, "cell_counts": cum, "health": {**health, "trail": trail}}
     if batch_id is not None:
         mf2["last_batch_id"] = int(batch_id)
     _write_manifest(path, mf2)
@@ -581,7 +567,7 @@ def compact_ann_index(spark: SparkSession, path: str, target_file_mb: int = 256)
 
     with open(_manifest_path(path)) as fh:
         mf = json.load(fh)
-    cur = mf.get("cells_dir", "cells")
+    cur = mf["cells_dir"]
     cells_path = _resolve_cells_dir(path, mf)
     size = sum(
         os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(cells_path) for f in fs
@@ -595,15 +581,13 @@ def compact_ann_index(spark: SparkSession, path: str, target_file_mb: int = 256)
             str(mf["id_col"]),
             "left_anti",
         )
-    cur_v = int(cur.rsplit("_v", 1)[-1]) if "_v" in cur else 0
+    cur_v = int(cur.rsplit("_v", 1)[-1]) if "_v" in cur else 0  # first build: `cells`
     next_dir = f"cells_v{cur_v + 1}"
     df.repartition(n_tasks, "cell").write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(path, next_dir)
     )
     _write_manifest(path, {**mf, "cells_dir": next_dir})
-    # retain the dir the rewrite actually read (== cur, except in the
-    # legacy crash state where the data lives at cells__old)
-    _gc_cells_versions(path, next_dir, retain_dir=os.path.basename(cells_path))
+    _gc_cells_versions(path, next_dir, retain_dir=cur)
     if tomb is not None:
         # audit evidence (r15): the deletions this rewrite carried are
         # now physically durable — stamp the purge watermark
@@ -638,15 +622,15 @@ def rebuild_ann_index(
     (never shrinking below the current count) — a corpus that grew 5x
     gets ~5x the cells, returning the in-cell quadratics
     (semantic dedup, index-vs-index join) to the size the original
-    build accepted. Falls back to doubling when the manifest predates
-    the r12 tracker.
+    build accepted. Falls back to doubling when the build-time tracker
+    is empty (a :func:`write_ann_index` over an empty corpus).
 
     Publish protocol: a rebuild swaps the MODEL, so cells, centroids,
     codebooks, and the panel all land in fresh ``_v{n+1}`` dirs and
     become current together in ONE manifest flip — a reader never sees
     new centroids with old codes (each table family follows the shared
-    versioned-dir protocol; model dirs resolve through the manifest
-    since r12, legacy fixed names when the keys are absent). The epoch
+    versioned-dir protocol; model dirs resolve through the manifest,
+    the fixed names a first build wrote when the keys are absent). The epoch
     watermark is PRESERVED: a replayed pre-rebuild epoch stays a no-op
     — its rows are already inside the re-encoded corpus. Crash before
     the flip leaves orphan ``_v`` dirs (GC'd by the next rebuild);
@@ -666,13 +650,12 @@ def rebuild_ann_index(
         .localCheckpoint(eager=True)  # pin: feeds train sample, encode, count
     )
     if n_cells is None:
-        base = (mf.get("health") or {}).get("baseline") or {}
-        bcc = base.get("cell_counts") or {}
-        total = corpus.count()
-        base_mean = (int(base["n"]) / len(bcc)) if bcc and base.get("n") else None
-        if base_mean:
-            n_cells = max(int(mf["n_cells"]), math.ceil(total / base_mean))
-        else:  # pre-r12 manifest: no occupancy seed to size from
+        base = mf["health"]["baseline"]
+        bcc = base["cell_counts"]
+        if bcc:
+            base_mean = int(base["n"]) / len(bcc)
+            n_cells = max(int(mf["n_cells"]), math.ceil(corpus.count() / base_mean))
+        else:  # empty-corpus build: no occupancy seed to size from
             n_cells = int(mf["n_cells"]) * 2
     m, k = int(mf["m"]), int(mf["k"])
     cents, books = train_ivfpq(
@@ -680,25 +663,16 @@ def rebuild_ann_index(
     )
 
     # current dir per family, as a READER resolves it: cells/centroids/
-    # codebooks live under manifest `<fam>_dir` keys (legacy fixed names
-    # when absent — including the interrupted-_swap_dirs `__old` state,
-    # which resolve_versioned_dir serves and which must therefore be
-    # the retained dir, not the never-existing clean name); the panel's
-    # pointer lives INSIDE the panel record (mf['panel']['dir']) — a
-    # review catch: a `panel_dir` key here would always miss, version
-    # every rebuild to panel_v1, and overwrite the LIVE panel pre-flip.
-    from lakehouse_spark_spark.sources.sinks import resolve_versioned_dir
-
-    cur_dirs = {
-        fam: os.path.basename(resolve_versioned_dir(path, mf, fam))
-        for fam in ("cells", "centroids", "codebooks")
-    }
+    # codebooks live under manifest `<fam>_dir` keys (the fixed names a
+    # first build wrote when absent); the panel's pointer lives INSIDE
+    # the panel record (mf['panel']['dir']) — a `panel_dir` key here
+    # would always miss, version every rebuild to panel_v1, and
+    # overwrite the LIVE panel pre-flip.
+    cur_dirs = {fam: mf.get(f"{fam}_dir", fam) for fam in ("cells", "centroids", "codebooks")}
     cur_dirs["panel"] = (mf.get("panel") or {}).get("dir", "panel")
 
     def _next(fam: str) -> str:
         cur = cur_dirs[fam]
-        if cur.endswith("__old"):  # legacy crash-state dir name
-            cur = cur[: -len("__old")]
         v = int(cur.rsplit("_v", 1)[-1]) if "_v" in cur else 0
         return f"{fam}_v{v + 1}"
 
@@ -729,7 +703,7 @@ def rebuild_ann_index(
         "format": 1, "id_col": idx.id_col, "n_cells": int(n_cells), "m": m, "k": k,
         "cells_dir": cells_dir, "centroids_dir": cents_dir, "codebooks_dir": books_dir,
         "last_batch_id": mf.get("last_batch_id"),
-        "cell_counts": dict(baseline.get("cell_counts") or {}),
+        "cell_counts": dict(baseline["cell_counts"]),
         "panel": panel_info,
         "health": {"baseline": baseline, "trail": []},
     }
@@ -744,9 +718,6 @@ def rebuild_ann_index(
 
     for fam, keep in (("cells", cells_dir), ("centroids", cents_dir),
                       ("codebooks", books_dir), ("panel", panel_dir)):
-        # retain what readers were ACTUALLY resolving (cur_dirs — which
-        # in the legacy crash state is `cells__old`, not the manifest's
-        # clean name; compact_ann_index makes the same distinction)
         gc_versioned_dirs(path, fam, keep, retain_dir=cur_dirs[fam])
     return idx2
 
@@ -785,7 +756,7 @@ def ann_index_health(
     ``resid_ratio`` here batches before recall visibly degrades; the
     flagged response is a periodic :func:`write_ann_index` rebuild.
 
-    r12 adds the two signals residual drift can't see: ``max_cell`` /
+    Two more signals cover what residual drift can't see: ``max_cell`` /
     ``occupancy_ratio`` (fullest-cell count vs the BUILD-time mean cell
     occupancy — a same-distribution corpus outgrowing its frozen
     n_cells trips this at ``occupancy_rebuild_ratio`` while residuals
@@ -795,16 +766,14 @@ def ann_index_health(
     against build-time exact ground truth — the number the residual
     ratio only proxies; trend it, baseline row included).
 
-    Pure manifest read — no index data scanned. Pre-r11 manifests (no
-    health record) return zero rows; folds into a pre-r11 index record
-    trail rows whose ``resid_ratio`` stays NULL (there is no baseline
-    measurement to compare against — rebuild once to get one); pre-r12
-    folds likewise carry NULL occupancy/recall columns."""
+    Pure manifest read — no index data scanned. NULL ratios mean no
+    measurement to compare against (an empty-corpus build's baseline, an
+    all-dup fold); ``recall_at_k`` is NULL without a recall panel."""
     with open(_manifest_path(path)) as fh:
         mf = json.load(fh)
-    health = mf.get("health") or {}
-    base = health.get("baseline")
-    base_mean = base["mean_resid"] if base else None
+    health = mf["health"]
+    base = health["baseline"]
+    base_mean = base["mean_resid"]
 
     def _ratio(mean_resid):
         # None-vs-0.0 matters: a baseline of exactly 0.0 (corpus with
@@ -827,37 +796,33 @@ def ann_index_health(
     # manifest stores only the JSON-safe max_cell int, and the
     # zero-baseline edge (empty-corpus build: any growth is infinite,
     # not unknowable) never has to serialize.
-    bcc = base.get("cell_counts") if base else None
-    base_cell_mean = None
-    if bcc is not None and base.get("n") is not None:
-        base_cell_mean = (int(base["n"]) / len(bcc)) if bcc else 0.0
+    bcc = base["cell_counts"]
+    base_cell_mean = (int(base["n"]) / len(bcc)) if bcc else 0.0
 
     def _occ(mc):
-        if mc is None or base_cell_mean is None:
+        if mc is None:
             return None
         if base_cell_mean == 0.0:
             return 1.0 if mc == 0 else float("inf")
         return mc / base_cell_mean
 
-    rows = []
-    if base:
-        base_max = max(bcc.values()) if bcc else None
-        rows.append(
-            (-1, None, base["n"], base["mean_resid"], base["p99_resid"],
-             base["cell_skew"], None if base_mean is None else 1.0,
-             base_max, _occ(base_max),
-             base.get("recall_at_k"), False)
-        )
-    for i, e in enumerate(health.get("trail", [])):
+    base_max = max(bcc.values()) if bcc else None
+    rows = [
+        (-1, None, base["n"], base["mean_resid"], base["p99_resid"],
+         base["cell_skew"], None if base_mean is None else 1.0,
+         base_max, _occ(base_max),
+         base.get("recall_at_k"), False)
+    ]
+    for i, e in enumerate(health["trail"]):
         ratio = _ratio(e["mean_resid"])
-        occ = _occ(e.get("max_cell"))
+        occ = _occ(e["max_cell"])
         flag = bool(ratio is not None and ratio >= rebuild_ratio) or bool(
             occ is not None and occ >= occupancy_rebuild_ratio
         )
         rows.append(
-            (i, e.get("batch_id"), e["n"], e["mean_resid"], e["p99_resid"],
-             e["cell_skew"], ratio, e.get("max_cell"), occ,
-             e.get("recall_at_k"), flag)
+            (i, e["batch_id"], e["n"], e["mean_resid"], e["p99_resid"],
+             e["cell_skew"], ratio, e["max_cell"], occ,
+             e["recall_at_k"], flag)
         )
     return spark.createDataFrame(
         rows,
@@ -1213,8 +1178,8 @@ def semantic_dedup_against_index(
     only the distinct probed cell ids), the dup flag is the max cosine
     over ALL probed cells, and the read cost grows to at most
     p/n_cells of the cells table. The home cell (= fold cell) is
-    always probe rank 0, so p=1 output is byte-identical to the
-    pre-r11 operator.
+    always probe rank 0, so p=1 output is byte-identical to a
+    home-cell-only probe.
 
     ``max_cell`` (r12) bounds the in-cell quadratic: corpus cells
     holding more than this many distinct vectors are skipped for

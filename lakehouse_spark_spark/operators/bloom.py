@@ -173,7 +173,7 @@ def bloom_merge(*frames: DataFrame) -> DataFrame:
     the input value sets — the property that makes per-batch index
     updates one tiny aggregation instead of a corpus rebuild. Caller
     owns the same-parameters contract (``update_dedup_index`` reads
-    them from the persisted meta)."""
+    them from the index manifest)."""
     if not frames:
         raise ValueError("bloom_merge: need at least one filter frame")
     out = frames[0]
@@ -189,7 +189,7 @@ def _manifest_path(path: str) -> str:
 def _read_manifest(path: str) -> dict | None:
     """The index's commit pointer: a tiny JSON file naming the current
     filter version dir plus the build geometry and ingest watermark.
-    Missing file => legacy (r8/r9) layout or no index at all."""
+    Missing file => no index written by :func:`bloom_write`."""
     try:
         with open(_manifest_path(path)) as fh:
             return json.load(fh)
@@ -208,15 +208,14 @@ def _write_manifest(path: str, manifest: dict) -> None:
 
 
 def _gc_filter_versions(path: str, keep_dir: str, retain_dir: str | None = None) -> None:
-    """One-version-retention GC of superseded filter version dirs (and
-    the legacy ``filter``/``filter__tmp``/``filter__old`` leftovers)
+    """One-version-retention GC of superseded filter version dirs
     after a manifest flip — the shared protocol
     (sources/sinks.gc_versioned_dirs): ``retain_dir`` — the version the
     flip just superseded — survives one update cycle so in-flight
     reader frames under the previous manifest keep resolving."""
     from lakehouse_spark_spark.sources.sinks import gc_versioned_dirs
 
-    gc_versioned_dirs(path, "filter", keep_dir, retain_dir, extra_legacy=("filter__tmp",))
+    gc_versioned_dirs(path, "filter", keep_dir, retain_dir)
 
 
 def _write_filter_with_stats(
@@ -255,8 +254,7 @@ def bloom_write(bloom: DataFrame, path: str, m_bits: int, k: int) -> None:
     ingest watermark (:func:`update_dedup_index`). Commits are a
     whole-file manifest replace — atomic on POSIX and on object stores
     (single-object PUT) — so no step of write/update relies on
-    directory renames being atomic (the r9 layout's _swap_dirs did, a
-    local-FS-only assumption).
+    directory renames being atomic (a local-FS-only assumption).
 
     The manifest also records the build-time saturation baseline
     (``health`` — fill ratio + expected FPP observed on the write job
@@ -271,31 +269,27 @@ def bloom_write(bloom: DataFrame, path: str, m_bits: int, k: int) -> None:
     )
 
 
-def bloom_load(spark: SparkSession, path: str) -> BloomFilter:
-    """Load a persisted filter + its build parameters. Reads the
-    manifest-pointer layout; falls back to the legacy r8/r9 layout
-    (``path/filter`` + ``path/meta`` parquet), including the
-    interrupted-_swap_dirs crash state where only ``filter__old``
-    survives — read DIRECTLY from the set-aside dir, without mutating
-    disk: a read path that renames can race a legacy writer between
-    _swap_dirs' two renames and re-create ``filter`` under it (r10
-    ADVICE). The durable repair (rename back + manifest adoption)
-    belongs to the single-writer update path
-    (:func:`update_dedup_index`)."""
+def _require_manifest(path: str, caller: str) -> dict:
+    """The index's manifest, or a ValueError naming the remedy: an index
+    without one (e.g. an older ``filter/`` + ``meta/`` layout) is not
+    read or upgraded here — rebuild it with :func:`write_dedup_index`."""
     mf = _read_manifest(path)
-    if mf is not None:
-        return BloomFilter(
-            spark.read.parquet(os.path.join(path, mf["filter_dir"])),
-            int(mf["m_bits"]),
-            int(mf["k"]),
+    if mf is None:
+        raise ValueError(
+            f"{caller}: {path} has no manifest.json — not an index written by "
+            "write_dedup_index; rebuild it with write_dedup_index"
         )
-    # legacy layout (pre-manifest)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    filt_dir = f"{path}/filter"
-    if not os.path.exists(filt_dir) and os.path.exists(f"{path}/filter__old"):
-        filt_dir = f"{path}/filter__old"
+    return mf
+
+
+def bloom_load(spark: SparkSession, path: str) -> BloomFilter:
+    """Load a persisted filter + its build parameters through the
+    manifest pointer (:func:`bloom_write`)."""
+    mf = _require_manifest(path, "bloom_load")
     return BloomFilter(
-        spark.read.parquet(filt_dir), int(meta["m_bits"]), int(meta["k"])
+        spark.read.parquet(os.path.join(path, mf["filter_dir"])),
+        int(mf["m_bits"]),
+        int(mf["k"]),
     )
 
 
@@ -308,7 +302,7 @@ def write_dedup_index(
 ) -> DedupIndex:
     """One-time (or periodic-rebuild) index construction: hash the
     corpus once, persist the distinct hash set at ``path/hashes``, and
-    build + persist its Bloom summary (``path/filter``, ``path/meta``).
+    build + persist its Bloom summary (:func:`bloom_write`).
     This is the ONLY operation that scans the corpus; every subsequent
     ingest run consumes the index alone. The filter is built FROM the
     written hash parquet, so the corpus text is read exactly once."""
@@ -403,15 +397,14 @@ def _lift_tombstones(
     whose partition dir the lift rewrote away could re-append the
     lifted hashes and silently re-suppress re-admitted content.
 
-    Epoch guard (r15 ADVICE): a tombstone row is liftable by fold
+    Epoch guard: a tombstone row is liftable by fold
     epoch ``batch_id`` only when ``batch_id >= min_lift_epoch`` (the
     delete-time watermark + 2, stamped by
     :func:`delete_from_dedup_index`) — a CRASHED pre-delete epoch
     replaying after the delete re-presents the hash without any
     re-admission, and an unguarded lift silently resurrected it.
     ``batch_id=None`` (an ad-hoc, non-replayable fold) lifts
-    unconditionally — there is no epoch to replay. Rows without the
-    column (pre-r15 ledgers) lift as before. Returns False when
+    unconditionally — there is no epoch to replay. Returns False when
     nothing was liftable (no rewrite). Single-writer (runs inside the
     fold)."""
     import json as _json
@@ -426,8 +419,8 @@ def _lift_tombstones(
     tdir = tombstone_dir(path)
     tomb = spark.read.parquet(tdir)
     liftable = F.lit(True)
-    if batch_id is not None and "min_lift_epoch" in tomb.columns:
-        liftable = F.coalesce(F.col("min_lift_epoch"), F.lit(0)) <= F.lit(int(batch_id))
+    if batch_id is not None:
+        liftable = F.col("min_lift_epoch") <= F.lit(int(batch_id))
     marked = tomb.join(
         readmitted.select("content_hash").withColumn("__readmit", F.lit(True)),
         "content_hash",
@@ -498,7 +491,7 @@ def update_dedup_index(
     negatives. Callers without a replay epoch pass None and keep plain
     at-least-once semantics.
 
-    Publish protocol (object-store-safe, r9 verdict task 7): the merged
+    Publish protocol (object-store-safe): the merged
     filter is written to a FRESH ``filter_v{n+1}`` directory — never
     touching ``filter_v{n}``, which the merge plan is still reading —
     and becomes current only when the manifest pointer flips
@@ -507,24 +500,12 @@ def update_dedup_index(
     dir is garbage the next update GCs; after the flip but before the
     hash append — filter bits without hashes, pure false positives the
     verify join eliminates, and the replayed batch re-keeps
-    (Bloom's one-sided-error crash contract, unchanged from r9, now
-    with no rename-atomicity assumption). Hash appends are new files
+    (Bloom's one-sided-error crash contract, with no rename-atomicity
+    assumption). Hash appends are new files
     only (safe on object stores by construction).
     """
     spark = kept_hashes.sparkSession
-    mf = _read_manifest(path)
-    if mf is None:
-        # legacy r8/r9 layout: adopt it into the manifest layout first
-        # (pointer names the legacy `filter` dir; next publish is v1).
-        # An interrupted-_swap_dirs crash state (only `filter__old` on
-        # disk) is repaired HERE — the single-writer path — never by
-        # readers (r10 ADVICE: a reader's rename races the writer).
-        if not os.path.exists(f"{path}/filter") and os.path.exists(f"{path}/filter__old"):
-            os.rename(f"{path}/filter__old", f"{path}/filter")
-        legacy = bloom_load(spark, path)
-        mf = {"format": 2, "filter_dir": "filter", "m_bits": legacy.m_bits,
-              "k": legacy.k, "last_batch_id": None}
-        _write_manifest(path, mf)
+    mf = _require_manifest(path, "update_dedup_index")
     last = mf.get("last_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
         return load_dedup_index(spark, path)
@@ -541,18 +522,17 @@ def update_dedup_index(
         .localCheckpoint(eager=True)
     )
     merged = bloom_merge(cur_filter, bloom_build(new_rows, "content_hash", m_bits, k))
-    cur_v = int(mf["filter_dir"].rsplit("_v", 1)[-1]) if "_v" in mf["filter_dir"] else 0
-    next_dir = f"filter_v{cur_v + 1}"
-    # saturation health (r14): the fill stats ride the write job itself
-    # (df.observe — no re-read, r15) and the SAME manifest write as the
+    next_dir = f"filter_v{int(mf['filter_dir'].rsplit('_v', 1)[-1]) + 1}"
+    # saturation health: the fill stats ride the write job itself
+    # (df.observe — no re-read) and the SAME manifest write as the
     # pointer flip — a crash loses neither or both
     stats = _write_filter_with_stats(merged, os.path.join(path, next_dir), m_bits, k)
-    health = dict(mf.get("health") or {})
-    trail = list(health.get("trail", []))[-(_BLOOM_HEALTH_TRAIL_MAX - 1):]
+    health = mf["health"]
+    trail = health["trail"][-(_BLOOM_HEALTH_TRAIL_MAX - 1):]
     if batch_id is not None:
         # a fold replayed after a crash between the pointer flip and
         # the watermark advance would otherwise append a second entry
-        # for the same epoch (r15 ADVICE — the trail is deduped by
+        # for the same epoch (the trail is deduped by
         # batch_id, unlike the skew trail's documented at-least-once
         # duplicates)
         trail = [e for e in trail if e.get("batch_id") != int(batch_id)]
@@ -562,12 +542,12 @@ def update_dedup_index(
     # one-version retention: the dir this flip superseded stays on disk
     # until the NEXT update so in-flight reader frames keep resolving
     _gc_filter_versions(path, next_dir, retain_dir=mf["filter_dir"])
-    # tombstone lift (r14): folding a hash whose content was previously
+    # tombstone lift: folding a hash whose content was previously
     # deleted re-ADMITS that content — its tombstone must go, or the
     # load-time anti-join would hide the re-admitted copy forever and
     # every future dup of it would sail through. Runs strictly BEFORE
     # the watermark advance: a crash after the advance would never
-    # replay the lift. Epoch-guarded (r15): a replayed pre-delete
+    # replay the lift. Epoch-guarded: a replayed pre-delete
     # epoch is NOT a re-admission and must not lift (min_lift_epoch —
     # see _lift_tombstones). The liftability check is one tiny job,
     # guarded by the ledger's existence (zero cost for non-deleting
@@ -670,12 +650,7 @@ def rebuild_dedup_index(
     O(hashes), zero corpus reads. Single-writer contract."""
     import math
 
-    mf = _read_manifest(path)
-    if mf is None:
-        raise ValueError(
-            f"rebuild_dedup_index: {path} has no manifest — legacy layouts are "
-            "adopted by update_dedup_index; run one fold (or write_dedup_index) first"
-        )
+    mf = _require_manifest(path, "rebuild_dedup_index")
     # physical purge + small-files repair in one rewrite; the fresh
     # filter must be derived from the PURGED set
     compact_dedup_index(spark, path, target_file_mb)
@@ -687,8 +662,7 @@ def rebuild_dedup_index(
         k = max(1, min(16, round(m_bits / max(n, 1) * math.log(2))))
     fresh = bloom_build(hashes, "content_hash", int(m_bits), int(k))
     cur = mf["filter_dir"]
-    cur_v = int(cur.rsplit("_v", 1)[-1]) if "_v" in cur else 0
-    next_dir = f"filter_v{cur_v + 1}"
+    next_dir = f"filter_v{int(cur.rsplit('_v', 1)[-1]) + 1}"
     baseline = _write_filter_with_stats(
         fresh, os.path.join(path, next_dir), int(m_bits), int(k)
     )
@@ -742,25 +716,18 @@ def dedup_index_health(
     ``fpp_rebuild_threshold``. This is the family's data-LOSS monitor:
     a saturating filter doesn't leak dups, it silently drops NOVEL
     documents as dups at the FPP rate, which no output diff ever
-    surfaces. Pure manifest read — no index data scanned. Pre-r14
-    manifests (no health record) return zero rows until a fold or
-    rebuild writes one."""
-    mf = _read_manifest(path)
-    if mf is None:
-        raise ValueError(f"dedup_index_health: {path} has no manifest")
-    health = mf.get("health") or {}
+    surfaces. Pure manifest read — no index data scanned."""
+    mf = _require_manifest(path, "dedup_index_health")
     m_bits, k = int(mf["m_bits"]), int(mf["k"])
-    rows = []
-    base = health.get("baseline")
-    if base:
+    base = mf["health"]["baseline"]
+    rows = [
+        (-1, None, m_bits, k, int(base["bits_set"]), float(base["fill_ratio"]),
+         float(base["expected_fpp"]),
+         bool(float(base["expected_fpp"]) >= fpp_rebuild_threshold))
+    ]
+    for i, e in enumerate(mf["health"]["trail"]):
         rows.append(
-            (-1, None, m_bits, k, int(base["bits_set"]), float(base["fill_ratio"]),
-             float(base["expected_fpp"]),
-             bool(float(base["expected_fpp"]) >= fpp_rebuild_threshold))
-        )
-    for i, e in enumerate(health.get("trail", [])):
-        rows.append(
-            (i, e.get("batch_id"), m_bits, k, int(e["bits_set"]),
+            (i, e["batch_id"], m_bits, k, int(e["bits_set"]),
              float(e["fill_ratio"]), float(e["expected_fpp"]),
              bool(float(e["expected_fpp"]) >= fpp_rebuild_threshold))
         )

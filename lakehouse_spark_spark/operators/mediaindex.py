@@ -197,9 +197,9 @@ def load_media_fp_index(spark: SparkSession, path: str) -> MediaFpIndex:
         fingerprints=fps,
         blocks=blocks,
         n_blocks=int(mf["blocks"]),
-        modality=str(mf.get("modality", "media")),
-        pair_blocks=bool(mf.get("pair_blocks", False)),
-        aux_fp_cols=tuple(mf.get("aux_fp_cols", [])),
+        modality=str(mf["modality"]),
+        pair_blocks=bool(mf["pair_blocks"]),
+        aux_fp_cols=tuple(mf["aux_fp_cols"]),
         approx_rows=parquet_footer_rows(fp_dir),
     )
 
@@ -272,23 +272,17 @@ def update_media_fp_index(
     last = mf.get("last_batch_id")
     if batch_id is not None and last is not None and batch_id <= last:
         return load_media_fp_index(spark, path)
-    # single-writer path: repair legacy interrupted-swap crash states
-    # (only <dir>__old on disk) before appending — the shared protocol
-    for family in ("fingerprints", "blocks"):
-        cur = os.path.join(path, mf.get(f"{family}_dir", family))
-        if not os.path.exists(cur) and os.path.exists(cur + "__old"):
-            os.rename(cur + "__old", cur)
     clean = (
         batch_fps.filter(F.col(fp_col).isNotNull())
         .select(
             F.col(id_col).alias("__id"), F.col(fp_col).cast("long").alias("fp"),
-            *[F.col(c).cast("long").alias(c) for c in mf.get("aux_fp_cols", [])],
+            *[F.col(c).cast("long").alias(c) for c in mf["aux_fp_cols"]],
         )
         .localCheckpoint(eager=True)  # one upstream (decode+hash) pass feeds both appends
     )
     clean.write.mode("append").parquet(resolve_versioned_dir(path, mf, "fingerprints"))
     _block_rows(
-        clean, "__id", "fp", int(mf["blocks"]), bool(mf.get("pair_blocks", False))
+        clean, "__id", "fp", int(mf["blocks"]), bool(mf["pair_blocks"])
     ).write.mode("append").parquet(resolve_versioned_dir(path, mf, "blocks"))
     if batch_id is not None:
         write_manifest_atomic(path, {**mf, "last_batch_id": int(batch_id)})
@@ -336,10 +330,7 @@ def compact_media_fp_index(spark: SparkSession, path: str, target_file_mb: int =
         {**mf, "fingerprints_dir": new_dirs["fingerprints"], "blocks_dir": new_dirs["blocks"]},
     )
     for family in ("fingerprints", "blocks"):
-        gc_versioned_dirs(
-            path, family, new_dirs[family],
-            retain_dir=os.path.basename(resolve_versioned_dir(path, mf, family)),
-        )
+        gc_versioned_dirs(path, family, new_dirs[family], retain_dir=mf.get(f"{family}_dir", family))
     if tomb is not None:
         # audit evidence (r15): the deletions this rewrite carried are
         # now physically durable — stamp the purge watermark

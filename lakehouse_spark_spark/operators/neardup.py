@@ -618,12 +618,6 @@ def update_neardup_index(
         signatures = minhash_signatures(
             batch, id_col, text_col, n=int(mf["n"]), num_hashes=int(mf["num_hashes"])
         )
-    # single-writer path: repair legacy interrupted-_swap_dirs crash
-    # states (only <dir>__old on disk) before appending
-    for family in ("signatures", "bands"):
-        cur = os.path.join(path, mf.get(f"{family}_dir", family))
-        if not os.path.exists(cur) and os.path.exists(cur + "__old"):
-            os.rename(cur + "__old", cur)
     sigs = (
         signatures.select(F.col(id_col).alias("__id"), "signature")
         .localCheckpoint(eager=True)  # one shingle pass feeds both appends
@@ -639,9 +633,9 @@ def update_neardup_index(
 
 def compact_neardup_index(spark: SparkSession, path: str, target_file_mb: int = 256) -> tuple[int, int]:
     """Small-files + replay-duplicate maintenance for a streamed-into
-    index. Publish protocol (r11 — the bloom module's versioned-dir +
-    manifest-pointer commit, replacing the r10 ``_swap_dirs`` rename
-    dance whose mid-swap crash left the index unreadable): each table
+    index. Publish protocol (the bloom module's versioned-dir +
+    manifest-pointer commit; a ``_swap_dirs`` rename dance's mid-swap
+    crash would leave the index unreadable): each table
     is rewritten distinct into a FRESH ``<family>_v{n+1}`` dir, and
     BOTH become current in ONE atomic manifest flip — the
     signature/band tables can never point at mixed generations. Crash
@@ -682,12 +676,7 @@ def compact_neardup_index(spark: SparkSession, path: str, target_file_mb: int = 
         {**mf, "signatures_dir": new_dirs["signatures"], "bands_dir": new_dirs["bands"]},
     )
     for family in ("signatures", "bands"):
-        # retain the dir the rewrite actually read (== the pointed dir,
-        # except in the legacy crash state where data lives at __old)
-        gc_versioned_dirs(
-            path, family, new_dirs[family],
-            retain_dir=os.path.basename(resolve_versioned_dir(path, mf, family)),
-        )
+        gc_versioned_dirs(path, family, new_dirs[family], retain_dir=mf.get(f"{family}_dir", family))
     if tomb is not None:
         # audit evidence (r15): the deletions this rewrite carried are
         # now physically durable — stamp the purge watermark

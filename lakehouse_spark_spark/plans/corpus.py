@@ -603,9 +603,9 @@ def curation_v5_ship(
     composite-key pattern the packing operator documents; the bucket
     MUST be an id hash, not a raw modulus — see the inline comment).
     Packing give-up is heuristic, roughly one partial bin per extra
-    bucket (BFD carries no hard bound; measured within the
-    extra-shard count at 10x in tools/scale_stress_packing.py, and
-    bounded loosely by tests/test_curation_v5.py).
+    bucket (BFD carries no hard bound; measured at 10x docs with 16
+    buckets: +156 bins, within the +300 extra-shard count; bounded
+    loosely by tests/test_curation_v5.py).
     """
     from lakehouse_spark_spark.operators.packing import pack_bins_bfd
     from lakehouse_spark_spark.sources.sinks import write_parquet

@@ -2604,7 +2604,8 @@ def takedown_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # organic index shows ZEROS (the cap is pure insurance on gated data);
 # the planted index shows the cap doing real work (nonzero hot
 # buckets/skipped rows and the rescue restoring the exact dup) — the
-# same numbers BENCH_SKEW records at stress scale. rows-only: manifest
+# same counters a 200k-copy flat-frame cluster records at stress scale
+# (~1.7M skipped corpus rows, SCALE.md). rows-only: manifest
 # trail readback; tests/test_skew_health.py pins the arithmetic.
 # ==========================================================================
 @register(

@@ -29,16 +29,15 @@ def get_session(app_name: str = "lakehouse_spark_spark", cpus: str | int | None 
         .master(f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r16 note: size-respecting coalescing (parallelismFirst=false +
-        # advisory 64m, the r15 verdict's item 5) was implemented and
-        # A/B-measured: ngram_jaccard_capped warm exec +30-45%
+        # size-respecting coalescing (parallelismFirst=false + advisory
+        # 64m) was implemented and A/B-measured: ngram_jaccard_capped
+        # warm exec +30-45%
         # (bytes-based coalescing serializes its compute-dense pair
         # join, whose shuffle is MB-scale but whose per-row work is the
         # real cost) and no measurable win anywhere else — the tiny-
         # stage task fan-out the scaling block shows lives in the
         # 32-partition INITIAL maps (checkpointed RDDs, parallelized
-        # scans), which AQE coalescing cannot touch. Rejected; details
-        # in OPTIMIZATION_r16.md.
+        # scans), which AQE coalescing cannot touch. Rejected.
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -88,8 +88,7 @@ def compact_parquet(
     floor manifest): the flat rewrite would erase the per-epoch
     partition dirs the replay exists-check depends on (exactly-once
     silently degrades to at-least-once) and the next append would
-    re-adopt the flat files as ``batch_id=-1`` with a colliding
-    physical ``batch_id`` column — an unreadable ledger. Use
+    refuse the ledger's root-level part files. Use
     :func:`compact_ledger_parquet`, which preserves both."""
     import math
     import os
@@ -154,14 +153,20 @@ def upsert_parquet(spark, path: str, updates: DataFrame, key_cols: list[str]) ->
 
 
 # --- versioned-dir + manifest-pointer commit protocol ------------------
-# Shared by the three persisted-index families (operators/bloom,
-# operators/neardup, operators/annindex): data versions land in fresh
-# `<family>_v{n}` dirs, a tiny JSON manifest names the current one, and
-# commits are a whole-file manifest replace — atomic on POSIX and on
-# object stores (single-object PUT), no directory-rename-atomicity
-# assumption anywhere. One implementation so the protocol can't drift
-# per family (r11 review: three copies had already grown three
-# legacy-name tuples).
+# Shared by the persisted-index families (operators/bloom,
+# operators/neardup, operators/mediaindex, operators/annindex): data
+# versions land in fresh `<family>_v{n}` dirs, a tiny JSON manifest
+# names the current one, and commits are a whole-file manifest replace
+# — atomic on POSIX and on object stores (single-object PUT), no
+# directory-rename-atomicity assumption anywhere. One implementation so
+# the protocol can't drift per family.
+#
+# Layout policy: a persisted index or ledger is read only in the layout
+# today's writers write. An index or ledger left by an older writer
+# (a manifest-less Bloom `filter/`+`meta/` dir, an index family
+# published by `_swap_dirs` with only `<dir>__old` on disk, a flat
+# ledger of root-level part files) is not upgraded or repaired in
+# place: rebuild it with the family's `write_*` function.
 
 
 def write_manifest_atomic(path: str, manifest: dict, filename: str = "manifest.json") -> None:
@@ -180,46 +185,26 @@ def write_manifest_atomic(path: str, manifest: dict, filename: str = "manifest.j
 
 
 def resolve_versioned_dir(path: str, mf: dict, family: str) -> str:
-    """The manifest-pointed current dir for a versioned table family
-    (key ``<family>_dir``; absent means the original unversioned
-    ``<family>`` dir — a pre-versioning manifest), tolerating the
-    legacy interrupted-``_swap_dirs`` crash state where only
-    ``<dir>__old`` survives: served DIRECTLY, never renamed from a
-    read path — a reader that mutates can race a legacy writer between
-    the two renames (r10 ADVICE). The durable repair belongs to the
-    family's single-writer update path."""
-    import os
-
-    cur = mf.get(f"{family}_dir", family)
-    full = os.path.join(path, cur)
-    if not os.path.exists(full) and os.path.exists(full + "__old"):
-        return full + "__old"
-    return full
+    """The manifest-pointed current dir for a versioned table family:
+    key ``<family>_dir``, absent until the family's first compaction or
+    rebuild, which means the unversioned ``<family>`` dir its first
+    build wrote (the near-dup and media tables, the ANN
+    centroids/codebooks)."""
+    return os.path.join(path, mf.get(f"{family}_dir", family))
 
 
-def gc_versioned_dirs(
-    path: str,
-    family: str,
-    keep_dir: str,
-    retain_dir: str | None,
-    extra_legacy: tuple[str, ...] = (),
-) -> None:
+def gc_versioned_dirs(path: str, family: str, keep_dir: str, retain_dir: str | None) -> None:
     """Best-effort cleanup of superseded ``<family>_v*`` dirs (and the
-    family's legacy unversioned/``__old``/``__compact`` leftovers)
-    after a manifest flip, with ONE-version retention: ``retain_dir`` —
-    the version the flip just superseded — stays until the NEXT flip so
-    in-flight reader frames (lazy scans under the previous manifest)
-    keep resolving (r10 ADVICE: immediate deletion broke them). Runs
-    after the flip, so a crash here only leaves garbage for the next
-    flip to retry."""
-    import os
-    import shutil
-
-    legacy = {family, f"{family}__compact", f"{family}__old", *extra_legacy}
+    unversioned ``<family>`` dir a first build wrote) after a manifest
+    flip, with ONE-version retention: ``retain_dir`` — the version the
+    flip just superseded — stays until the NEXT flip so in-flight reader
+    frames (lazy scans under the previous manifest) keep resolving;
+    immediate deletion broke them. Runs after the flip, so a crash here
+    only leaves garbage for the next flip to retry."""
     for name in os.listdir(path):
         if name == keep_dir or (retain_dir is not None and name == retain_dir):
             continue
-        if name.startswith(f"{family}_v") or name in legacy:
+        if name.startswith(f"{family}_v") or name == family:
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
 
 
@@ -267,14 +252,13 @@ def compact_ledger_parquet(
     contract: don't run concurrently with the stream's own epoch
     commits. Returns the new data-file count.
 
-    ``merge_history=True`` (r13 — the follow-on the r12 design note
-    licensed): epochs AT OR BELOW the floor — committed by definition,
-    their replay check consults the floor BEFORE any dir — collapse
-    into ONE ``batch_id=-2`` history partition, with per-row provenance
-    preserved in a new ``orig_batch_id`` data column (existing values
-    kept on re-merge; the adopted-legacy ``batch_id=-1`` partition
-    folds in as ``orig_batch_id=-1``). The whole ledger is rewritten in
-    the same pass, so EVERY file carries the column — no mixed-schema
+    ``merge_history=True``: epochs AT OR BELOW the floor — committed
+    by definition, their replay check consults the floor BEFORE any
+    dir — collapse into ONE ``batch_id=-2`` history partition, with
+    per-row provenance preserved in a new ``orig_batch_id`` data column
+    (existing values kept on re-merge, so a prior merge's ``-2`` rows
+    keep their epochs). The whole ledger is rewritten in the same
+    pass, so EVERY file carries the column — no mixed-schema
     reads — and the floor manifest records ``history_merged``, which
     makes :func:`append_once_parquet` stamp the column onto every
     subsequent epoch. This is the object-store dir-listing fix for a
@@ -284,7 +268,7 @@ def compact_ledger_parquet(
     covers merged epochs; dirs cover live ones).
 
     ``exclude`` (with ``exclude_on`` join keys) anti-joins rows OUT
-    during the rewrite — the KEPT-LEDGER physical-purge hook (r15): a
+    during the rewrite — the KEPT-LEDGER physical-purge hook: a
     takedown must leave the corpus-membership ledgers too, not just
     the indexes, and the compaction is the one moment the whole ledger
     is rewritten anyway. The per-epoch partition layout survives (an
@@ -326,24 +310,19 @@ def compact_ledger_parquet(
         )
         df = df.withColumn("orig_batch_id", orig.cast("long"))
         merged = True
-    if merge_history:
-        # negative partitions (the adopted-legacy -1, a prior merge's
-        # -2) collapse UNCONDITIONALLY — they are committed by
-        # construction, floor or no floor. Without this, a ledger whose
-        # only partition is batch_id=-1 (no non-negative epochs yet)
-        # would stamp history_merged while leaving -1 unmerged — the
-        # manifest claiming a layout the dirs don't have (r13 ADVICE).
-        cond = F.col("batch_id") < 0
-        if floor is not None:
-            cond = cond | (F.col("batch_id") <= floor)
+    if merge_history and floor is not None:
+        # every epoch at or below the floor is committed, a prior
+        # merge's -2 partition included (a -2 partition only exists
+        # under a floor >= 0)
         df = df.withColumn(
-            "batch_id", F.when(cond, F.lit(-2)).otherwise(F.col("batch_id"))
+            "batch_id",
+            F.when(F.col("batch_id") <= floor, F.lit(-2)).otherwise(F.col("batch_id")),
         )
     tmp = base_dir.rstrip("/") + "__compact"
     df.repartition(n_files, "batch_id").write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
     with open(os.path.join(tmp, _LEDGER_MANIFEST), "w") as fh:
         json.dump({**prior, "floor_batch_id": floor, "history_merged": merged}, fh)
-    # sidecars must survive the rewrite (r15): losing the kept-ledger
+    # sidecars must survive the rewrite: losing the kept-ledger
     # owner record would silently turn the canonical tombstone-filtered
     # read back into a plain one until the next epoch re-records it;
     # losing the purge-state record would erase the audit trail
@@ -380,9 +359,10 @@ def append_once_parquet(df: DataFrame, base_dir: str, batch_id: int) -> bool:
 
     Readers ``spark.read.parquet(base_dir)`` and see ``batch_id`` as an
     inferred partition column — per-batch provenance for free. A
-    pre-existing FLAT ledger (plain ``mode("append")`` part files at
-    the root) is adopted on first contact as the ``batch_id=-1``
-    partition, so upgraded streams keep their history readable. Scale:
+    FLAT ledger (plain ``mode("append")`` part files at the root, which
+    no writer here produces) raises ValueError: once the first
+    ``batch_id=`` dir lands beside them, partition discovery would throw
+    for the whole ledger. Scale:
     O(batch) per call (no read-modify-write of the accumulated ledger,
     unlike :func:`upsert_parquet`); the accumulated small per-batch
     files/dirs are :func:`compact_ledger_parquet`'s input — NOT
@@ -403,39 +383,19 @@ def append_once_parquet(df: DataFrame, base_dir: str, batch_id: int) -> bool:
     import shutil
 
     if batch_id < 0:
-        # -1 is the reserved adopted-legacy partition (below); any
-        # negative id would collide with it or read as one — and the
-        # exists-check would then silently DROP the caller's rows
-        raise ValueError(f"batch_id must be >= 0 (got {batch_id}); -1 is reserved")
-    # legacy upgrade: a pre-exactly-once ledger wrote flat part files at
-    # the root (mode("append")); mixed-depth parquet leaves would make
-    # partition discovery throw for the WHOLE ledger once the first
-    # batch_id= dir lands. Adopt them as batch_id=-1 (epoch unknown).
-    # Files move through a dot-prefixed staging dir (hidden from Spark
-    # file listings) and the partition appears via ONE rename, so a
-    # concurrent reader never sees mixed-depth leaves — during the
-    # one-time migration it sees a shrinking flat ledger, then the
-    # final layout (the brief all-moved instant can read as an empty
-    # ledger; single-writer streams don't race their own upgrade).
-    # Idempotent if interrupted: the next call resumes the moves and,
-    # if batch_id=-1 already exists, merges the stragglers into it.
-    if os.path.isdir(base_dir):
-        legacy = [f for f in os.listdir(base_dir) if f.startswith("part-")]
-        mig = os.path.join(base_dir, ".migrating__legacy")
-        if legacy or os.path.isdir(mig):
-            os.makedirs(mig, exist_ok=True)
-            for f in legacy:
-                os.replace(os.path.join(base_dir, f), os.path.join(mig, f))
-                crc = os.path.join(base_dir, f".{f}.crc")
-                if os.path.exists(crc):  # keep local-fs checksums paired
-                    os.replace(crc, os.path.join(mig, f".{f}.crc"))
-            legdir = os.path.join(base_dir, "batch_id=-1")
-            if not os.path.exists(legdir):
-                os.rename(mig, legdir)
-            else:  # resumed after a crash between rename and cleanup
-                for f in os.listdir(mig):
-                    os.replace(os.path.join(mig, f), os.path.join(legdir, f))
-                os.rmdir(mig)
+        # negative ids are reserved: -2 is the merged-history partition
+        # (compact_ledger_parquet merge_history), and a caller's epoch
+        # landing there would have its rows silently DROPPED by the
+        # exists-check
+        raise ValueError(
+            f"batch_id must be >= 0 (got {batch_id}); negative ids are reserved "
+            "(-2 is the merged-history partition)"
+        )
+    if os.path.isdir(base_dir) and any(f.startswith("part-") for f in os.listdir(base_dir)):
+        raise ValueError(
+            f"append_once_parquet: {base_dir} holds root-level part files — a flat "
+            "ledger, not an append_once_parquet one; rebuild it before appending"
+        )
     # committed-epoch checks: the compaction floor first (survives any
     # partition-dir rewrite), then the per-epoch dir itself
     merged = False
@@ -727,7 +687,8 @@ def tombstone_ledger_stats(spark, base_dir: str) -> dict:
 # owning family's tombstones (the load_*_index pattern, applied to the
 # ledger). Physical purge rides :func:`purge_kept_ledger` (the ledger
 # compaction with ``exclude=``). No tombstones → no join; a ledger
-# with no owner sidecar reads as plain parquet (pre-r15 ledgers).
+# with no owner sidecar (an append_once_parquet ledger that no
+# streaming loop in streaming/ingest.py wrote) reads as plain parquet.
 
 _KEPT_OWNER_FILENAME = ".kept_owner.json"
 
@@ -748,7 +709,7 @@ def record_kept_ledger_owner(kept_out: str, owners: list[dict]) -> None:
 
 def kept_ledger_owners(kept_out: str) -> list[dict]:
     """The recorded owner families for a kept ledger ([] when none —
-    a pre-r15 ledger or a non-streaming table)."""
+    a ledger that no streaming loop wrote, or a non-streaming table)."""
     import json
 
     p = os.path.join(kept_out, _KEPT_OWNER_FILENAME)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from lakehouse_spark_spark.operators.annindex import (
     ann_index_topk,
@@ -325,9 +326,10 @@ def test_compact_pointer_commit_crash_windows(spark, emb, tmp_path):
     index readable, answers unchanged, orphan GC'd later; (b) after a
     real compaction the superseded dir is RETAINED one cycle so
     in-flight reader frames keep resolving, and the next compaction
-    GCs it; (c) the legacy crash state (only cells__old on disk) is
-    served by the loader WITHOUT disk mutation and repaired by the
-    single-writer update path."""
+    GCs it; (c) a family whose current dir exists only as
+    ``<dir>__old`` (the state an interrupted ``_swap_dirs`` would leave;
+    no index writer publishes that way) fails to load instead of being
+    served or repaired — rebuild it with write_ann_index."""
     import json
     import os
     import shutil
@@ -370,20 +372,11 @@ def test_compact_pointer_commit_crash_windows(spark, emb, tmp_path):
         ann_index_topk(load_ann_index(spark, idx_path), probes, "embedding", k=5, n_probe=3)
     ) == want
 
-    # (c) legacy interrupted-_swap_dirs state: only cells_v2__old exists.
-    # The loader serves it directly (read path mutates nothing); the
-    # update path repairs it durably.
+    # (c) only cells_v2__old exists: the loader does not fall back to it
     os.rename(f"{idx_path}/cells_v2", f"{idx_path}/cells_v2__old")
-    rec = load_ann_index(spark, idx_path)
-    assert rec.cells_path.endswith("cells_v2__old")
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_ann_index(spark, idx_path)
     assert not os.path.exists(f"{idx_path}/cells_v2")  # reader left disk alone
-    assert _rows(ann_index_topk(rec, probes, "embedding", k=5, n_probe=3)) == want
-    b2 = batch.select((F.col("vec_id") + 90000).alias("vec_id"), "embedding")
-    update_ann_index(idx_path, b2, "embedding", batch_id=2)
-    assert os.path.isdir(f"{idx_path}/cells_v2")       # writer repaired the swap
-    assert not os.path.exists(f"{idx_path}/cells_v2__old")
-    got = ann_index_topk(load_ann_index(spark, idx_path), probes, "embedding", k=5, n_probe=3)
-    assert got.count() == 5 * 5  # search over the repaired + appended index works
 
 
 def test_distributed_probe_equals_collected_front(spark, emb, tmp_path):

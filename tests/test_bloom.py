@@ -511,15 +511,16 @@ class TestManifestCommit:
         on_disk = {r["content_hash"] for r in load_dedup_index(spark, path).hashes.collect()}
         assert {h for _, h in ledger0} <= on_disk  # ...and the fold completed
 
-    def test_legacy_layout_loads_and_upgrades(self, spark, corpus_batch, tmp_path):
-        """A pre-r10 index (filter/ + meta/ parquet, no manifest) must
-        load as-is, recover from an interrupted _swap_dirs (only
-        filter__old on disk — the r9 ADVICE gap), and upgrade to the
-        manifest layout on its first update."""
+    def test_manifestless_layout_is_refused(self, spark, corpus_batch, tmp_path):
+        """An index dir without manifest.json (here the older filter/ +
+        meta/ parquet layout, which no writer produces any more) is
+        neither read nor upgraded: the loader and the fold both raise a
+        ValueError naming the path and write_dedup_index, and the fold
+        leaves the dir untouched."""
         import os
 
-        corpus, batch = corpus_batch
-        path = str(tmp_path / "legacy_idx")
+        corpus, _ = corpus_batch
+        path = str(tmp_path / "manifestless_idx")
         hashes = (
             corpus.select(content_hash("text").alias("content_hash"))
             .filter("content_hash is not null")
@@ -529,40 +530,15 @@ class TestManifestCommit:
         stored = spark.read.parquet(f"{path}/hashes")
         bloom_build(stored, "content_hash", 1 << 20, 7).write.parquet(f"{path}/filter")
         spark.createDataFrame([(1 << 20, 7)], "m_bits long, k int").write.parquet(f"{path}/meta")
+        before = sorted(os.listdir(path))
 
-        idx = load_dedup_index(spark, path)
-        exact = _collect_sorted(dedup_against_corpus(batch, corpus, "doc_id", "text"))
-        assert _collect_sorted(
-            dedup_against_corpus_bloom(batch, None, "doc_id", "text", index=idx)
-        ) == exact
-
-        # interrupted-swap crash state: filter moved aside, never
-        # replaced. The READ path serves from the set-aside dir without
-        # mutating disk (r10 ADVICE: a loader rename races the writer)
-        os.rename(f"{path}/filter", f"{path}/filter__old")
-        idx_rec = load_dedup_index(spark, path)
-        assert not os.path.exists(f"{path}/filter")  # reader left disk alone
-        assert _collect_sorted(
-            dedup_against_corpus_bloom(batch, None, "doc_id", "text", index=idx_rec)
-        ) == exact
-
-        # first update REPAIRS the interrupted swap (the single-writer
-        # path owns disk mutation), adopts the manifest layout, and
-        # publishes v1; the superseded legacy dir is retained one cycle
-        # for in-flight readers and GC'd by the SECOND update
-        r1 = dedup_against_corpus_bloom(batch, None, "doc_id", "text", index=idx_rec)
-        kept1 = r1.filter("keep").select("content_hash").localCheckpoint(eager=True)
-        update_dedup_index(path, kept1)
-        import json
-        with open(os.path.join(path, "manifest.json")) as fh:
-            assert json.load(fh)["filter_dir"] == "filter_v1"
-        assert os.path.isdir(f"{path}/filter")       # retained for readers
-        assert not os.path.exists(f"{path}/filter__old")
-        update_dedup_index(path, kept1.limit(0))
-        with open(os.path.join(path, "manifest.json")) as fh:
-            assert json.load(fh)["filter_dir"] == "filter_v2"
-        assert os.path.isdir(f"{path}/filter_v1")    # new previous, retained
-        assert not os.path.exists(f"{path}/filter")  # two-generations-old: GC'd
+        with pytest.raises(ValueError, match="write_dedup_index") as ex:
+            load_dedup_index(spark, path)
+        assert path in str(ex.value)
+        with pytest.raises(ValueError, match="write_dedup_index") as ex:
+            update_dedup_index(path, stored.limit(3))
+        assert path in str(ex.value)
+        assert sorted(os.listdir(path)) == before  # no adoption, no manifest
 
 
 def test_run2_builder_reuses_one_fixture_slot(spark):
@@ -592,40 +568,25 @@ def test_run2_builder_reuses_one_fixture_slot(spark):
     assert Q._BLOOM_FIXTURE_DIRS[f"steady:{sf}"] == sd1
 
 
-def test_legacy_flat_ledger_adopted_on_upgrade(spark, corpus_batch, tmp_path):
-    """A pre-r11 stream left flat mode('append') part files at the
-    ledger root; the first exactly-once commit must adopt them as
-    batch_id=-1 instead of leaving mixed-depth leaves that make
-    partition discovery throw for the whole ledger."""
-    from lakehouse_spark_spark.streaming.ingest import bloom_ingest_foreach_batch
+def test_flat_ledger_refused(spark, corpus_batch, tmp_path):
+    """A flat ledger (plain mode('append') part files at the root, which
+    no writer here produces) is refused instead of adopted: a first
+    batch_id= dir beside root-level files would make partition
+    discovery throw for the whole ledger. Negative epochs stay
+    reserved (-2 is the merged-history partition)."""
+    import os
 
-    corpus, batch = corpus_batch
-    path = str(tmp_path / "lg_idx")
-    idx0 = write_dedup_index(corpus, "text", path)
-    kept_out = str(tmp_path / "lg_kept")
-    # the old layout: epoch rows appended flat
-    legacy = (
-        dedup_against_corpus_bloom(batch, None, "doc_id", "text", index=idx0)
-        .filter("keep")
-        .select("doc_id", "content_hash")
-        .localCheckpoint(eager=True)
-    )
-    legacy.write.mode("append").parquet(kept_out)
-    n_legacy = legacy.count()
-    assert n_legacy > 0
-    # post-upgrade: a NEW epoch of novel docs through the real body
-    b2 = batch.select(
-        (F.col("doc_id") + 900000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" upgraded-epoch-novel")).alias("text"),
-    )
-    fn = bloom_ingest_foreach_batch(path, "doc_id", "text", kept_out)
-    fn(b2, 1)
-    ledger = spark.read.parquet(kept_out)  # readable: one layout
-    assert ledger.filter("batch_id = -1").count() == n_legacy
-    assert ledger.filter("batch_id = 1").count() > 0
-    # -1 is the reserved adopted-legacy partition: a caller using it
-    # would silently lose rows to the exists-check, so it must throw
     from lakehouse_spark_spark.sources.sinks import append_once_parquet
 
+    corpus, _ = corpus_batch
+    kept_out = str(tmp_path / "flat_kept")
+    flat = corpus.select("doc_id").limit(5)
+    flat.write.mode("append").parquet(kept_out)
+    before = sorted(os.listdir(kept_out))
+    with pytest.raises(ValueError, match="root-level part files") as ex:
+        append_once_parquet(flat, kept_out, 0)
+    assert kept_out in str(ex.value)
+    assert sorted(os.listdir(kept_out)) == before  # nothing moved or committed
     with pytest.raises(ValueError, match="reserved"):
-        append_once_parquet(legacy, kept_out, -1)
+        append_once_parquet(flat, str(tmp_path / "fresh"), -2)
+

@@ -81,8 +81,9 @@ def test_compact_ledger_preserves_exactly_once(spark):
         before = sorted(
             (r["id"], r["tag"], r["batch_id"]) for r in spark.read.parquet(led).collect()
         )
-        # the flat compactor would flatten the partition dirs and poison
-        # the legacy-adoption path — it must refuse, loudly
+        # the flat compactor would flatten the partition dirs (erasing
+        # the per-epoch replay check, and the next append would refuse
+        # the root-level part files) — it must refuse, loudly
         try:
             compact_parquet(spark, led)
             raise AssertionError("compact_parquet accepted a ledger")

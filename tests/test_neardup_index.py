@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import AnalysisException
 
 from lakehouse_spark_spark.operators.neardup import (
     load_neardup_index,
@@ -346,9 +347,10 @@ def test_compact_pointer_commit_crash_windows(spark, docs, tmp_path):
     Windows: (a) fully-written next versions WITHOUT the flip — old
     index readable, answers unchanged; (b) after a real compaction the
     superseded dirs are RETAINED one cycle (in-flight readers), then
-    GC'd by the next; (c) the legacy crash state (only <dir>__old on
-    disk) is served by the loader WITHOUT disk mutation and repaired
-    by the single-writer update path."""
+    GC'd by the next; (c) a family whose current dir exists only as
+    ``<dir>__old`` (the state an interrupted ``_swap_dirs`` would leave;
+    no index writer publishes that way) fails to load instead of being
+    served or repaired — rebuild it with write_neardup_index."""
     import json
     import os
 
@@ -394,16 +396,12 @@ def test_compact_pointer_commit_crash_windows(spark, docs, tmp_path):
         )
     ) == want
 
-    # (c) legacy interrupted-_swap_dirs state on ONE family: only
-    # bands_v2__old exists. Loader serves it directly; update repairs.
+    # (c) only bands_v2__old exists on ONE family: the loader does not
+    # fall back to it
     os.rename(f"{idx_path}/bands_v2", f"{idx_path}/bands_v2__old")
-    rec = load_neardup_index(spark, idx_path)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_neardup_index(spark, idx_path)
     assert not os.path.exists(f"{idx_path}/bands_v2")  # reader left disk alone
-    assert _rows(neardup_candidates_against_index(b2, rec, "doc_id", "text")) == want
-    update_neardup_index(idx_path, b2, "doc_id", "text", batch_id=2)
-    assert os.path.isdir(f"{idx_path}/bands_v2")       # writer repaired the swap
-    assert not os.path.exists(f"{idx_path}/bands_v2__old")
-    assert load_neardup_index(spark, idx_path).bands.count() > 0
 
 
 def test_hot_bucket_cap_bounds_boilerplate_candidates(spark, docs, tmp_path):

@@ -212,9 +212,10 @@ def test_video_loop_quarantines_all_undecodable_clip(spark, tmp_path):
 
 
 def test_merge_history_collapses_negative_only_ledger(spark, tmp_path):
-    """Pinned ADVICE fix: merge_history on a ledger whose only
-    partition is the adopted batch_id=-1 must actually collapse it to
-    -2 (the manifest's history_merged claim has to match the layout)."""
+    """merge_history on a ledger whose only partition is an earlier
+    merge's batch_id=-2 keeps it a single -2 partition with each row's
+    original epoch, and the manifest still claims history_merged — the
+    claim has to match the layout."""
     import json
 
     from lakehouse_spark_spark.sources.sinks import (
@@ -223,21 +224,18 @@ def test_merge_history_collapses_negative_only_ledger(spark, tmp_path):
     )
 
     base = str(tmp_path / "led")
-    os.makedirs(base)
-    # legacy flat ledger → adopted as batch_id=-1 by the first append
-    spark.createDataFrame([(1,), (2,)], "v bigint").write.mode("append").parquet(base)
-    df = spark.createDataFrame([(3,)], "v bigint")
-    # trigger adoption without committing a real epoch: epoch 0 write,
-    # then remove it so only the adopted -1 partition remains
-    append_once_parquet(df, base, 0)
-    import shutil
-
-    shutil.rmtree(os.path.join(base, "batch_id=0"))
+    for e, vals in enumerate([(1, 2), (3,)]):
+        df = spark.createDataFrame([(v,) for v in vals], "v bigint")
+        assert append_once_parquet(df, base, e) is True
+    compact_ledger_parquet(spark, base, merge_history=True)
+    names = {n for n in os.listdir(base) if n.startswith("batch_id=")}
+    assert names == {"batch_id=-2"}  # the ledger is now negative-only
     compact_ledger_parquet(spark, base, merge_history=True)
     names = {n for n in os.listdir(base) if n.startswith("batch_id=")}
     assert names == {"batch_id=-2"}
     mf = json.load(open(os.path.join(base, ".ledger_manifest.json")))
-    assert mf["history_merged"] is True
-    got = spark.read.parquet(base)
-    assert sorted(r["v"] for r in got.collect()) == [1, 2]
-    assert set(r["orig_batch_id"] for r in got.collect()) == {-1}
+    assert mf["history_merged"] is True and mf["floor_batch_id"] == 1
+    got = sorted((r["v"], r["orig_batch_id"]) for r in spark.read.parquet(base).collect())
+    assert got == [(1, 0), (2, 0), (3, 1)]
+    # the merged epochs stay committed: replaying one is a no-op
+    assert append_once_parquet(spark.createDataFrame([(9,)], "v bigint"), base, 1) is False

@@ -565,36 +565,6 @@ def test_ann_rebuild_after_delete_keeps_vector_out(spark, tmp_path):
     assert os.path.isdir(tombstone_dir(path))
 
 
-def test_bloom_health_empty_for_pre_r14_manifest(spark, tmp_path):
-    """A manifest written before the health trail existed returns zero
-    health rows (no fake baselines) and maybe_rebuild is a no-op."""
-    import json as _json
-
-    from lakehouse_spark_spark.operators.bloom import (
-        bloom_build,
-        dedup_index_health,
-        maybe_rebuild_dedup_index,
-    )
-    from lakehouse_spark_spark.sources.sinks import write_manifest_atomic
-
-    path = str(tmp_path / "legacy")
-    docs = _docs(spark, [(i, f"lg {i}") for i in range(5)])
-    hashes = docs.select(F.xxhash64("text").cast("string").alias("content_hash"))
-    hashes.write.mode("overwrite").parquet(f"{path}/hashes")
-    bloom_build(hashes, "content_hash", 1 << 12, 4).write.mode("overwrite").parquet(
-        f"{path}/filter_v1"
-    )
-    # pre-r14 manifest shape: no health record
-    write_manifest_atomic(
-        path,
-        {"format": 2, "filter_dir": "filter_v1", "m_bits": 1 << 12, "k": 4,
-         "last_batch_id": None},
-    )
-    assert dedup_index_health(spark, path).count() == 0
-    rebuilt, _ = maybe_rebuild_dedup_index(spark, path)
-    assert not rebuilt
-
-
 def test_add_tombstones_auto_epoch_and_exactly_once(spark, tmp_path):
     base = str(tmp_path / "fam")
     os.makedirs(base)

@@ -14,10 +14,8 @@ driver's exact per-query format ({rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}; designed rows-only entries get
 {rows_match: true, note: "no_oracle", err: null} so `err` carries only
 real failures),
-one map per sf dir keyed by the dir's sf tag — the committed artifact
-(CORRECTNESS_LOCAL_r{N}.json) that lets the grading loop diff the whole
-registry round-over-round, since the driver's own gate covers a frozen
-50-query subset. A strict local pass (exact sorted values) implies the
+one map per sf dir keyed by the dir's sf tag, so two runs of the whole
+registry can be diffed. A strict local pass (exact sorted values) implies the
 driver's hash gate passes.
 """
 

@@ -153,7 +153,6 @@ def lint_df(df) -> dict[str, list[str]]:
     _walk(phys, pvisit)
     # Shuffle count comes from the formatted EXPLAIN string (sparkPlan()
     # predates EnsureRequirements, so it carries no Exchange nodes yet)
-    # — the same basis tools/plan_report.py reports in PLANS.md.
     jvm = df.sparkSession._jvm
     tree = qe.explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
