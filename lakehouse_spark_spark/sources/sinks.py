@@ -185,11 +185,11 @@ def write_manifest_atomic(path: str, manifest: dict, filename: str = "manifest.j
 
 
 def resolve_versioned_dir(path: str, mf: dict, family: str) -> str:
-    """The manifest-pointed current dir for a versioned table family:
-    key ``<family>_dir``, absent until the family's first compaction or
-    rebuild, which means the unversioned ``<family>`` dir its first
-    build wrote (the near-dup and media tables, the ANN
-    centroids/codebooks)."""
+    """The manifest-pointed current dir for a versioned table family
+    (key ``<family>_dir``). Until the family's first compaction or
+    rebuild there is no such key, and the current dir is the
+    unversioned ``<family>`` dir its first build wrote (the near-dup
+    and media tables, the ANN centroids/codebooks)."""
     return os.path.join(path, mf.get(f"{family}_dir", family))
 
 
