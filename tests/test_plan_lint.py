@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo/tools")
 
-from plan_lint import NLJ_WHITELIST, WINDOW_WHITELIST, lint_df, lint_registry  # noqa: E402
+from plan_lint import (  # noqa: E402
+    NLJ_WHITELIST,
+    WINDOW_WHITELIST,
+    judge_lints,
+    lint_built,
+    lint_df,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -58,8 +64,17 @@ def test_linter_flags_nonscalar_bnlj(spark):
 
 
 @pytest.mark.slow
-def test_full_registry_plan_lint(spark):
-    violations, stale, errors = lint_registry(spark, SF)
+def test_full_registry_plan_lint(spark, registry_lints):
+    """Every registry query's plan, linted as lint_registry does. The
+    oracle tests record the lint of each frame they build; a query they
+    did not build here is built and linted now."""
+    from lakehouse_spark_spark.plans import queries as Q
+
+    results = {
+        name: registry_lints[name] if name in registry_lints else lint_built(lambda b=b: b(spark, SF))
+        for name, b in Q.queries().items()
+    }
+    violations, stale, errors = judge_lints(results)
     assert errors == {}, errors
     assert stale == [], f"stale whitelist entries (pattern gone — remove): {stale}"
     assert violations == {}, violations

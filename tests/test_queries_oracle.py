@@ -7,6 +7,7 @@ import pytest
 
 from tests.conftest import SF_SMALL
 from tools.compare_oracle import compare_one, load_duckdb
+from tools.plan_lint import lint_built
 
 from lakehouse_spark_spark.plans.queries import registry
 
@@ -17,9 +18,10 @@ def duck():
 
 
 @pytest.mark.parametrize("name", sorted(registry()))
-def test_query_matches_oracle(spark, duck, name):
+def test_query_matches_oracle(spark, duck, registry_lints, name):
     q = registry()[name]
     df = q.builder(spark, SF_SMALL)
+    registry_lints[name] = lint_built(lambda: df)  # before df runs
     if q.oracle is None:
         assert df.count() >= 0  # rows-only contract
         return

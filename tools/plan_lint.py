@@ -202,16 +202,31 @@ def lint_registry(spark, sf_dir: str, names: list[str] | None = None):
     from lakehouse_spark_spark.plans import queries as Q
 
     qs = Q.queries()
-    names = names or list(qs)
+    return judge_lints(
+        {name: lint_built(lambda name=name: qs[name](spark, sf_dir)) for name in names or qs}
+    )
+
+
+def lint_built(build) -> dict[str, list[str]] | str:
+    """:func:`lint_df` of the frame ``build()`` returns, or the repr of
+    what building or linting it raised. Lint a frame before it runs: the
+    formatted EXPLAIN of an executed adaptive plan holds its final plan
+    as well as its initial one, so the shuffle count would double."""
+    try:
+        return lint_df(build())
+    except Exception as e:  # noqa: BLE001
+        return repr(e)
+
+
+def judge_lints(results: dict[str, dict[str, list[str]] | str]):
+    """Apply the whitelists to per-query :func:`lint_built` results;
+    returns (violations, stale_whitelist, errors)."""
     violations: dict[str, dict] = {}
     flagged_ok: set[str] = set()
     errors: dict[str, str] = {}
-    for name in names:
-        try:
-            df = qs[name](spark, sf_dir)
-            issues = lint_df(df)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = repr(e)
+    for name, issues in results.items():
+        if isinstance(issues, str):
+            errors[name] = issues
             continue
         win = issues.get("unpartitioned_window")
         nlj = issues.get("nested_loop_join")
@@ -237,7 +252,7 @@ def lint_registry(spark, sf_dir: str, names: list[str] | None = None):
     stale = [
         n
         for n in (set(WINDOW_WHITELIST) | set(NLJ_WHITELIST))
-        if n in set(names) and n not in flagged_ok
+        if n in results and n not in flagged_ok
     ]
     return violations, stale, errors
 
