@@ -1,18 +1,19 @@
 """Persisted IVF-PQ ANN index: similarity search as O(batch + index).
 
-The r9 Bloom / r10 near-dup persistence template applied to the ANN
-family (r9 verdict task 1). ``operators/similarity.py`` holds the
-in-plan IVF-PQ machinery (train/encode/search in one query — every
-call retrains codebooks and re-encodes the corpus); this module makes
-the index a first-class on-disk artifact:
+The Bloom and near-dup index persistence template applied to the ANN
+family. ``operators/similarity.py`` holds the in-plan IVF-PQ machinery
+(train/encode/search in one query — every call retrains the model and
+re-encodes the corpus); this module makes the index a first-class
+on-disk artifact:
 
 - MODEL: the coarse centroids (n_cells × dim) and residual PQ
-  codebooks (m × k × dim/m) as two KB-sized parquet tables — trained
-  once on a bounded sample (similarity.train_ivfpq's determinism
-  contract), FROZEN thereafter. Freezing is the standard IVF-PQ ingest
-  shape (FAISS's add-with-trained-index): new vectors are encoded
-  against the existing model; retraining is a periodic offline rebuild,
-  not an ingest-path operation.
+  codebooks (m × k × dim/m) as two KB-sized parquet tables, trained
+  once by ``similarity.train_ivfpq`` (one bounded driver sample, one
+  deterministic numpy k-means kernel: the same corpus gives the same
+  model on any host and partitioning), FROZEN thereafter. Freezing is
+  the standard IVF-PQ ingest shape (FAISS's add-with-trained-index):
+  new vectors are encoded against the existing model; retraining is a
+  periodic offline rebuild, not an ingest-path operation.
 - CELLS: the coded corpus as parquet PARTITIONED BY the coarse cell id,
   columns (id, codes, vec). Partitioning is the IO story: a search
   probing n_probe cells reads ONLY those cells' files (partition
@@ -320,7 +321,6 @@ def write_ann_index(
     n_cells: int = 16,
     m: int = 8,
     k: int = 16,
-    seed: int = 42,
     max_train_rows: int = 50_000,
     *,
     model: tuple[list[list[float]], list[list[list[float]]]] | None = None,
@@ -360,7 +360,7 @@ def write_ann_index(
         n_cells, m, k = len(cents), len(books), len(books[0])
     else:
         cents, books = train_ivfpq(
-            corpus, vec_col, n_cells=n_cells, m=m, k=k, seed=seed, max_train_rows=max_train_rows
+            corpus, vec_col, n_cells=n_cells, m=m, k=k, max_train_rows=max_train_rows
         )
     _encode_with_vec(corpus, id_col, vec_col, cents, books).write.mode(
         "overwrite"
@@ -606,7 +606,6 @@ def rebuild_ann_index(
     spark: SparkSession,
     path: str,
     n_cells: int | None = None,
-    seed: int = 42,
     max_train_rows: int = 50_000,
     panel_n: int | None = None,
     panel_k: int | None = None,
@@ -659,7 +658,7 @@ def rebuild_ann_index(
             n_cells = int(mf["n_cells"]) * 2
     m, k = int(mf["m"]), int(mf["k"])
     cents, books = train_ivfpq(
-        corpus, "vec", n_cells=n_cells, m=m, k=k, seed=seed, max_train_rows=max_train_rows
+        corpus, "vec", n_cells=n_cells, m=m, k=k, max_train_rows=max_train_rows
     )
 
     # current dir per family, as a READER resolves it: cells/centroids/

@@ -11,9 +11,10 @@ query set is small enough to broadcast (it is here: broadcast join, no
 shuffle of the corpus). For corpus×corpus near-dup at 100 TB use the
 LSH variant: signatures are a narrow map, candidate generation is an
 equi-join on (plane-sign bucket), and only in-bucket pairs pay the
-exact-cosine cost. An IVF layout (k-means coarse quantizer) would slot
-in the same way — bucket id join key — once a trained centroid table
-exists.
+exact-cosine cost. The IVF layouts (``ivf_topk``, ``semantic_dedup``,
+IVF-PQ) slot in the same way with the cell id as the join key; their
+k-means models are fit on the driver over one bounded sample by one
+numpy kernel (``_pq_codebooks_np``).
 """
 
 from __future__ import annotations
@@ -207,35 +208,74 @@ def embedding_neardup_lsh_verified(
     )
 
 
+# fixed, so a k-means fit is a function of the corpus alone
+_TRAIN_SAMPLE_SEED = 42
+
+
+def _vector_matrix(vecs: pd.Series, vec_col: str):
+    """Collected vectors as an N × dim float64 matrix; an empty sample
+    or a null vector fails here, naming the column."""
+    import numpy as np
+
+    if vecs.empty:
+        raise ValueError(f"no {vec_col!r} vectors to train on")
+    if vecs.isna().any():
+        raise ValueError(f"null vector in {vec_col!r}")
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+
+
+def _train_sample(corpus: DataFrame, vec_col: str, max_train_rows: int):
+    """The bounded driver sample every IVF fit trains on: the whole
+    corpus when it has at most ``max_train_rows`` rows (one ``limit``
+    read, which also answers the size question without a count job),
+    otherwise a seeded Bernoulli sample (20% headroom over the counted
+    fraction) cut to ``max_train_rows``. Rows come back sorted, because
+    Lloyd sums each mean in row order and the collected order follows
+    the partitioning."""
+    import numpy as np
+
+    vecs = corpus.select(vec_col)
+    sample = vecs.limit(max_train_rows + 1).toPandas()[vec_col]
+    if len(sample) > max_train_rows:
+        fraction = min(1.0, 1.2 * max_train_rows / corpus.count())
+        sample = vecs.sample(fraction=fraction, seed=_TRAIN_SAMPLE_SEED).limit(max_train_rows).toPandas()[vec_col]
+    X = _vector_matrix(sample, vec_col)
+    return X[np.lexsort(X.T[::-1])]
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     vec_col: str,
     n_cells: int = 16,
-    seed: int = 42,
     max_train_rows: int = 100_000,
 ) -> list[list[float]]:
-    """Fit the IVF coarse quantizer on a BOUNDED sample of the corpus
-    and return the centroid table (n_cells × dim plain floats).
+    """Fit the IVF coarse quantizer and return the centroid table
+    (n_cells × dim plain floats): the library's one k-means kernel
+    (:func:`_pq_codebooks_np` at ``m=1``) over at most
+    ``max_train_rows`` vectors on the driver (:func:`_train_sample`).
+    Deterministic across hosts and partitionings; ``n_cells`` rows even
+    when the sample holds fewer distinct vectors (centroids repeat).
+    Train once, reuse: pass the result to ``ivf_topk``'s ``centroids``
+    argument across queries."""
+    return _pq_codebooks_np(_train_sample(corpus, vec_col, max_train_rows), m=1, k=n_cells)[0]
 
-    The fit job never reads more than ~``max_train_rows`` vectors: the
-    sampling fraction comes from the corpus row count (parquet
-    row-group stats — no data scan), with 20% headroom then a hard
-    ``limit``. k-means centroid quality is statistically insensitive to
-    fitting on a sample this size, while fitting on the full corpus at
-    100 TB would be a full MLlib job before the first candidate is
-    generated. Train once, reuse: pass the result to ``ivf_topk``'s
-    ``centroids`` argument across queries (the production layout keeps
-    it as a tiny table next to the corpus)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
 
-    n = corpus.count()
-    sampled = corpus
-    if n > max_train_rows:
-        sampled = corpus.sample(fraction=min(1.0, 1.2 * max_train_rows / n), seed=seed).limit(max_train_rows)
-    train = sampled.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(train)
-    return [list(map(float, c)) for c in model.clusterCenters()]
+def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
+    """Indices of the ``n`` centroids nearest to ``vec`` (squared L2 in
+    doubles), nearest first, ties to the lower index."""
+    dists = F.array(
+        *[
+            F.aggregate(
+                F.zip_with(vec, F.array(*[F.lit(x) for x in c]), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            )
+            for c in centroids
+        ]
+    )
+    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
+    pairs = F.zip_with(dists, idx, lambda dist, i: F.struct(dist.alias("d"), i.alias("i")))
+    return F.slice(F.transform(F.array_sort(pairs), lambda s: s["i"]), 1, n)
 
 
 def ivf_topk(
@@ -246,7 +286,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 2,
-    seed: int = 42,
     centroids: list[list[float]] | None = None,
     max_train_rows: int = 100_000,
 ) -> DataFrame:
@@ -263,32 +302,13 @@ def ivf_topk(
     vectors regardless of corpus size).
     """
     if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed, max_train_rows=max_train_rows)
-
-    def cell_scores(vec: Column) -> Column:
-        # negative squared L2 distance to each centroid (argmax = nearest)
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(vec, F.array(*[F.lit(x) for x in c]), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                for c in centroids
-            ]
-        )
-
-    def nearest_cells(vec: Column, n: int) -> Column:
-        d = cell_scores(vec)
-        idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-        pairs = F.zip_with(d, idx, lambda dist, i: F.struct(dist.alias("d"), i.alias("i")))
-        return F.slice(F.transform(F.array_sort(pairs), lambda s: s["i"]), 1, n)
+        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, max_train_rows=max_train_rows)
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")).withColumn(
-        "cell", F.element_at(nearest_cells(F.col("__cv"), 1), 1)
+        "cell", F.element_at(_nearest_cells(F.col("__cv"), centroids, 1), 1)
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).withColumn(
-        "cell", F.explode(nearest_cells(F.col("__qv"), n_probe))
+        "cell", F.explode(_nearest_cells(F.col("__qv"), centroids, n_probe))
     )
     pairs = c.join(F.broadcast(q), "cell").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select("query_id", "neighbor_id", F.round(cosine("__qv", "__cv"), 6).alias("cosine_sim"))
@@ -302,7 +322,6 @@ def semantic_dedup(
     vec_col: str,
     threshold: float = 0.95,
     n_cells: int = 16,
-    seed: int = 42,
     centroids: list[list[float]] | None = None,
     max_train_rows: int = 100_000,
 ) -> DataFrame:
@@ -340,32 +359,13 @@ def semantic_dedup(
     regimes — see the streaming docstring's mirror note.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, seed=seed, max_train_rows=max_train_rows)
-
-    def nearest_cell(vec: Column) -> Column:
-        d = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(x) for x in c]),
-                        lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                for c in centroids
-            ]
-        )
-        idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-        pairs = F.zip_with(d, idx, lambda dist, i: F.struct(dist.alias("d"), i.alias("i")))
-        return F.element_at(F.transform(F.array_sort(pairs), lambda s: s["i"]), 1)
+        centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, max_train_rows=max_train_rows)
 
     assigned = corpus.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("cell", nearest_cell(F.col("__v"))).withColumn("__n", l2_norm("__v")).localCheckpoint(
-        eager=False
-    )
+    ).withColumn("cell", F.element_at(_nearest_cells(F.col("__v"), centroids, 1), 1)).withColumn(
+        "__n", l2_norm("__v")
+    ).localCheckpoint(eager=False)
     a = assigned.select(F.col("__id").alias("id_a"), "cell", F.col("__v").alias("__va"), F.col("__n").alias("__na"))
     b = assigned.select(F.col("__id").alias("id_b"), "cell", F.col("__v").alias("__vb"), F.col("__n").alias("__nb"))
     witnesses = (
@@ -442,29 +442,38 @@ def train_pq_codebooks(
     ``m`` small codes (m bytes at k≤256) instead of 4·dim float bytes —
     the RAM math that makes billion-vector ANN possible.
 
-    Training is DRIVER-SIDE numpy Lloyd iterations on a BOUNDED sample
-    (same discipline as :func:`train_ivf_centroids`): deterministic —
-    farthest-point (k-center) initialization from the first sample
-    subvector, a fixed ``iters`` Lloyd steps, no RNG anywhere — so
-    encode results are reproducible across runs and engines. Returns
-    ``m × k × (dim/m)`` plain floats (a few KB; broadcast it).
+    Training runs the library's one k-means kernel
+    (:func:`_pq_codebooks_np`) over the first ``max_train_rows``
+    vectors on the driver; no RNG anywhere, so encode results are
+    reproducible across runs and engines. Returns ``m × k × (dim/m)``
+    plain floats (a few KB; broadcast it).
     """
+    sample = corpus.select(vec_col).limit(max_train_rows).toPandas()[vec_col]
+    return _pq_codebooks_np(_vector_matrix(sample, vec_col), m=m, k=k, iters=iters)
+
+
+_DIST_BLOCK_ELEMS = 1 << 22  # a distance block's rows × k × d temporary: 32 MB of float64
+
+
+def _nearest_rows(S, cents):
+    """Index of the nearest row of ``cents`` (squared L2) for each row
+    of ``S``, in row blocks; each distance sums the same elements in the
+    same order as the unblocked N × k × d form."""
     import numpy as np
 
-    sample = corpus.select(vec_col).limit(max_train_rows).toPandas()[vec_col]
-    X = np.asarray([np.asarray(v, dtype=np.float64) for v in sample])
-    return _pq_codebooks_np(X, m=m, k=k, iters=iters)
+    rows = max(1, _DIST_BLOCK_ELEMS // (len(cents) * S.shape[1]))
+    blocks = range(0, max(len(S), 1), rows)  # one empty block when N = 0
+    return np.concatenate(
+        [((S[i : i + rows, None] - cents[None]) ** 2).sum(axis=2).argmin(axis=1) for i in blocks]
+    )
 
 
 def _pq_codebooks_np(X, m: int = 8, k: int = 16, iters: int = 10) -> list[list[list[float]]]:
-    """The numpy Lloyd body of :func:`train_pq_codebooks`, callable
-    directly on a sample matrix already in driver memory —
-    :func:`train_ivfpq` has the residual matrix in hand and used to
-    round-trip it through createDataFrame → limit → toPandas just to
-    reach this loop (one whole Spark job per training call for data
-    that never left the driver). Bit-identical output for the same X
-    (row order is preserved by the createDataFrame/limit path, so the
-    two entries train the same books)."""
+    """The library's one k-means kernel: ``k`` centroids in each of
+    ``m`` contiguous subspaces of the driver matrix ``X`` (N × dim).
+    ``m=1`` is plain k-means (the IVF quantizer); ``m>1`` trains PQ
+    codebooks. Deterministic farthest-point init, ``iters`` Lloyd
+    steps; memory stays bounded at any N (:func:`_nearest_rows`)."""
     import numpy as np
 
     dim = X.shape[1]
@@ -488,8 +497,7 @@ def _pq_codebooks_np(X, m: int = 8, k: int = 16, iters: int = 10) -> list[list[l
         if len(cents) < k:  # degenerate corpora: pad by repeating
             cents = np.vstack([cents] * ((k // max(len(cents), 1)) + 1))[:k]
         for _ in range(iters):
-            d2 = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
+            assign = _nearest_rows(S, cents)
             for c in range(k):
                 mask = assign == c
                 if mask.any():
@@ -598,10 +606,19 @@ def pq_adc_topk_reranked(
     deterministic tie-break.
     """
     sl = pq_adc_topk(corpus_codes, queries, id_col, vec_col, codebooks, k=shortlist)
+    return _exact_rerank(sl, corpus, queries, id_col, vec_col, k)
+
+
+def _exact_rerank(
+    shortlist: DataFrame, corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Top ``k`` of a (query_id, neighbor_id) shortlist by exact
+    :func:`sq_dist`, vectors re-attached by id, tie-break on neighbor
+    id. Returns (query_id, neighbor_id, sq_dist, rank)."""
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
     exact = (
-        sl.select("query_id", "neighbor_id")
+        shortlist.select("query_id", "neighbor_id")
         .join(F.broadcast(q), "query_id")
         .join(c, "neighbor_id")
         .select("query_id", "neighbor_id", sq_dist().alias("sq_dist"))
@@ -714,7 +731,6 @@ def train_ivfpq(
     n_cells: int = 16,
     m: int = 8,
     k: int = 16,
-    seed: int = 42,
     max_train_rows: int = 50_000,
     iters: int = 10,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
@@ -723,25 +739,17 @@ def train_ivfpq(
     the RESIDUAL (vector − its cell centroid) — residuals concentrate
     near zero, so the same code budget buys far less distortion than
     quantizing raw vectors. Returns (centroids, codebooks); both are
-    KB-sized driver tables that broadcast with the plan. Training reads
-    one bounded sample (numpy, deterministic — same contracts as
-    ``train_ivf_centroids`` / ``train_pq_codebooks``)."""
+    KB-sized driver tables that broadcast with the plan. Both train on
+    ONE bounded driver sample (:func:`_train_sample`) with one kernel
+    (:func:`_pq_codebooks_np`): the centroids at ``m=1``, then the books
+    on that sample's residuals. Deterministic across hosts and
+    partitionings; under the cap the Spark work is one collect."""
     import numpy as np
 
-    cents = train_ivf_centroids(
-        corpus, vec_col, n_cells=n_cells, seed=seed, max_train_rows=max_train_rows
-    )
-    C = np.asarray(cents, dtype=np.float64)
-    sample = corpus.select(vec_col).limit(max_train_rows).toPandas()[vec_col]
-    X = np.asarray([np.asarray(v, dtype=np.float64) for v in sample])
-    assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    resid = X - C[assign]
-    # r15: the residual matrix is already on the driver — train the
-    # codebooks directly (_pq_codebooks_np) instead of round-tripping
-    # it through createDataFrame → limit → toPandas (one Spark job per
-    # training call for driver-local data). Same X row order, so the
-    # books are bit-identical to the r14 path.
-    books = _pq_codebooks_np(resid, m=m, k=k, iters=iters)
+    X = _train_sample(corpus, vec_col, max_train_rows)
+    cents = _pq_codebooks_np(X, m=1, k=n_cells, iters=iters)[0]
+    C = np.asarray(cents)
+    books = _pq_codebooks_np(X - C[_nearest_rows(X, C)], m=m, k=k, iters=iters)
     return cents, books
 
 
@@ -822,14 +830,4 @@ def ivfpq_topk(
     scored = cand.select("query_id", "neighbor_id", adc_dist(m, kk).alias("adc_dist"))
     w_sl = Window.partitionBy("query_id").orderBy(F.col("adc_dist").asc(), F.col("neighbor_id"))
     sl = scored.withColumn("__r", F.row_number().over(w_sl)).filter(F.col("__r") <= shortlist)
-
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    exact = (
-        sl.select("query_id", "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select("query_id", "neighbor_id", sq_dist().alias("sq_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sq_dist").asc(), F.col("neighbor_id"))
-    return exact.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_rerank(sl, corpus, queries, id_col, vec_col, k)

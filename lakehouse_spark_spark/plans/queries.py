@@ -3233,7 +3233,7 @@ def customers_with_big_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "IVF ANN: k-means coarse quantizer (fit on a bounded <=100k-row "
         "sample; accepts pre-trained centroids), probe 4 of 16 cells. "
         "NOTE: the synthetic embeddings are near-uniform random — IVF's "
-        "worst case — so recall@5 is ~0.5-0.7 here; on real clustered "
+        "worst case — so recall@5 is ~0.5-0.6 here; on real clustered "
         "embeddings the same shape reaches >0.9"
     ),
 )
@@ -6916,9 +6916,9 @@ def brand_qty_price_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ==========================================================================
 # LLM-data: SemDeDup (operators/similarity.semantic_dedup; Abbas et al.
 # 2023) — k-means cells + exact within-cell cosine, pairwise-witness
-# drop rule. Rows-only: the quantizer (MLlib k-means on a bounded
-# sample) is not SQL-expressible; soundness (every dropped doc has a
-# true cosine>=τ witness) and planted-pair recall are pinned by
+# drop rule. Rows-only: the quantizer (numpy k-means on a bounded
+# driver sample) is not SQL-expressible; soundness (every dropped doc
+# has a true cosine>=τ witness) and planted-pair recall are pinned by
 # tests/test_retrieval_spandedup.py::TestSemanticDedup.
 # ==========================================================================
 @register(

@@ -47,7 +47,7 @@ def test_ivf_recall_on_clustered_vectors(spark):
         (r["query_id"], r["neighbor_id"])
         for r in cosine_topk(corpus, queries, "vec_id", "embedding", k=5, exclude_self=False).collect()
     }
-    cents = train_ivf_centroids(corpus, "embedding", n_cells=N_BLOBS, seed=7)
+    cents = train_ivf_centroids(corpus, "embedding", n_cells=N_BLOBS)
 
     def recall(n_probe: int) -> float:
         got = {

@@ -257,10 +257,10 @@ def test_ivf_sampled_fit_bounded_and_recall(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 20)
 
-    # deterministic + bounded: same seed -> same centroids, even when the
-    # corpus exceeds the training cap (forces the sample+limit path)
-    c_small = train_ivf_centroids(emb, "embedding", n_cells=8, seed=7, max_train_rows=200)
-    c_small2 = train_ivf_centroids(emb, "embedding", n_cells=8, seed=7, max_train_rows=200)
+    # deterministic + bounded: two fits give the same centroids, even when
+    # the corpus exceeds the training cap (forces the sample+limit path)
+    c_small = train_ivf_centroids(emb, "embedding", n_cells=8, max_train_rows=200)
+    c_small2 = train_ivf_centroids(emb, "embedding", n_cells=8, max_train_rows=200)
     assert c_small == c_small2
     assert len(c_small) == 8 and len(c_small[0]) == len(emb.first()["embedding"])
 
@@ -272,7 +272,7 @@ def test_ivf_sampled_fit_bounded_and_recall(spark):
         got = {(r["query_id"], r["neighbor_id"]) for r in result_df.collect()}
         return len(exact & got) / len(exact)
 
-    c_full = train_ivf_centroids(emb, "embedding", n_cells=8, seed=7, max_train_rows=10_000_000)
+    c_full = train_ivf_centroids(emb, "embedding", n_cells=8, max_train_rows=10_000_000)
     r_full = recall(ivf_topk(emb, queries, "vec_id", "embedding", k=5, n_probe=4, centroids=c_full))
     r_sampled = recall(ivf_topk(emb, queries, "vec_id", "embedding", k=5, n_probe=4, centroids=c_small))
     # uniform-random vectors are IVF's worst case; sampled fit must stay

@@ -219,7 +219,7 @@ class TestSemanticDedup:
         )
 
         df = self._clustered(spark)
-        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.999, n_cells=3, seed=1)
+        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.999, n_cells=3)
         dropped = {(r["vec_id"], r["dup_of"]) for r in out.filter(~F.col("kept")).collect()}
         truth = {
             (r["id_b"], r["id_a"])
@@ -232,7 +232,7 @@ class TestSemanticDedup:
         from lakehouse_spark_spark.operators.similarity import semantic_dedup
 
         df = self._clustered(spark)
-        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.99, n_cells=3, seed=1)
+        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.99, n_cells=3)
         kept = [r["vec_id"] for r in out.filter(F.col("kept")).collect()]
         # 0.01-sigma noise => in-blob cosine ~0.999; with one cell per
         # blob each blob keeps exactly its min id
@@ -247,7 +247,7 @@ class TestSemanticDedup:
         rng = np.random.default_rng(11)
         rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(40)]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.95, n_cells=4, seed=2)
+        out = semantic_dedup(df, "vec_id", "embedding", threshold=0.95, n_cells=4)
         assert out.filter(~F.col("kept")).count() == 0
 
 
