@@ -29,3 +29,22 @@ def test_medallion_job_matches_planted_answers(spark, tmp_path, monkeypatch, sca
     wrong["row_counts"]["fact_parts_sales"] += 1
     assert checks.check_medallion(out, wrong) is not None
     assert checks.check_medallion(dict(out, revenue_90d=out["revenue_90d"][1:]), wl.expected) is not None
+
+
+def _janino_compiles(spark) -> int:
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_medallion_op_reuses_its_generated_classes(spark, tmp_path, monkeypatch):
+    """A repeated medallion op compiles no new Java class: every
+    whole-stage codegen class it needs is still in Spark's codegen cache
+    from the first run (get_session sizes that cache above the working
+    set; at Spark's default of 100 the second run recompiles dozens)."""
+    monkeypatch.setattr(workloads, "MEDALLION_SCALE", 1)
+    wl = workloads.MedallionWorkload()
+    wl.generate(seed=7, data_dir=str(tmp_path))
+    op = wl.ops[0]
+    assert wl.check(op, wl.run_op(spark, op, Tracer(False))) is None
+    before = _janino_compiles(spark)
+    assert wl.check(op, wl.run_op(spark, op, Tracer(False))) is None
+    assert _janino_compiles(spark) - before == 0
