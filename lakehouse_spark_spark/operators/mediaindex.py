@@ -17,8 +17,8 @@ signature table's twin).
 
 Per-batch ingest cost is O(batch + index): the accumulated corpus is
 never re-decoded, never re-hashed, never re-read — decode+hash runs
-once per asset at ITS arrival (dhash_images / phash_images / afp_audio
-upstream of the fold), exactly what a training-data pipeline ingesting
+once per asset at ITS arrival (image_hashes / audio_hashes upstream
+of the fold), exactly what a training-data pipeline ingesting
 media continuously needs. At 100 TB of media the decode is the
 dominant cost by orders of magnitude, which is why the one-shot
 operators (operators/multimodal.image_neardup_*) are the wrong shape
@@ -119,7 +119,7 @@ def write_media_fp_index(
     """One-time index construction from an (id, fingerprint) frame —
     the ONLY operation that sees the initial corpus (whose
     fingerprints the caller computed with its modality's hasher:
-    dhash_images / phash_images / afp_audio / frame-level pHash).
+    a column of image_hashes / audio_hashes, or frame-level pHash).
     NULL fingerprints (undecodable payloads) are excluded, matching
     the one-shot wrappers' quarantine. Fingerprints are written first;
     block rows are derived FROM the written parquet (one hash pass,

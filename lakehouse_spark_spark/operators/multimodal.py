@@ -26,7 +26,7 @@ libraries:
   ``operators/jpegcodec`` (SOF0, Huffman, 4:4:4/grayscale: DCT,
   data-derived canonical Huffman tables, byte stuffing) — so
   ``resize_images`` also does a true decode → resample → re-encode on
-  baseline JPEG payloads, closing the round-4 seam.
+  baseline JPEG payloads.
 
 Only formats that genuinely require a codec library (progressive or
 subsampled JPEG, compressed audio/video) keep deterministic stand-in
@@ -615,13 +615,15 @@ def attach_synthetic_video(df: DataFrame, id_col: str, frames_per_doc: int = 24)
     return df.select(F.col(id_col)).mapInPandas(synth, out_schema)
 
 
-# --- perceptual hash: image near-dup via dHash (round 12) --------------
+# --- perceptual hash: image near-dup via dHash / pHash ------------------
 # Text has four dedup stories (exact, MinHash, SimHash, semantic);
-# this gives image columns their first: a 64-bit difference hash over
-# DECODED pixels, then the SAME pigeonhole Hamming-block join the text
-# SimHash family uses (operators/neardup.simhash_candidates — reused
-# verbatim, the fingerprint is bit-compatible: 63 significant bits,
-# bit 63 kept zero so the long stays positive).
+# images get two: 64-bit difference and DCT hashes over DECODED pixels,
+# then the SAME pigeonhole Hamming-block join the text SimHash family
+# uses (operators/neardup.simhash_candidates — reused verbatim, the
+# fingerprints are bit-compatible: 63 significant bits, bit 63 kept zero
+# so the long stays positive). Both hashes come from one decode pass,
+# :func:`image_hashes`, which every image and video-frame consumer
+# projects from.
 
 
 def dhash64(px, grid: int = 8) -> int | None:
@@ -658,41 +660,6 @@ def dhash64(px, grid: int = 8) -> int | None:
     return v & ((1 << 63) - 1)
 
 
-def dhash_images(media: DataFrame, grid: int = 8) -> DataFrame:
-    """(doc_id, dhash) via one mapInPandas pass: decode each payload for
-    real (PNG: decode_png_pixels; baseline JPEG: the T.81 codec), hash
-    the pixels with :func:`dhash64`. Payloads neither codec accepts
-    come back NULL — callers quarantine them, exactly like the decode
-    stub path. Scale: per-row work only (no shuffle, no state); the
-    Arrow batch size bounds decode memory as for decode_images."""
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
-
-        for pdf in batches:
-            out = []
-            for payload in pdf["media"]:
-                raw = bytes(payload)
-                # decode_png_pixels RAISES on a valid magic with garbage
-                # inside (truncated IHDR, corrupt IDAT) — one malformed
-                # payload in a corpus must quarantine, not fail the
-                # Spark task (the decode_jpeg_baseline contract; that
-                # codec is already total)
-                try:
-                    px = decode_png_pixels(raw)
-                except Exception:  # noqa: BLE001 — undecodable payload
-                    px = None
-                if px is None:
-                    px = decode_jpeg_baseline(raw)
-                out.append(dhash64(px, grid=grid))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "dhash": pd.array(out, dtype="Int64")})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("dhash", T.LongType())]
-    )
-    return media.mapInPandas(do, schema)
-
-
 def image_neardup_dhash(
     media: DataFrame,
     max_hamming: int = 3,
@@ -714,10 +681,8 @@ def image_neardup_dhash(
     shared join's knob (operators/neardup.simhash_candidates)."""
     from lakehouse_spark_spark.operators.neardup import simhash_candidates
 
-    fp = (
-        dhash_images(media)
-        .filter(F.col("dhash").isNotNull())
-        .withColumnRenamed("dhash", "simhash")
+    fp = image_hashes(media).select("doc_id", F.col("dhash").alias("simhash")).filter(
+        F.col("simhash").isNotNull()
     )
     return simhash_candidates(
         fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
@@ -786,55 +751,42 @@ def phash64(px, grid: int = 32) -> int | None:
     return v
 
 
-def phash_images(media: DataFrame, grid: int = 32) -> DataFrame:
-    """(doc_id, phash) — same decode plumbing as :func:`dhash_images`
-    (real PNG + baseline-JPEG codecs, NULL quarantine), pHash kernel."""
+def _decode_pixels(payload: bytes):
+    """Pixel array of a PNG (decode_png_pixels) or baseline-JPEG (the
+    T.81 codec) payload, or None when neither codec accepts it.
+    decode_png_pixels RAISES on a valid magic with garbage inside
+    (truncated IHDR, corrupt IDAT): one malformed payload in a corpus
+    must quarantine, not fail the Spark task (decode_jpeg_baseline is
+    already total)."""
+    from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
+
+    raw = bytes(payload)
+    try:
+        px = decode_png_pixels(raw)
+    except Exception:  # noqa: BLE001 — undecodable payload
+        px = None
+    return px if px is not None else decode_jpeg_baseline(raw)
+
+
+def image_hashes(media: DataFrame) -> DataFrame:
+    """(doc_id, phash, dhash): the one image fingerprint pass. Each
+    payload is decoded for real once (:func:`_decode_pixels`) and both
+    hash kernels run on the decoded array — the decode is the dominant
+    cost (zlib inflate + unfilter / Huffman + IDCT per image), the two
+    kernels together are microseconds, so a consumer that needs one
+    hash selects its column and the pHash∧dHash verify stage gets its
+    second signal without a second decode. Undecodable payloads come
+    back NULL in both columns; callers quarantine them. Scale: per-row
+    work only (no shuffle, no state); the Arrow batch size bounds
+    decode memory as for decode_images."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
-
-        for pdf in batches:
-            out = []
-            for payload in pdf["media"]:
-                raw = bytes(payload)
-                try:
-                    px = decode_png_pixels(raw)
-                except Exception:  # noqa: BLE001 — undecodable payload
-                    px = None
-                if px is None:
-                    px = decode_jpeg_baseline(raw)
-                out.append(phash64(px, grid=grid))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "phash": pd.array(out, dtype="Int64")})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("phash", T.LongType())]
-    )
-    return media.mapInPandas(do, schema)
-
-
-def image_hashes(media: DataFrame, phash_grid: int = 32, dhash_grid: int = 8) -> DataFrame:
-    """(doc_id, phash, dhash) in ONE decode pass — the decode is the
-    dominant cost (zlib inflate + unfilter / Huffman + IDCT per image);
-    both hash kernels together are microseconds on the decoded array.
-    This is what makes the pHash∧dHash verify stage essentially free:
-    the second signal costs no second decode. Undecodable payloads come
-    back NULL in both columns (they share the pixels)."""
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
-
         for pdf in batches:
             ph, dh = [], []
             for payload in pdf["media"]:
-                raw = bytes(payload)
-                try:
-                    px = decode_png_pixels(raw)
-                except Exception:  # noqa: BLE001 — undecodable payload
-                    px = None
-                if px is None:
-                    px = decode_jpeg_baseline(raw)
-                ph.append(phash64(px, grid=phash_grid))
-                dh.append(dhash64(px, grid=dhash_grid))
+                px = _decode_pixels(payload)
+                ph.append(phash64(px))
+                dh.append(dhash64(px))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -883,8 +835,8 @@ def image_neardup_phash(
     phase-adjacent scenes whose low-frequency DCT SIGNS collide — but
     those scenes' pixel GRADIENTS differ, so a dHash check on the
     candidate pairs only (O(|pairs|), the verify_pairs_jaccard shape)
-    kills them without the recall cost of ``min_modalities``-style
-    voting. Measured on the sf0.1 disposition fixture family: planted
+    kills them without the recall cost of an asset-level vote across
+    modalities. Measured on the sf0.1 disposition fixture family: planted
     half-size twins sit at dHash ≤ 5 (smooth scenes survive the
     nearest-sampling grid shift), organic pHash collisions at ≥ 14 —
     the default verify radius 8 separates cleanly. Both hashes come
@@ -893,15 +845,6 @@ def image_neardup_phash(
     re-attach joins."""
     from lakehouse_spark_spark.operators.neardup import simhash_candidates
 
-    if verify_dhash_max_hamming is None:
-        fp = (
-            phash_images(media)
-            .filter(F.col("phash").isNotNull())
-            .withColumnRenamed("phash", "simhash")
-        )
-        return simhash_candidates(
-            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
-        )
     hashes = (
         image_hashes(media)
         .filter(F.col("phash").isNotNull())
@@ -911,6 +854,8 @@ def image_neardup_phash(
         hashes.select("doc_id", F.col("phash").alias("simhash")),
         "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
     )
+    if verify_dhash_max_hamming is None:
+        return cand
     d_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("dhash").alias("__dh_a"))
     d_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("dhash").alias("__dh_b"))
     return (
@@ -922,10 +867,9 @@ def image_neardup_phash(
 
 
 # --- acoustic fingerprint: audio near-dup via spectral-shape hash -------
-# (round 12) Text has four dedup stories, images two (dHash/pHash) —
-# audio had features (extract_audio_features) but no dedup. afp64 is a
-# 64-bit Haitsma/Kalker-shaped fingerprint ("A Highly Robust Audio
-# Fingerprinting System", ISMIR 2002 — public): frame the clip, compute
+# Text has four dedup stories, images two (dHash/pHash), audio one:
+# afp64, a 64-bit Haitsma/Kalker-shaped fingerprint ("A Highly Robust
+# Audio Fingerprinting System", ISMIR 2002 — public): frame the clip, compute
 # per-frame energies in log-spaced bands, emit the SIGN of each
 # adjacent-band energy difference. Band-energy RATIOS are untouched by
 # gain changes, so a re-levelled copy is bit-identical by construction;
@@ -997,77 +941,49 @@ def afp64(rate, samples, frames: int = 8, bands: int = 9, f_lo: float = 50.0) ->
     return bits & ((1 << 63) - 1)
 
 
-def afp_audio(media: DataFrame, frames: int = 8, bands: int = 9) -> DataFrame:
-    """(doc_id, afp) via one mapInPandas pass: decode each payload for
-    real (parse_wav: RIFF walk, 16-bit PCM), downmix interleaved
-    multichannel to mono by averaging, fingerprint with :func:`afp64`.
-    Non-PCM-WAV payloads come back NULL — callers quarantine them,
-    exactly like the image-hash decode paths. Scale: per-row work only
-    (no shuffle, no state); Arrow batch size bounds decode memory."""
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf["media"]:
-                parsed = parse_wav(bytes(payload))
-                if parsed is None:
-                    out.append(None)
-                    continue
-                rate, ch, samples = parsed
-                if ch and ch > 1:
-                    if len(samples) % ch != 0:
-                        # truncated/odd multichannel data chunk: a
-                        # non-whole frame count means the tail sample
-                        # set is torn across channels — quarantine
-                        # (NULL) like any other malformed payload
-                        # rather than fingerprinting the raw
-                        # interleaved stream (r12 ADVICE)
-                        out.append(None)
-                        continue
-                    samples = samples.reshape(-1, ch).mean(axis=1)
-                out.append(afp64(rate, samples, frames=frames, bands=bands))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "afp": pd.array(out, dtype="Int64")})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("afp", T.LongType())]
-    )
-    return media.mapInPandas(do, schema)
+def _wav_mono(payload: bytes):
+    """(rate, mono float samples) of a 16-bit PCM WAV payload (parse_wav:
+    RIFF walk), or None when it is not one. Interleaved multichannel
+    data is downmixed by averaging; a data chunk that is not a whole
+    number of frames has its tail torn across channels and is
+    quarantined (None) like any other malformed payload rather than
+    fingerprinted as the raw interleaved stream."""
+    parsed = parse_wav(bytes(payload))
+    if parsed is None:
+        return None
+    rate, ch, samples = parsed
+    if ch and ch > 1:
+        if len(samples) % ch != 0:
+            return None
+        samples = samples.reshape(-1, ch).mean(axis=1)
+    return rate, samples
 
 
-def audio_hashes(
-    media: DataFrame,
-    frames: int = 8,
-    bands: int = 9,
-    alt_frames: int = 4,
-    alt_bands: int = 17,
-) -> DataFrame:
-    """(doc_id, afp, afp_alt) in ONE decode pass: the primary
-    Haitsma/Kalker fingerprint plus a SECOND geometry (fewer/longer
-    frames, finer bands — a genuinely different time/frequency
-    resolution, so its near-tie bit flips are decorrelated from the
-    primary's). The WAV parse + FFT dominate; the extra geometry is a
-    reshape + band-sum. Undecodable / odd-multichannel payloads come
-    back NULL in both columns (the afp_audio quarantine)."""
+def audio_hashes(media: DataFrame) -> DataFrame:
+    """(doc_id, afp, afp_alt): the one audio fingerprint pass. Each
+    payload is decoded once (:func:`_wav_mono`) and fingerprinted in two
+    geometries: the primary Haitsma/Kalker 8 frames x 9 bands, and a
+    second one of 4 longer frames x 17 finer bands — a genuinely
+    different time/frequency resolution, so its near-tie bit flips are
+    decorrelated from the primary's (the verify signal of
+    :func:`audio_neardup_afp`). The WAV parse dominates; the second
+    geometry is one more small rFFT per clip. Non-PCM-WAV and torn
+    multichannel payloads come back NULL in both columns; callers
+    quarantine them. Scale: per-row work only (no shuffle, no state);
+    the Arrow batch size bounds decode memory."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             main, alt = [], []
             for payload in pdf["media"]:
-                parsed = parse_wav(bytes(payload))
-                samples = None
-                if parsed is not None:
-                    rate, ch, samples = parsed
-                    if ch and ch > 1:
-                        if len(samples) % ch != 0:
-                            samples = None  # torn multichannel tail: quarantine
-                        else:
-                            samples = samples.reshape(-1, ch).mean(axis=1)
-                if samples is None:
+                clip = _wav_mono(payload)
+                if clip is None:
                     main.append(None)
                     alt.append(None)
                     continue
-                main.append(afp64(rate, samples, frames=frames, bands=bands))
-                alt.append(afp64(rate, samples, frames=alt_frames, bands=alt_bands))
+                rate, samples = clip
+                main.append(afp64(rate, samples))
+                alt.append(afp64(rate, samples, frames=4, bands=17))
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -1116,15 +1032,6 @@ def audio_neardup_afp(
     decode+FFT pass (:func:`audio_hashes`) — no second decode."""
     from lakehouse_spark_spark.operators.neardup import simhash_candidates
 
-    if verify_alt_max_hamming is None:
-        fp = (
-            afp_audio(media)
-            .filter(F.col("afp").isNotNull())
-            .withColumnRenamed("afp", "simhash")
-        )
-        return simhash_candidates(
-            fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
-        )
     hashes = (
         audio_hashes(media)
         .filter(F.col("afp").isNotNull())
@@ -1134,6 +1041,8 @@ def audio_neardup_afp(
         hashes.select("doc_id", F.col("afp").alias("simhash")),
         "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
     )
+    if verify_alt_max_hamming is None:
+        return cand
     a_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("afp_alt").alias("__alt_a"))
     a_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("afp_alt").alias("__alt_b"))
     return (
@@ -1144,13 +1053,13 @@ def audio_neardup_afp(
     )
 
 
-# --- video near-dup: frame-sampled pHash voting (round 12) -------------
-# The fourth modality joins the dedup family. A clip is near-dup of
+# --- video near-dup: frame-sampled pHash voting --------------------------
+# The fourth modality of the dedup family. A clip is near-dup of
 # another when ENOUGH of its sampled frames are perceptual near-dups of
 # the other's frames — the standard frame-fingerprint voting shape
 # (sample -> per-frame hash -> frame-level candidate join -> per-clip
 # vote). Every stage is an existing operator: sample_frames (real FSTK
-# parse), phash_images (real PNG/JPEG decode + DCT hash), and the
+# parse), image_hashes (real PNG/JPEG decode + DCT hash), and the
 # shared pigeonhole Hamming-block join; this function only adds the
 # frame<->clip keying and the vote aggregation.
 
@@ -1183,9 +1092,9 @@ def video_frame_fingerprints(
         )
     )
     return (
-        phash_images(frames.select(key.alias("doc_id"), F.col("frame").alias("media")))
-        .filter(F.col("phash").isNotNull())
-        .withColumnRenamed("phash", "fp")
+        image_hashes(frames.select(key.alias("doc_id"), F.col("frame").alias("media")))
+        .select("doc_id", F.col("phash").alias("fp"))
+        .filter(F.col("fp").isNotNull())
     )
 
 
@@ -1251,7 +1160,7 @@ def video_neardup_phash(
     )
 
 
-# --- cross-modal dedup disposition (round 12) ---------------------------
+# --- cross-modal dedup disposition -------------------------------------
 # The composition a real multimodal pipeline runs: an ASSET is a dup if
 # ANY of its modalities near-dups a lower-id asset. Each modality
 # contributes candidate edges through its existing operator (text
@@ -1271,19 +1180,8 @@ def multimodal_dedup_disposition(
     *,
     text_max_hamming: int = 3,
     text_blocks: int = 4,
-    image_max_hamming: int = 10,
-    image_blocks: int = 8,
-    audio_max_hamming: int = 6,
-    audio_blocks: int = 8,
-    video_max_hamming: int = 10,
-    video_blocks: int = 8,
-    video_min_matched_frames: int = 3,
     video_every_n: int = 4,
     max_bucket: int | None = None,
-    min_modalities: int = 1,
-    verify: bool = False,
-    image_verify_dhash_max_hamming: int = 8,
-    audio_verify_alt_max_hamming: int = 4,
 ) -> DataFrame:
     """Per-asset keep/drop across every supplied modality. Returns
     (id, keep, component, modalities): ``component`` is the minimum
@@ -1304,21 +1202,22 @@ def multimodal_dedup_disposition(
     loop (O(E) per round, rounds ~ log diameter — dup clusters are
     shallow). No stage sees an asset×asset product.
 
-    ``verify=True`` runs the candidates→verify second signal on
-    the two modalities with a single-signal false-pair mode: image
-    pHash edges additionally require dHash agreement
-    (``image_verify_dhash_max_hamming``), audio afp edges a
-    second-geometry agreement (``audio_verify_alt_max_hamming``) —
-    computed on candidate pairs only, from the SAME decode pass, so
-    the cost is two slim joins per modality. This is the right
-    precision knob for re-upload corpora, where ``min_modalities``
-    (the asset-level vote) kills TRUE single-modality dups to get its
-    precision: measured on the sf0.1 gated fixture, verify drops the 6
-    organic false merges to 0 with all 125 planted single-modality
-    twins still caught, while ``min_modalities=2`` would kill the
-    false merges AND every planted twin (each duplicates exactly one
-    modality). Video already has its own verify (the frame vote);
-    text near-dup callers wanting one use verify_pairs_jaccard."""
+    The two modalities with a single-signal false-pair mode run the
+    candidates→verify second signal: image pHash edges additionally
+    require dHash agreement within 8 bits, audio afp edges a
+    second-geometry agreement within 4 — computed on candidate pairs
+    only, from the SAME decode pass, so the cost is two slim joins per
+    modality. This is the precision tool for re-upload corpora; an
+    asset-level vote (an edge needs two modalities) would kill the TRUE
+    single-modality dups instead. Measured on the sf0.1 fixture: verify
+    drops the 6 organic false merges to 0 with all 125 planted
+    single-modality twins still caught, while a two-modality vote kills
+    the false merges AND every planted twin (each duplicates exactly
+    one modality). Video has its own verify (the frame vote); text
+    near-dup callers wanting one use verify_pairs_jaccard. The other
+    radii and block counts are the per-modality operators' defaults;
+    ``text_max_hamming``/``text_blocks`` and ``video_every_n`` size the
+    text and video joins to the corpus."""
     from lakehouse_spark_spark.operators.graph import connected_components
     from lakehouse_spark_spark.operators.neardup import simhash, simhash_candidates
 
@@ -1332,32 +1231,17 @@ def multimodal_dedup_disposition(
 
     def _image_edges():
         med = assets.select(F.col(id_col).alias("doc_id"), F.col(image_col).alias("media"))
-        e = image_neardup_phash(
-            med, max_hamming=image_max_hamming, blocks=image_blocks,
-            max_bucket=max_bucket,
-            verify_dhash_max_hamming=(image_verify_dhash_max_hamming if verify else None),
-        )
+        e = image_neardup_phash(med, max_bucket=max_bucket, verify_dhash_max_hamming=8)
         return e.select("id_a", "id_b", F.lit("image").alias("modality"))
 
     def _audio_edges():
         med = assets.select(F.col(id_col).alias("doc_id"), F.col(audio_col).alias("media"))
-        e = audio_neardup_afp(
-            med, max_hamming=audio_max_hamming, blocks=audio_blocks,
-            max_bucket=max_bucket,
-            verify_alt_max_hamming=(audio_verify_alt_max_hamming if verify else None),
-        )
+        e = audio_neardup_afp(med, max_bucket=max_bucket, verify_alt_max_hamming=4)
         return e.select("id_a", "id_b", F.lit("audio").alias("modality"))
 
     def _video_edges():
         med = assets.select(F.col(id_col).alias("doc_id"), F.col(video_col).alias("media"))
-        e = video_neardup_phash(
-            med,
-            every_n=video_every_n,
-            max_hamming=video_max_hamming,
-            blocks=video_blocks,
-            min_matched_frames=video_min_matched_frames,
-            max_bucket=max_bucket,
-        )
+        e = video_neardup_phash(med, every_n=video_every_n, max_bucket=max_bucket)
         return e.select("id_a", "id_b", F.lit("video").alias("modality"))
 
     builders = [
@@ -1389,22 +1273,6 @@ def multimodal_dedup_disposition(
     for e in edge_frames[1:]:
         edges = edges.unionByName(e)
     edges = edges.localCheckpoint(eager=False)
-    if min_modalities > 1:
-        # asset-level vote (the video frame-vote, lifted a level): a
-        # pair must be flagged by >= min_modalities DISTINCT modalities
-        # to contribute an edge. Kills each modality's single-signal
-        # false-pair mode (pHash phase-adjacent collisions etc.) at the
-        # documented cost of single-modality true dups — a PRECISION
-        # knob for corpora where cross-modal copies duplicate
-        # everything (re-uploads) and single-modality matches are
-        # mostly reuse (stock images, boilerplate audio beds).
-        voted = (
-            edges.groupBy("id_a", "id_b")
-            .agg(F.countDistinct("modality").alias("__nmod"))
-            .filter(F.col("__nmod") >= min_modalities)
-            .select("id_a", "id_b")
-        )
-        edges = edges.join(voted, ["id_a", "id_b"]).localCheckpoint(eager=False)
 
     comps = connected_components(edges, "id_a", "id_b")
     mods = (

@@ -74,14 +74,16 @@ def run_pipeline(spark: SparkSession, data_dir: str, orphan_to_unknown: bool = F
         tiebreak="customer_name",
     )
     fact_work_order = null_to_sentinel(work_orders_s, "customer_id", "-1")  # :111-114
-    # fk_stamp without a sentinel (nulls already patched above); in the
-    # default parity mode the join itself is the reference's no-effect
-    # "referential stamp" (SURVEY.md J1) — kept for behavioral parity,
-    # it only changes rows when orphan_to_unknown=True.
-    fact_work_order = fk_stamp(
-        fact_work_order, dim_customer, "customer_id", sentinel="-1" if orphan_to_unknown else None,
-        orphan_to_unknown=orphan_to_unknown,
-    ).select("work_order_id", "customer_id", "order_date", "status", "labor_hours", "labor_cost")
+    # the reference's "referential stamp" (SURVEY.md J1) is a left join
+    # to the customer keys that adds no column and changes no row, so
+    # the parity mode skips it; only the intent mode rewrites orphans
+    if orphan_to_unknown:
+        fact_work_order = fk_stamp(
+            fact_work_order, dim_customer, "customer_id", sentinel="-1", orphan_to_unknown=True
+        )
+    fact_work_order = fact_work_order.select(
+        "work_order_id", "customer_id", "order_date", "status", "labor_hours", "labor_cost"
+    )
     fact_parts_sales = orphan_drop(parts_sales_s, fact_work_order, "work_order_id").select(  # :124-127
         "sale_id", "work_order_id", "sku", "quantity", "unit_price", "total_price", "sale_date"
     )

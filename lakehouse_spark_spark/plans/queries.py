@@ -1951,10 +1951,10 @@ def audio_neardup_afp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ==========================================================================
-# Video near-dup via frame-sampled pHash voting (round 12): the fourth
-# modality joins the dedup family. Clips are FSTK framestacks of 6
+# Video near-dup via frame-sampled pHash voting: the fourth modality
+# of the dedup family. Clips are FSTK framestacks of 6
 # textured 48x48 scenes keyed by (doc_id, frame) — parsed, decoded, and
-# hashed FOR REAL (sample_frames + phash_images); EVERY sampled doc
+# hashed FOR REAL (sample_frames + image_hashes); EVERY sampled doc
 # plants a twin whose frames are half-size re-renderings of its own
 # scenes. A clip pair survives when >= 3 of the 6 sampled lower-clip
 # frames match within Hamming 10. Measured at sf0.1 (125 clips + 125
@@ -2023,7 +2023,7 @@ def video_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ==========================================================================
-# Cross-modal dedup disposition (round 12): the composition a real
+# Cross-modal dedup disposition: the composition a real
 # multimodal pipeline runs — an ASSET is a dup if ANY of its modalities
 # near-dups a lower-id asset. Each sampled doc carries all four
 # modality columns (60-token text; pHash-family PNG scene; afp-family
@@ -2032,16 +2032,20 @@ def video_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # / video / text) while its other three modalities are fresh content —
 # so each catch is attributable to exactly one modality's edge, which
 # the `modalities` column reports. Edges union into the deterministic
-# connected-components operator; min id per component keeps.
-# rows-only: fingerprint-function composition; the unit test pins the
-# disposition against per-modality expectations and the all-singleton
-# case.
+# connected-components operator; min id per component keeps. Image and
+# audio edges pass the operator's verify stage (dHash ∧ pHash; second
+# afp geometry) — measured at sf0.1: the 6 organic single-image
+# phase-adjacent merges drop to 0, all 125 planted twins survive
+# (COVERAGE.md verify row).
+# rows-only: fingerprint-function composition; tests/test_codecs.py pins
+# the operator against per-modality expectations and the all-singleton
+# case, and checks every planted twin of this fixture.
 # ==========================================================================
 def _disposition_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cross-modal fixture assets (shared by the gated query and
-    the verify-stage on/off measurement in tools/): each sampled doc
-    carries all four modality columns; EVERY sampled doc plants ONE
-    twin whose duplicated modality rotates by sample index % 4."""
+    """The cross-modal fixture assets of the disposition query: each
+    sampled doc carries all four modality columns; EVERY sampled doc
+    plants ONE twin (id + 10,000,000) whose duplicated modality rotates
+    by sample index % 4."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 40 == 0).select("doc_id")
 
     def synth(batches):
@@ -2155,7 +2159,7 @@ def _disposition_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_dedup_disposition",
     oracle=None,  # perceptual/acoustic/simhash-function-specific
-    doc="cross-modal dedup: one keep/drop per asset from the union of text/image/audio/video near-dup edges (rotating planted twin modality; verify stage on)",
+    doc="cross-modal dedup: one keep/drop per asset from the union of text/image/audio/video near-dup edges (rotating planted twin modality; image/audio edges verified)",
 )
 def multimodal_dedup_disposition_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_spark_spark.operators.multimodal import multimodal_dedup_disposition
@@ -2174,11 +2178,6 @@ def multimodal_dedup_disposition_q(spark: SparkSession, sf_dir: str) -> DataFram
         # scale the 16-value block space is harmless
         text_max_hamming=12,
         text_blocks=16,
-        # the candidates→verify second signal on image/audio edges
-        # (dHash ∧ pHash conjunction; second afp geometry) — measured at
-        # sf0.1: the 6 organic single-image phase-adjacent merges drop
-        # to 0, all 125 planted twins survive (COVERAGE.md verify row)
-        verify=True,
     )
     # registry projection: the driver hashes rows as tuples, so the
     # array column flattens to a comma-joined string (sorted upstream —
@@ -2189,10 +2188,10 @@ def multimodal_dedup_disposition_q(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ==========================================================================
-# Persisted media-fingerprint ingest (round 13, r12 verdict task 2):
-# the arrival-time near-dup story for media — text near-dup has had one
-# since r10 (the MinHash band index); images/audio/video re-decoded the
-# whole corpus every run. The index (corpus images decoded+dHashed once
+# Persisted media-fingerprint ingest: the arrival-time near-dup story
+# for media, as the MinHash band index is for text near-dup — the
+# one-shot image/audio/video operators re-decode the whole corpus every
+# run. The index (corpus images decoded+dHashed once
 # + one batch-1 fold) is built ONCE per process in a cached fixture dir
 # OUTSIDE the query body (the steady-state persisted-family pattern);
 # the body decodes+hashes ONLY batch 2 and probes the persisted block
@@ -2218,16 +2217,17 @@ def media_neardup_persisted_ingest_q(spark: SparkSession, sf_dir: str) -> DataFr
         update_media_fp_index,
         write_media_fp_index,
     )
-    from lakehouse_spark_spark.operators.multimodal import dhash_images
+    from lakehouse_spark_spark.operators.multimodal import image_hashes
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
 
-    def synth(role: str):
-        """mapInPandas media synth for one ingest role, keyed on the
-        SAMPLE index s = doc_id//10: corpus originals (s%3 != 0), the
-        batch-1 fold (fresh scenes, s%6 == 0), and batch 2 = ±1-gray
-        re-encode twins of the s%6 == 1 corpus scenes (ids at +10M) +
-        fresh scenes (s%6 == 3, ids at +20M, scene keys at +5M)."""
+    def fingerprints(role: str):
+        """(doc_id, fp) dHash fingerprints of the images synthesized for
+        one ingest role, keyed on the SAMPLE index s = doc_id//10: corpus
+        originals (s%3 != 0), the batch-1 fold (fresh scenes, s%6 == 0),
+        and batch 2 = ±1-gray re-encode twins of the s%6 == 1 corpus
+        scenes (ids at +10M) + fresh scenes (s%6 == 3, ids at +20M, scene
+        keys at +5M)."""
 
         def fn(batches):
             import numpy as np
@@ -2260,20 +2260,19 @@ def media_neardup_persisted_ingest_q(spark: SparkSession, sf_dir: str) -> DataFr
                             payloads.append(encode_png_pixels(scene(i + 5_000_000)))
                 yield pd.DataFrame({"doc_id": pd.array(ids, dtype="int64"), "media": payloads})
 
-        return docs.mapInPandas(fn, "doc_id long, media binary")
+        return image_hashes(docs.mapInPandas(fn, "doc_id long, media binary")).select(
+            "doc_id", F.col("dhash").alias("fp")
+        )
 
     path = _bloom_fixture_dir(f"mediafp:{sf_dir}", fresh=False)
     ready = os.path.join(path, "__fixture_ready")
     idx_dir = os.path.join(path, "idx")
     if not os.path.exists(ready):
-        corpus_fp = dhash_images(synth("corpus")).withColumnRenamed("dhash", "fp")
-        write_media_fp_index(corpus_fp, "doc_id", "fp", idx_dir, blocks=4, modality="image")
-        b1_fp = dhash_images(synth("b1")).withColumnRenamed("dhash", "fp")
-        update_media_fp_index(idx_dir, b1_fp, "doc_id", "fp", batch_id=1)
+        write_media_fp_index(fingerprints("corpus"), "doc_id", "fp", idx_dir, blocks=4, modality="image")
+        update_media_fp_index(idx_dir, fingerprints("b1"), "doc_id", "fp", batch_id=1)
         open(ready, "w").close()
     idx = load_media_fp_index(spark, idx_dir)
-    b2_fp = dhash_images(synth("b2")).withColumnRenamed("dhash", "fp")
-    return media_candidates_against_index(b2_fp, idx, "doc_id", "fp", max_hamming=3)
+    return media_candidates_against_index(fingerprints("b2"), idx, "doc_id", "fp", max_hamming=3)
 
 
 # ==========================================================================

@@ -1,61 +1,15 @@
-"""Lakehouse table-format sink: Delta/Iceberg when available, plain
-parquet otherwise.
+"""Bucketed table layout: the one table writer beyond the plain sinks.
 
-BASELINE.json's approach line calls for "Spark SQL + Delta/Iceberg ops".
-Neither delta-spark nor an Iceberg catalog is installed in this
-environment, so the writer negotiates: try Delta, fall back to
-overwrite-mode parquet with the same layout semantics. The call sites
-don't change when a real format is installed — idempotent overwrite +
-partition columns are the shared contract (ACID upsert/time-travel are
-Delta-only extras, gated behind ``format_available()``).
+Gold and staging tables are written with ``sources/sinks.write_parquet``
+(idempotent overwrite + partition columns) and read back with
+``spark.read.parquet``. Neither delta-spark nor an Iceberg catalog is
+installed; MERGE and snapshots are emulated over parquet
+(``sources/sinks.upsert_parquet``, ``sources/snapshots``).
 """
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame
-
-log = logging.getLogger(__name__)
-_warned_fallback = False
-
-
-def delta_available() -> bool:
-    global _warned_fallback
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        if not _warned_fallback:
-            # LOUD fallback (round-3 verdict: the silent degrade hid the
-            # emulation seam). One warning per process, not per write.
-            log.warning(
-                "delta-spark not installed: lakehouse tables fall back to "
-                "overwrite-mode parquet with emulated MERGE/snapshots "
-                "(sources/sinks.upsert_parquet, sources/snapshots). "
-                "Install delta-spark to get ACID MERGE/OPTIMIZE/time "
-                "travel natively; see SCALE.md 'Table formats'."
-            )
-            _warned_fallback = True
-        return False
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-    prefer_format: str = "delta",
-) -> str:
-    """Write a gold table in the best available lakehouse format.
-    Returns the format actually used ('delta' or 'parquet')."""
-    fmt = prefer_format if (prefer_format == "delta" and delta_available()) else "parquet"
-    writer = df.write.mode(mode).format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
-    return fmt
 
 
 def write_bucketed(
@@ -75,12 +29,3 @@ def write_bucketed(
         .sortBy(*bucket_cols)
         .saveAsTable(table_name)
     )
-
-
-def read_table(spark, path: str) -> DataFrame:
-    if delta_available():
-        try:
-            return spark.read.format("delta").load(path)
-        except Exception as e:  # not a Delta table (plain-parquet dir)
-            log.info("read_table(%s): not a Delta table (%s); reading as parquet", path, e)
-    return spark.read.parquet(path)

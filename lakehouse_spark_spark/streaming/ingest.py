@@ -295,8 +295,8 @@ def media_ingest_foreach_batch(
     leg of the persisted-index streaming family (exact-hash: Bloom;
     text near-dup: MinHash-LSH; semantic: IVF-PQ; media: this). The
     stream carries (id, fingerprint) rows — the caller's upstream
-    stage runs the modality's hasher (dhash_images / phash_images /
-    afp_audio) ONCE at arrival, which is the whole point: the decode
+    stage runs the modality's fingerprint pass (image_hashes /
+    audio_hashes) ONCE at arrival, which is the whole point: the decode
     never re-runs for accumulated assets. Per micro-batch:
 
     1. probe the batch against the persisted block index
@@ -523,7 +523,7 @@ def multimodal_ingest_foreach_batch(
        persisted verify conjunction when the index carries the aux
        column (``aux_fp_cols``) and the verify radius is not None,
        killing the phase-adjacent single-signal false pairs exactly
-       like the one-shot disposition's verify=True; video probes with
+       like the one-shot disposition's verify stage; video probes with
        the frame vote;
     3. union the flagged asset ids, append the NOVEL ids to the
        exactly-once ledger, then fold each modality's KEPT

@@ -1,5 +1,5 @@
 """Coverage for public APIs not exercised elsewhere: tumbling_agg,
-load_star, write_single_csv, write_table/read_table."""
+load_star, write_single_csv, partitioned write_parquet."""
 
 from __future__ import annotations
 
@@ -51,14 +51,13 @@ def test_write_single_csv_parity_sink(spark):
 
 
 def test_write_table_read_table_roundtrip(spark):
-    from lakehouse_spark_spark.sources.tables import delta_available, read_table, write_table
+    from lakehouse_spark_spark.sources.sinks import write_parquet
 
     d = tempfile.mkdtemp(prefix="tbl2_")
     try:
         df = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "part"])
-        fmt = write_table(df, f"{d}/t", partition_by=["part"])
-        assert fmt == ("delta" if delta_available() else "parquet")
-        back = read_table(spark, f"{d}/t")
+        write_parquet(df, f"{d}/t", partition_by=["part"])
+        back = spark.read.parquet(f"{d}/t")
         assert {(r["k"], r["part"]) for r in back.collect()} == {(1, "x"), (2, "y")}
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -8,6 +8,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_ORACLE, SF_SMALL
+
 
 def test_png_pixel_roundtrip_all_filters():
     """decode handles every scanline filter type; encode(decode(x)) == x."""
@@ -400,8 +402,8 @@ def test_image_neardup_block_join_equals_bruteforce(spark):
 
     from lakehouse_spark_spark.operators.jpegcodec import encode_jpeg_baseline
     from lakehouse_spark_spark.operators.multimodal import (
-        dhash_images,
         encode_png_pixels,
+        image_hashes,
         image_neardup_dhash,
     )
 
@@ -420,7 +422,7 @@ def test_image_neardup_block_join_equals_bruteforce(spark):
         (r["id_a"], r["id_b"], r["hamming"])
         for r in image_neardup_dhash(media, max_hamming=t, blocks=t + 1).collect()
     )
-    fps = {r["doc_id"]: r["dhash"] for r in dhash_images(media).collect()}
+    fps = {r["doc_id"]: r["dhash"] for r in image_hashes(media).collect()}
     want = sorted(
         (a, b, bin(fps[a] ^ fps[b]).count("1"))
         for a, b in itertools.combinations(sorted(fps), 2)
@@ -436,11 +438,11 @@ def test_image_neardup_block_join_equals_bruteforce(spark):
     assert all(a % 5 == 0 and b % 1000 == a % 1000 for a, b in pairs)
 
 
-def test_dhash_images_quarantines_corrupt_payloads(spark):
+def test_image_hashes_quarantine_corrupt_payloads(spark):
     """A valid PNG magic with garbage inside (truncated IHDR, corrupt
     IDAT) must come back NULL — one malformed payload cannot fail the
-    Spark task (review catch: decode_png_pixels raises on these)."""
-    from lakehouse_spark_spark.operators.multimodal import dhash_images, encode_png_pixels
+    Spark task (decode_png_pixels raises on these)."""
+    from lakehouse_spark_spark.operators.multimodal import encode_png_pixels, image_hashes
 
     good = encode_png_pixels(np.arange(64, dtype=np.uint8).reshape(8, 8))
     corrupt = [
@@ -452,7 +454,7 @@ def test_dhash_images_quarantines_corrupt_payloads(spark):
         [(0, bytearray(good))] + [(i + 1, bytearray(c)) for i, c in enumerate(corrupt)],
         "doc_id bigint, media binary",
     )
-    rows = {r["doc_id"]: r["dhash"] for r in dhash_images(media).collect()}
+    rows = {r["doc_id"]: r["dhash"] for r in image_hashes(media).collect()}
     assert rows[0] is not None
     assert rows[1] is None and rows[2] is None and rows[3] is None
 
@@ -504,8 +506,8 @@ def test_image_neardup_phash_catches_real_resized_twins(spark):
 
     from lakehouse_spark_spark.operators.multimodal import (
         encode_png_pixels,
+        image_hashes,
         image_neardup_phash,
-        phash_images,
         resize_images,
     )
 
@@ -521,7 +523,7 @@ def test_image_neardup_phash_catches_real_resized_twins(spark):
         (r["id_a"], r["id_b"], r["hamming"])
         for r in image_neardup_phash(all_media, max_hamming=t, blocks=t + 1).collect()
     )
-    fps = {r["doc_id"]: r["phash"] for r in phash_images(all_media).collect()}
+    fps = {r["doc_id"]: r["phash"] for r in image_hashes(all_media).collect()}
     want = sorted(
         (a, b, bin(fps[a] ^ fps[b]).count("1"))
         for a, b in itertools.combinations(sorted(fps), 2)
@@ -588,13 +590,13 @@ def test_afp64_invariances_and_separation():
     assert parse_wav(b"not a wav at all") is None
 
 
-def test_afp_audio_downmixes_stereo_and_quarantines(spark):
+def test_audio_hashes_downmix_stereo_and_quarantine(spark):
     """A hand-packed stereo PCM WAV downmixes to the mono average
     (fingerprint == the mono clip's); non-WAV payloads come back NULL
     through the Arrow path."""
     import struct
 
-    from lakehouse_spark_spark.operators.multimodal import afp64, afp_audio
+    from lakehouse_spark_spark.operators.multimodal import afp64, audio_hashes
 
     RATE = 8000
     s = _audio_scene(3)
@@ -613,7 +615,7 @@ def test_afp_audio_downmixes_stereo_and_quarantines(spark):
         [(1, bytearray(stereo)), (2, bytearray(b"\x00\x01garbage"))],
         "doc_id bigint, media binary",
     )
-    rows = {r["doc_id"]: r["afp"] for r in afp_audio(media).collect()}
+    rows = {r["doc_id"]: r["afp"] for r in audio_hashes(media).collect()}
     assert rows[2] is None
     # downmix of (1.1s, 0.9s) averages back to ~s: same fingerprint
     # modulo quantization/clip ties
@@ -628,7 +630,7 @@ def test_audio_neardup_block_join_equals_bruteforce(spark):
     import itertools
 
     from lakehouse_spark_spark.operators.multimodal import (
-        afp_audio,
+        audio_hashes,
         audio_neardup_afp,
         make_wav_pcm,
     )
@@ -648,7 +650,7 @@ def test_audio_neardup_block_join_equals_bruteforce(spark):
         (r["id_a"], r["id_b"], r["hamming"])
         for r in audio_neardup_afp(media, max_hamming=t, blocks=t + 1).collect()
     )
-    fps = {r["doc_id"]: r["afp"] for r in afp_audio(media).collect()}
+    fps = {r["doc_id"]: r["afp"] for r in audio_hashes(media).collect()}
     want = sorted(
         (a, b, bin(fps[a] ^ fps[b]).count("1"))
         for a, b in itertools.combinations(sorted(fps), 2)
@@ -945,11 +947,12 @@ def test_audio_verify_stage_keeps_true_twins(spark):
 
 
 def test_disposition_verify_drops_false_merge_keeps_twin(spark):
-    """Disposition-level: an image-modality false pair merges two
-    ORIGINALS without verify and stops merging with it, while a planted
-    half-size image twin keeps dropping — the precision gain costs no
-    planted recall (unlike min_modalities, which would kill the
-    single-modality twin too)."""
+    """Disposition-level: an image-modality false pair (pHash collides,
+    dHash far apart) does not merge two ORIGINALS, while a planted
+    half-size image twin keeps dropping — the verify stage's precision
+    costs no planted recall. That the same pair merges under the plain
+    pHash join is pinned by
+    test_image_verify_stage_kills_false_pairs_keeps_twins."""
     from lakehouse_spark_spark.operators.multimodal import (
         encode_png_pixels,
         multimodal_dedup_disposition,
@@ -962,71 +965,59 @@ def test_disposition_verify_drops_false_merge_keeps_twin(spark):
         (100, bytearray(encode_png_pixels(px1[::2, ::2]))),  # true twin of 0
     ]
     assets = spark.createDataFrame(rows, "doc_id long, image binary")
-
-    def run(**kw):
-        return {
-            r["doc_id"]: r
-            for r in multimodal_dedup_disposition(
-                assets, "doc_id", image_col="image", **kw
-            ).collect()
-        }
-
-    off = run()
-    assert not off[1]["keep"] and off[1]["component"] == 0  # the false merge
-    assert not off[100]["keep"]
-    on = run(verify=True)
-    assert on[0]["keep"] and on[1]["keep"]  # originals both keep now
-    assert not on[100]["keep"] and on[100]["component"] == 0  # twin still drops
-    mm = run(min_modalities=2)
-    assert mm[100]["keep"]  # the min_modalities trade: the true twin survives
+    out = {
+        r["doc_id"]: r
+        for r in multimodal_dedup_disposition(assets, "doc_id", image_col="image").collect()
+    }
+    assert out[0]["keep"] and out[1]["keep"]  # originals both keep
+    assert not out[100]["keep"] and out[100]["component"] == 0  # twin still drops
 
 
-def test_multimodal_disposition_min_modalities_vote(spark):
-    """r12: the asset-level precision knob. A twin duplicating BOTH
-    image and audio survives min_modalities=2; a twin duplicating only
-    its image does not (the documented single-modality cost); at the
-    default min_modalities=1 both drop."""
-    import numpy as np
+_DISPOSITION_MODALITIES = ["image", "audio", "video", "text"]
 
-    from lakehouse_spark_spark.operators.multimodal import (
-        encode_png_pixels,
-        make_wav_pcm,
-        multimodal_dedup_disposition,
-    )
 
-    def img(i):
-        return bytearray(encode_png_pixels(_video_scene(i, 0)))
+def _disposition_violations(rows) -> list[str]:
+    """What is wrong with the disposition query's rows (doc_id,
+    component, keep, modalities) on its planted fixture: every twin
+    j = i + 10,000,000 of a sampled original i must drop into i's
+    component with the rotated modality ``(i // 40) % 4`` among its
+    tags, every original must keep, ``keep`` must hold exactly on the
+    component minimum, and each component must keep exactly once."""
+    bad = []
+    by_id = {r["doc_id"]: r for r in rows}
+    twins = [j for j in by_id if j >= 10_000_000]
+    originals = [i for i in by_id if i < 10_000_000]
+    if not twins or sorted(j - 10_000_000 for j in twins) != sorted(originals):
+        bad.append(f"twins {sorted(twins)} do not pair the originals {sorted(originals)}")
+    for j in twins:
+        r, i = by_id[j], j - 10_000_000
+        mod = _DISPOSITION_MODALITIES[(i // 40) % 4]
+        if r["keep"] or r["component"] != i or mod not in r["modalities"].split(","):
+            bad.append(f"twin {j} of {i} ({mod}): {r}")
+    bad += [f"original merged: {by_id[i]}" for i in originals if not by_id[i]["keep"]]
+    keeps: dict[int, int] = {}
+    for r in rows:
+        if r["keep"] != (r["doc_id"] == r["component"]) or r["component"] > r["doc_id"]:
+            bad.append(f"keep/component mismatch: {r}")
+        keeps[r["component"]] = keeps.get(r["component"], 0) + int(r["keep"])
+    bad += [f"component {c} keeps {n} rows" for c, n in keeps.items() if n != 1]
+    return bad
 
-    def img_half(i):
-        return bytearray(encode_png_pixels(_video_scene(i, 0)[::2, ::2]))
 
-    def wav(i):
-        return bytearray(make_wav_pcm(_audio_scene(i), 8000))
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_ORACLE], ids=["sf0.001", "sf0.01"])
+def test_disposition_query_drops_every_planted_twin(spark, sf_dir):
+    """Value check of the oracle-less disposition query: every planted
+    twin drops into its original's component under the modality it
+    duplicates, and no original merges. The check fails on a copy of
+    the output with one twin kept."""
+    from lakehouse_spark_spark.plans.queries import registry
 
-    def wav_twin(i):
-        rng = np.random.RandomState(10_000 + i)
-        return bytearray(make_wav_pcm(0.5 * _audio_scene(i) + rng.uniform(-0.002, 0.002, 3200), 8000))
-
-    rows = [
-        (0, img(0), wav(0)),
-        (1, img(100), wav(100)),
-        (100, img_half(0), wav_twin(0)),    # 2-modality twin of 0
-        (101, img_half(100), wav(200)),     # image-only twin of 1
-    ]
-    assets = spark.createDataFrame(rows, "doc_id long, image binary, audio binary")
-
-    def run(mm):
-        return {
-            r["doc_id"]: r
-            for r in multimodal_dedup_disposition(
-                assets, "doc_id", image_col="image", audio_col="audio", min_modalities=mm
-            ).collect()
-        }
-
-    d1, d2 = run(1), run(2)
-    assert not d1[100]["keep"] and not d1[101]["keep"]  # default: both drop
-    assert not d2[100]["keep"] and sorted(d2[100]["modalities"]) == ["audio", "image"]
-    assert d2[101]["keep"] and d2[101]["modalities"] == []  # single-signal pair voted out
+    out = registry()["multimodal_dedup_disposition"].builder(spark, sf_dir)
+    rows = [r.asDict() for r in out.collect()]
+    assert _disposition_violations(rows) == []
+    twin = next(r for r in rows if r["doc_id"] >= 10_000_000)
+    flipped = [dict(r, keep=True) if r is twin else r for r in rows]
+    assert _disposition_violations(flipped) != []
 
 
 def test_r12_media_queries_are_run_deterministic(spark):

@@ -48,3 +48,41 @@ def test_warm_medallion_op_reuses_its_generated_classes(spark, tmp_path, monkeyp
     before = _janino_compiles(spark)
     assert wl.check(op, wl.run_op(spark, op, Tracer(False))) is None
     assert _janino_compiles(spark) - before == 0
+
+
+def test_intent_mode_rewrites_exactly_the_planted_orphans(spark, tmp_path):
+    """orphan_to_unknown=True (the reference's documented intent) on the
+    seeded CSVs at scale 1: the same gold row counts as the parity mode,
+    every work order's customer is a dim_customer key, and the rows
+    rewritten to the UNKNOWN member "-1" are exactly the live work
+    orders the generator planted with a customer id no customer row
+    carries."""
+    import csv
+
+    from lakehouse_spark_spark.plans.pipeline import run_pipeline
+    from perfbench import datagen
+
+    datagen.medallion_csvs(7, 1, str(tmp_path))
+    parity = run_pipeline(spark, str(tmp_path))
+    intent = run_pipeline(spark, str(tmp_path), orphan_to_unknown=True)
+    try:
+        assert intent.row_counts == parity.row_counts
+        keys = {r["customer_id"] for r in intent.dim_customer.select("customer_id").collect()}
+        before = {r["work_order_id"]: r["customer_id"] for r in parity.fact_work_order.collect()}
+        after = {r["work_order_id"]: r["customer_id"] for r in intent.fact_work_order.collect()}
+        assert set(after.values()) <= keys
+        with open(tmp_path / "customers.csv", newline="") as fh:
+            customers = {r["customer_id"] for r in csv.DictReader(fh)}
+        with open(tmp_path / "work_orders.csv", newline="") as fh:
+            planted = {
+                r["work_order_id"]
+                for r in csv.DictReader(fh)
+                if r["customer_id"] and r["customer_id"] not in customers and r["order_date"]
+            }
+        assert len(planted) == datagen.REF_PLANTS["work_order_orphan_customer"]
+        assert {w for w, c in after.items() if c != before[w]} == planted
+        assert {after[w] for w in planted} == {"-1"}
+    finally:
+        for res in (parity, intent):
+            for df in (res.dim_customer, res.fact_work_order, res.fact_parts_sales, res.dim_date):
+                df.unpersist()

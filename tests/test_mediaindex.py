@@ -78,8 +78,8 @@ def test_real_dhash_fingerprints_through_the_index(spark, tmp_path):
     union (the modality wrapper and the index share
     fingerprint_block_rows)."""
     from lakehouse_spark_spark.operators.multimodal import (
-        dhash_images,
         encode_png_pixels,
+        image_hashes,
         image_neardup_dhash,
     )
 
@@ -93,8 +93,8 @@ def test_real_dhash_fingerprints_through_the_index(spark, tmp_path):
         [(1000 + i, bytearray(encode_png_pixels(px + 1))) for i, px in scenes.items() if i % 3 == 0],
         "doc_id bigint, media binary",
     )
-    c_fp = dhash_images(corpus_media).withColumnRenamed("dhash", "fp")
-    b_fp = dhash_images(batch_media).withColumnRenamed("dhash", "fp")
+    c_fp = image_hashes(corpus_media).select("doc_id", F.col("dhash").alias("fp"))
+    b_fp = image_hashes(batch_media).select("doc_id", F.col("dhash").alias("fp"))
     idx = write_media_fp_index(c_fp, "doc_id", "fp", str(tmp_path / "mf_dhash"), blocks=4, modality="image")
     got = _rows(media_candidates_against_index(b_fp, idx, "doc_id", "fp", max_hamming=3))
     oneshot = image_neardup_dhash(corpus_media.unionByName(batch_media), max_hamming=3, blocks=4)
