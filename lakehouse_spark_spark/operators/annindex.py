@@ -990,6 +990,7 @@ def ann_index_topk(
     which computes the same LUTs executor-side and never collects a
     vector. Returns (query_id, neighbor_id, sq_dist, rank<=k)."""
     from lakehouse_spark_spark.operators.similarity import ivfpq_probe_lut_rows
+    from lakehouse_spark_spark.sources.loaders import arrow_rows_df
 
     spark = index.cells.sparkSession
     id_col = index.id_col
@@ -999,14 +1000,13 @@ def ann_index_topk(
 
     qrows = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).collect()
     probe_rows = ivfpq_probe_lut_rows(qrows, index.centroids, index.codebooks, n_probe)
-    probes = spark.createDataFrame(
-        probe_rows, f"query_id {id_dt}, cell INT, lut ARRAY<DOUBLE>"
-    )
+    probes = arrow_rows_df(spark, probe_rows, f"query_id {id_dt}, cell INT, lut ARRAY<DOUBLE>")
     probed_cells = sorted({c for _, c, _ in probe_rows})
     # the query side is rebuilt from the ALREADY-COLLECTED probe rows —
     # referencing the caller's lazy frame here would splice its source
     # scan (often the corpus parquet) back into the search plan
-    q = spark.createDataFrame(
+    q = arrow_rows_df(
+        spark,
         [(r["query_id"], [float(x) for x in r["__qv"]]) for r in qrows],
         f"query_id {id_dt}, __qv ARRAY<DOUBLE>",
     )

@@ -34,8 +34,8 @@ def build_dimension(
     if unknown_row is not None:
         from lakehouse_spark_spark.sources.loaders import local_rows_df
 
-        # JVM-side literal row (see local_rows_df: a Python
-        # LocalRelation costs seconds per downstream write action)
+        # JVM-side literal row (see local_rows_df: a pickled-row
+        # Python list costs seconds per downstream write action)
         schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in dim.schema.fields)
         unknown = local_rows_df(dim.sparkSession, [tuple(unknown_row[c] for c in dim.columns)], schema)
         dim = dim.unionByName(unknown)

@@ -3,9 +3,10 @@ Arrow-batched decode/feature plumbing.
 
 Design (the 100 TB shape): media lives as an opaque ``binary`` column
 (or an object-store URI for large assets) beside typed metadata columns.
-Decode / resize / frame-sample run as ``mapInPandas`` batch iterators —
-Arrow moves the bytes to Python in columnar batches, one Python worker
-per partition, no per-row serde.
+Decode / resize / frame-sample run as ``mapInPandas`` batch iterators and
+the perceptual fingerprints as one ``mapInArrow`` pass
+(``_fingerprint_pass``) — Arrow moves the bytes to Python in columnar
+batches, one Python worker per partition, no per-row serde.
 
 The codecs are REAL wherever the format allows without external
 libraries:
@@ -515,13 +516,16 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     REAL: every Nth length-prefixed frame payload is emitted intact —
     one input row fans out to many output rows, the mapInPandas
     iterator shape real ffmpeg sampling has (output batches NOT 1:1
-    with input rows). Non-container payloads fall back to the
-    deterministic byte-slice stub so the pipeline stays total."""
+    with input rows). Other non-empty payloads fall back to the
+    deterministic byte-slice stub so the pipeline stays total; NULL and
+    empty payloads sample no frames."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+                if not payload:
+                    continue
                 payload = bytes(payload)
                 frames = parse_framestack(payload)
                 if frames is not None:
@@ -751,15 +755,18 @@ def phash64(px, grid: int = 32) -> int | None:
     return v
 
 
-def _decode_pixels(payload: bytes):
+def _decode_pixels(payload: bytes | None):
     """Pixel array of a PNG (decode_png_pixels) or baseline-JPEG (the
-    T.81 codec) payload, or None when neither codec accepts it.
+    T.81 codec) payload, or None when neither codec accepts it or the
+    payload is NULL or empty.
     decode_png_pixels RAISES on a valid magic with garbage inside
     (truncated IHDR, corrupt IDAT): one malformed payload in a corpus
     must quarantine, not fail the Spark task (decode_jpeg_baseline is
     already total)."""
     from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
 
+    if not payload:
+        return None
     raw = bytes(payload)
     try:
         px = decode_png_pixels(raw)
@@ -768,41 +775,112 @@ def _decode_pixels(payload: bytes):
     return px if px is not None else decode_jpeg_baseline(raw)
 
 
-def image_hashes(media: DataFrame) -> DataFrame:
-    """(doc_id, phash, dhash): the one image fingerprint pass. Each
-    payload is decoded for real once (:func:`_decode_pixels`) and both
-    hash kernels run on the decoded array — the decode is the dominant
-    cost (zlib inflate + unfilter / Huffman + IDCT per image), the two
-    kernels together are microseconds, so a consumer that needs one
-    hash selects its column and the pHash∧dHash verify stage gets its
-    second signal without a second decode. Undecodable payloads come
-    back NULL in both columns; callers quarantine them. Scale: per-row
-    work only (no shuffle, no state); the Arrow batch size bounds
-    decode memory as for decode_images."""
+def _image_fp(payload: bytes | None) -> tuple[int | None, int | None]:
+    """(phash, dhash) of one image payload from one decode."""
+    px = _decode_pixels(payload)
+    return phash64(px), dhash64(px)
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ph, dh = [], []
-            for payload in pdf["media"]:
-                px = _decode_pixels(payload)
-                ph.append(phash64(px))
-                dh.append(dhash64(px))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "phash": pd.array(ph, dtype="Int64"),
-                    "dhash": pd.array(dh, dtype="Int64"),
-                }
-            )
 
+# The fingerprint columns each payload column of :func:`_fingerprint_pass`
+# turns into, in output order.
+_FP_COLUMNS = {
+    "image": (("phash", T.LongType()), ("dhash", T.LongType())),
+    "audio": (("afp", T.LongType()), ("afp_alt", T.LongType())),
+    "video": (("frame_fps", T.ArrayType(T.LongType())),),
+}
+
+
+def _fingerprint_pass(df: DataFrame, every_n: int = 1) -> DataFrame:
+    """The one Python pass behind every media fingerprint: ``df`` holds
+    any of the payload columns ``image``, ``audio`` and ``video`` beside
+    columns that pass through untouched (the id, a text SimHash). Each
+    payload column comes back as its fingerprints (``_FP_COLUMNS``):
+    image → (phash, dhash) from one decode (:func:`_image_fp`), audio →
+    (afp, afp_alt) from one WAV parse (:func:`_audio_fp`), video →
+    ``frame_fps``, the pHash of every ``every_n``-th FSTK frame with
+    NULL where a frame does not decode (:func:`_video_fp`). NULL,
+    empty and undecodable payloads give NULL hashes (no frames for
+    video). Payload columns left out of ``df`` are left out of the
+    pass, so a caller pays only for the modalities it supplies.
+
+    Arrow batches in and out (``mapInArrow``): pandas would carry a
+    pass-through long column through float64 whenever its batch holds a
+    NULL, which rounds a 63-bit fingerprint. Scale: per-row work only
+    (no shuffle, no state); the Arrow batch size bounds decode memory as
+    for decode_images."""
+    kernels = {"image": _image_fp, "audio": _audio_fp, "video": lambda p: (_video_fp(p, every_n),)}
+    present = [c for c in _FP_COLUMNS if c in df.columns]
+    keep = [f for f in df.schema.fields if f.name not in present]
     schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("phash", T.LongType()),
-            T.StructField("dhash", T.LongType()),
-        ]
+        keep + [T.StructField(n, t) for c in present for n, t in _FP_COLUMNS[c]]
     )
-    return media.mapInPandas(do, schema)
+
+    def do(batches):
+        import pyarrow as pa
+
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        for batch in batches:
+            cols = [batch.column(f.name) for f in keep]
+            for c in present:
+                fps = [kernels[c](p) for p in batch.column(c).to_pylist()]
+                cols += [
+                    pa.array([fp[i] for fp in fps], type=to_arrow_type(t))
+                    for i, (_, t) in enumerate(_FP_COLUMNS[c])
+                ]
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return df.mapInArrow(do, schema)
+
+
+def image_hashes(media: DataFrame) -> DataFrame:
+    """(doc_id, phash, dhash): the image fingerprints of (doc_id, media).
+    Each payload is decoded for real once (:func:`_decode_pixels`) and
+    both hash kernels run on the decoded array — the decode is the
+    dominant cost (zlib inflate + unfilter / Huffman + IDCT per image),
+    the two kernels together are microseconds, so a consumer that needs
+    one hash selects its column and the pHash∧dHash verify stage gets
+    its second signal without a second decode. NULL, empty and
+    undecodable payloads come back NULL in both columns; callers
+    quarantine them. One :func:`_fingerprint_pass`."""
+    return _fingerprint_pass(media.select(F.col("doc_id").cast("long"), F.col("media").alias("image")))
+
+
+def _hamming_pairs(
+    hashes: DataFrame,
+    fp_col: str,
+    aux_col: str,
+    max_hamming: int,
+    blocks: int,
+    max_bucket: int | None,
+    verify_max_hamming: int | None,
+) -> DataFrame:
+    """Candidates + verify from a (doc_id, <fp_col>, <aux_col>) hash
+    table — the half of :func:`image_neardup_phash` and
+    :func:`audio_neardup_afp` after the fingerprint pass, shared with
+    :func:`multimodal_dedup_disposition`. NULL ``fp_col`` rows
+    (undecodable payloads) are excluded; ``fp_col`` pairs come from the
+    shared pigeonhole join, and with ``verify_max_hamming`` set each
+    pair also needs its ``aux_col`` fingerprints within that radius
+    (two slim re-attach joins). ``hashes`` is read up to three times,
+    so callers pass a checkpointed table. Returns (id_a, id_b, hamming)."""
+    from lakehouse_spark_spark.operators.neardup import simhash_candidates
+
+    hashes = hashes.filter(F.col(fp_col).isNotNull())
+    cand = simhash_candidates(
+        hashes.select("doc_id", F.col(fp_col).alias("simhash")),
+        "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
+    )
+    if verify_max_hamming is None:
+        return cand
+    x_a = hashes.select(F.col("doc_id").alias("id_a"), F.col(aux_col).alias("__aux_a"))
+    x_b = hashes.select(F.col("doc_id").alias("id_b"), F.col(aux_col).alias("__aux_b"))
+    return (
+        cand.join(x_a, "id_a")
+        .join(x_b, "id_b")
+        .filter(F.bit_count(F.col("__aux_a").bitwiseXOR(F.col("__aux_b"))) <= verify_max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
 
 
 def image_neardup_phash(
@@ -842,27 +920,10 @@ def image_neardup_phash(
     the default verify radius 8 separates cleanly. Both hashes come
     from ONE decode pass (:func:`image_hashes`), so the second signal
     costs no second decode; the extra plan is two slim fingerprint
-    re-attach joins."""
-    from lakehouse_spark_spark.operators.neardup import simhash_candidates
-
-    hashes = (
-        image_hashes(media)
-        .filter(F.col("phash").isNotNull())
-        .localCheckpoint(eager=False)  # one decode pass: block join + verify re-attach
-    )
-    cand = simhash_candidates(
-        hashes.select("doc_id", F.col("phash").alias("simhash")),
-        "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
-    )
-    if verify_dhash_max_hamming is None:
-        return cand
-    d_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("dhash").alias("__dh_a"))
-    d_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("dhash").alias("__dh_b"))
-    return (
-        cand.join(d_a, "id_a")
-        .join(d_b, "id_b")
-        .filter(F.bit_count(F.col("__dh_a").bitwiseXOR(F.col("__dh_b"))) <= verify_dhash_max_hamming)
-        .select("id_a", "id_b", "hamming")
+    re-attach joins (:func:`_hamming_pairs`)."""
+    hashes = image_hashes(media).localCheckpoint(eager=False)  # block join + verify re-attach
+    return _hamming_pairs(
+        hashes, "phash", "dhash", max_hamming, blocks, max_bucket, verify_dhash_max_hamming
     )
 
 
@@ -941,13 +1002,16 @@ def afp64(rate, samples, frames: int = 8, bands: int = 9, f_lo: float = 50.0) ->
     return bits & ((1 << 63) - 1)
 
 
-def _wav_mono(payload: bytes):
+def _wav_mono(payload: bytes | None):
     """(rate, mono float samples) of a 16-bit PCM WAV payload (parse_wav:
-    RIFF walk), or None when it is not one. Interleaved multichannel
+    RIFF walk), or None when it is not one (NULL and empty payloads
+    included). Interleaved multichannel
     data is downmixed by averaging; a data chunk that is not a whole
     number of frames has its tail torn across channels and is
     quarantined (None) like any other malformed payload rather than
     fingerprinted as the raw interleaved stream."""
+    if not payload:
+        return None
     parsed = parse_wav(bytes(payload))
     if parsed is None:
         return None
@@ -959,47 +1023,27 @@ def _wav_mono(payload: bytes):
     return rate, samples
 
 
+def _audio_fp(payload: bytes | None) -> tuple[int | None, int | None]:
+    """(afp, afp_alt) of one audio payload from one WAV parse."""
+    clip = _wav_mono(payload)
+    if clip is None:
+        return None, None
+    rate, samples = clip
+    return afp64(rate, samples), afp64(rate, samples, frames=4, bands=17)
+
+
 def audio_hashes(media: DataFrame) -> DataFrame:
-    """(doc_id, afp, afp_alt): the one audio fingerprint pass. Each
-    payload is decoded once (:func:`_wav_mono`) and fingerprinted in two
+    """(doc_id, afp, afp_alt): the audio fingerprints of (doc_id, media).
+    Each payload is decoded once (:func:`_wav_mono`) and fingerprinted in two
     geometries: the primary Haitsma/Kalker 8 frames x 9 bands, and a
     second one of 4 longer frames x 17 finer bands — a genuinely
     different time/frequency resolution, so its near-tie bit flips are
     decorrelated from the primary's (the verify signal of
     :func:`audio_neardup_afp`). The WAV parse dominates; the second
-    geometry is one more small rFFT per clip. Non-PCM-WAV and torn
-    multichannel payloads come back NULL in both columns; callers
-    quarantine them. Scale: per-row work only (no shuffle, no state);
-    the Arrow batch size bounds decode memory."""
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            main, alt = [], []
-            for payload in pdf["media"]:
-                clip = _wav_mono(payload)
-                if clip is None:
-                    main.append(None)
-                    alt.append(None)
-                    continue
-                rate, samples = clip
-                main.append(afp64(rate, samples))
-                alt.append(afp64(rate, samples, frames=4, bands=17))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "afp": pd.array(main, dtype="Int64"),
-                    "afp_alt": pd.array(alt, dtype="Int64"),
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("afp", T.LongType()),
-            T.StructField("afp_alt", T.LongType()),
-        ]
-    )
-    return media.mapInPandas(do, schema)
+    geometry is one more small rFFT per clip. NULL, empty, non-PCM-WAV
+    and torn multichannel payloads come back NULL in both columns;
+    callers quarantine them. One :func:`_fingerprint_pass`."""
+    return _fingerprint_pass(media.select(F.col("doc_id").cast("long"), F.col("media").alias("audio")))
 
 
 def audio_neardup_afp(
@@ -1030,26 +1074,9 @@ def audio_neardup_afp(
     phase-adjacent collision that happens to agree at one resolution
     has no reason to agree at the other. Both geometries come from ONE
     decode+FFT pass (:func:`audio_hashes`) — no second decode."""
-    from lakehouse_spark_spark.operators.neardup import simhash_candidates
-
-    hashes = (
-        audio_hashes(media)
-        .filter(F.col("afp").isNotNull())
-        .localCheckpoint(eager=False)  # one decode pass: block join + verify re-attach
-    )
-    cand = simhash_candidates(
-        hashes.select("doc_id", F.col("afp").alias("simhash")),
-        "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
-    )
-    if verify_alt_max_hamming is None:
-        return cand
-    a_a = hashes.select(F.col("doc_id").alias("id_a"), F.col("afp_alt").alias("__alt_a"))
-    a_b = hashes.select(F.col("doc_id").alias("id_b"), F.col("afp_alt").alias("__alt_b"))
-    return (
-        cand.join(a_a, "id_a")
-        .join(a_b, "id_b")
-        .filter(F.bit_count(F.col("__alt_a").bitwiseXOR(F.col("__alt_b"))) <= verify_alt_max_hamming)
-        .select("id_a", "id_b", "hamming")
+    hashes = audio_hashes(media).localCheckpoint(eager=False)  # block join + verify re-attach
+    return _hamming_pairs(
+        hashes, "afp", "afp_alt", max_hamming, blocks, max_bucket, verify_alt_max_hamming
     )
 
 
@@ -1058,10 +1085,45 @@ def audio_neardup_afp(
 # another when ENOUGH of its sampled frames are perceptual near-dups of
 # the other's frames — the standard frame-fingerprint voting shape
 # (sample -> per-frame hash -> frame-level candidate join -> per-clip
-# vote). Every stage is an existing operator: sample_frames (real FSTK
-# parse), image_hashes (real PNG/JPEG decode + DCT hash), and the
-# shared pigeonhole Hamming-block join; this function only adds the
-# frame<->clip keying and the vote aggregation.
+# vote). The per-frame work is one Python pass (the FSTK parse of
+# sample_frames and the decode + DCT hash of image_hashes, per clip row);
+# the frame<->clip keying, the shared pigeonhole Hamming-block join and
+# the vote aggregation are JVM plan.
+
+
+def _video_fp(payload: bytes | None, every_n: int) -> list[int | None]:
+    """pHash of every ``every_n``-th frame of an FSTK clip (NULL where a
+    frame does not decode); no frames for NULL, empty and non-FSTK
+    payloads — sample_frames' byte-slice stub for those never decodes."""
+    frames = parse_framestack(bytes(payload)) if payload else None
+    return [phash64(_decode_pixels(f)) for f in frames[::every_n]] if frames else []
+
+
+def _keyed_frames(frame_fps: DataFrame, every_n: int, frame_key_stride: int) -> DataFrame:
+    """(doc_id, fp) frame rows of a (doc_id, frame_fps) pass table under
+    the composite key ``clip_id * frame_key_stride + frame_idx``, where
+    array position p holds frame p * every_n. A clip whose last sampled
+    frame index reaches the stride fails the query, undecodable frames
+    included; NULL fingerprints are dropped after the guard."""
+    first_bad = -(-frame_key_stride // every_n) * every_n  # first sampled idx >= stride
+    guarded = F.when(
+        (F.size("frame_fps").cast("long") - 1) * every_n < F.lit(frame_key_stride),
+        F.col("frame_fps"),
+    ).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"video_frame_fingerprints: frame_idx {first_bad} of clip %d >= frame_key_stride "
+                f"{frame_key_stride}; raise the stride",
+                F.col("doc_id"),
+            )
+        )
+    )
+    key = F.col("doc_id").cast("long") * F.lit(frame_key_stride) + F.col("pos").cast("long") * every_n
+    return (
+        frame_fps.select("doc_id", F.posexplode(guarded).alias("pos", "fp"))
+        .filter(F.col("fp").isNotNull())
+        .select(key.alias("doc_id"), "fp")
+    )
 
 
 def video_frame_fingerprints(
@@ -1074,27 +1136,51 @@ def video_frame_fingerprints(
     media-fingerprint index (operators/mediaindex — a video index IS a
     media_fp index over these composite-keyed frame fingerprints, so
     fold/probe/compaction machinery is reused, not re-implemented).
-    Requires frame_idx < stride and clip_id < 2^63/stride. A frame at
-    or past the stride fails the query: its key would alias a frame of
-    the next clip and the frame vote would pair unrelated clips.
-    Undecodable frames are dropped (NULL quarantine)."""
-    frames = sample_frames(media, every_n=every_n)
-    key = F.when(
-        F.col("frame_idx") < F.lit(frame_key_stride),
-        F.col("doc_id") * F.lit(frame_key_stride) + F.col("frame_idx"),
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                f"video_frame_fingerprints: frame_idx %d of clip %d >= frame_key_stride "
-                f"{frame_key_stride}; raise the stride",
-                F.col("frame_idx"), F.col("doc_id"),
-            )
-        )
+    One Python pass per clip row (:func:`_fingerprint_pass`: FSTK parse,
+    every Nth frame decoded and pHashed — the frames of sample_frames,
+    the phash of image_hashes). Requires frame_idx < stride and
+    clip_id < 2^63/stride. A sampled frame at or past the stride fails
+    the query: its key would alias a frame of the next clip and the
+    frame vote would pair unrelated clips. Undecodable frames are
+    dropped (NULL quarantine); NULL, empty and non-FSTK payloads give
+    no frames."""
+    fps = _fingerprint_pass(
+        media.select(F.col("doc_id").cast("long"), F.col("media").alias("video")), every_n
     )
+    return _keyed_frames(fps, every_n, frame_key_stride)
+
+
+def _frame_vote(
+    frame_fps: DataFrame,
+    frame_key_stride: int,
+    max_hamming: int,
+    blocks: int,
+    min_matched_frames: int,
+    max_bucket: int | None,
+) -> DataFrame:
+    """The half of :func:`video_neardup_phash` after the fingerprint
+    pass, shared with :func:`multimodal_dedup_disposition`: the frame
+    join over composite-keyed (doc_id, fp) rows and the per-clip vote.
+    Returns (id_a, id_b, matched_frames, min_hamming)."""
+    from lakehouse_spark_spark.operators.neardup import simhash_candidates
+
+    cand = simhash_candidates(
+        frame_fps.withColumnRenamed("fp", "simhash"), "doc_id",
+        max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket,
+    )
+    pairs = cand.select(
+        F.expr(f"id_a DIV {frame_key_stride}").alias("clip_a"),
+        F.expr(f"id_a % {frame_key_stride}").alias("frame_a"),
+        F.expr(f"id_b DIV {frame_key_stride}").alias("clip_b"),
+        "hamming",
+    ).filter(F.col("clip_a") != F.col("clip_b"))
     return (
-        image_hashes(frames.select(key.alias("doc_id"), F.col("frame").alias("media")))
-        .select("doc_id", F.col("phash").alias("fp"))
-        .filter(F.col("fp").isNotNull())
+        pairs.groupBy(F.col("clip_a").alias("id_a"), F.col("clip_b").alias("id_b"))
+        .agg(
+            F.countDistinct("frame_a").alias("matched_frames"),
+            F.min("hamming").alias("min_hamming"),
+        )
+        .filter(F.col("matched_frames") >= min_matched_frames)
     )
 
 
@@ -1136,38 +1222,20 @@ def video_neardup_phash(
     without ``max_bucket`` the frame join materializes that cluster's
     square. The equal-fingerprint rescue star keeps exact-frame dups
     flowing into the vote."""
-    from lakehouse_spark_spark.operators.neardup import simhash_candidates
-
-    fp = video_frame_fingerprints(
-        media, every_n=every_n, frame_key_stride=frame_key_stride
-    ).withColumnRenamed("fp", "simhash")
-    cand = simhash_candidates(
-        fp, "doc_id", max_hamming=max_hamming, blocks=blocks, max_bucket=max_bucket
-    )
-    pairs = cand.select(
-        F.expr(f"id_a DIV {frame_key_stride}").alias("clip_a"),
-        F.expr(f"id_a % {frame_key_stride}").alias("frame_a"),
-        F.expr(f"id_b DIV {frame_key_stride}").alias("clip_b"),
-        "hamming",
-    ).filter(F.col("clip_a") != F.col("clip_b"))
-    return (
-        pairs.groupBy(F.col("clip_a").alias("id_a"), F.col("clip_b").alias("id_b"))
-        .agg(
-            F.countDistinct("frame_a").alias("matched_frames"),
-            F.min("hamming").alias("min_hamming"),
-        )
-        .filter(F.col("matched_frames") >= min_matched_frames)
-    )
+    fp = video_frame_fingerprints(media, every_n=every_n, frame_key_stride=frame_key_stride)
+    return _frame_vote(fp, frame_key_stride, max_hamming, blocks, min_matched_frames, max_bucket)
 
 
 # --- cross-modal dedup disposition -------------------------------------
 # The composition a real multimodal pipeline runs: an ASSET is a dup if
-# ANY of its modalities near-dups a lower-id asset. Each modality
-# contributes candidate edges through its existing operator (text
-# SimHash, image pHash, audio afp64, video frame-vote); the union of
-# edges feeds the existing deterministic connected-components operator;
-# the min id of each component keeps. Nothing here is new machinery —
-# it is the one-join composition of six existing operators.
+# ANY of its modalities near-dups a lower-id asset. The assets are
+# scanned ONCE: one fingerprint pass turns each row into longs (text
+# SimHash as a JVM column, then _fingerprint_pass for the media), and
+# each modality's candidate edges come from that narrow table through
+# the same half its one-shot operator runs (simhash_candidates,
+# _hamming_pairs with verify for image pHash and audio afp64,
+# _frame_vote for video). The union of edges feeds the deterministic
+# connected-components operator; the min id of each component keeps.
 
 
 def multimodal_dedup_disposition(
@@ -1193,8 +1261,10 @@ def multimodal_dedup_disposition(
     deterministic fingerprint join and the component label is a
     fixpoint independent of iteration order.
 
-    Scale: each modality's edges are its existing bounded candidate
-    join (``max_bucket`` is the shared hot-bucket guard, essential on
+    Scale: the assets are read once. One pass per row keeps only longs
+    (id, SimHash, image/audio hashes, frame pHashes — media blobs are
+    never persisted), checkpointed; each modality's edges are its
+    bounded candidate join over that table (``max_bucket`` is the shared hot-bucket guard, essential on
     real media where solid-color frames / silence / boilerplate text
     hash identically by the million — exact-dup clusters above the cap
     still dedup through the rescue star); the union is
@@ -1219,29 +1289,46 @@ def multimodal_dedup_disposition(
     ``text_max_hamming``/``text_blocks`` and ``video_every_n`` size the
     text and video joins to the corpus."""
     from lakehouse_spark_spark.operators.graph import connected_components
-    from lakehouse_spark_spark.operators.neardup import simhash, simhash_candidates
+    from lakehouse_spark_spark.operators.neardup import simhash_candidates, simhash_column
+
+    supplied = {"image": image_col, "audio": audio_col, "video": video_col}
+    media = {m: c for m, c in supplied.items() if c is not None}
+    if text_col is None and not media:
+        raise ValueError("multimodal_dedup_disposition: supply at least one modality column")
+    cols = [F.col(id_col).alias("doc_id")]
+    if text_col is not None:
+        cols.append(simhash_column(text_col).alias("simhash"))
+    fps = assets.select(*cols, *[F.col(c).alias(m) for m, c in media.items()])
+    if media:
+        fps = _fingerprint_pass(fps, every_n=video_every_n)
+    # Every edge source and the id list read this one table of longs.
+    # Eager: the one job runs either way, and a lazy checkpoint here
+    # lost the SQL-metric accumulators of its plan (the DAGScheduler
+    # logged "attempted to access non-existent accumulator" when the
+    # plan was garbage-collected before the job that fills it ran).
+    fps = fps.localCheckpoint(eager=True)
 
     def _text_edges():
-        fp = simhash(assets.select(F.col(id_col), F.col(text_col)), id_col, text_col)
         e = simhash_candidates(
-            fp, id_col, max_hamming=text_max_hamming, blocks=text_blocks,
-            max_bucket=max_bucket,
+            fps.select("doc_id", "simhash"), "doc_id", max_hamming=text_max_hamming,
+            blocks=text_blocks, max_bucket=max_bucket,
         )
         return e.select("id_a", "id_b", F.lit("text").alias("modality"))
 
+    # radii and block counts: image_neardup_phash's and
+    # audio_neardup_afp's defaults with their verify radii 8 and 4,
+    # video_neardup_phash's defaults
     def _image_edges():
-        med = assets.select(F.col(id_col).alias("doc_id"), F.col(image_col).alias("media"))
-        e = image_neardup_phash(med, max_bucket=max_bucket, verify_dhash_max_hamming=8)
+        e = _hamming_pairs(fps, "phash", "dhash", 10, 8, max_bucket, 8)
         return e.select("id_a", "id_b", F.lit("image").alias("modality"))
 
     def _audio_edges():
-        med = assets.select(F.col(id_col).alias("doc_id"), F.col(audio_col).alias("media"))
-        e = audio_neardup_afp(med, max_bucket=max_bucket, verify_alt_max_hamming=4)
+        e = _hamming_pairs(fps, "afp", "afp_alt", 6, 8, max_bucket, 4)
         return e.select("id_a", "id_b", F.lit("audio").alias("modality"))
 
     def _video_edges():
-        med = assets.select(F.col(id_col).alias("doc_id"), F.col(video_col).alias("media"))
-        e = video_neardup_phash(med, every_n=video_every_n, max_bucket=max_bucket)
+        frames = _keyed_frames(fps, video_every_n, 1_000_000)
+        e = _frame_vote(frames, 1_000_000, 10, 8, 3, max_bucket)
         return e.select("id_a", "id_b", F.lit("video").alias("modality"))
 
     builders = [
@@ -1252,17 +1339,15 @@ def multimodal_dedup_disposition(
         )
         if col is not None
     ]
-    if not builders:
-        raise ValueError("multimodal_dedup_disposition: supply at least one modality column")
     if len(builders) > 1:
         # build edge frames CONCURRENTLY (one thread per modality):
         # the builders launch no Spark job, but each spends driver time
-        # constructing and analyzing its plan (decode UDFs, block
-        # explode, hot-bucket guard, verify joins). The pool overlaps
-        # that time: at the sf0.01 gated fixture on 4 vCPUs the four
-        # warm builders took 0.8-1.0 s together with it and 1.5-2.1 s
-        # one after another. Result order stays the fixed modality
-        # order — determinism is unaffected.
+        # constructing and analyzing its plan (block explode, hot-bucket
+        # guard, verify joins, frame vote). The pool overlaps that time:
+        # on the registry fixture (4 vCPUs) a warm builder call took
+        # 2.3-2.9 s with it and 2.7-3.4 s building one after another.
+        # Result order stays the fixed modality order — determinism is
+        # unaffected.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(builders)) as pool:
@@ -1281,7 +1366,7 @@ def multimodal_dedup_disposition(
         .groupBy("node")
         .agg(F.sort_array(F.collect_set("modality")).alias("modalities"))
     )
-    ids = assets.select(F.col(id_col).alias("node"))
+    ids = fps.select(F.col("doc_id").alias("node"))
     return (
         ids.join(comps, "node", "left")
         .join(mods, "node", "left")

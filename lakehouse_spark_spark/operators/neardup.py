@@ -27,7 +27,7 @@ import json
 import os
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from lakehouse_spark_spark.operators.text import norm_text
 from lakehouse_spark_spark.sources.sinks import (
@@ -205,6 +205,11 @@ def minhash_lsh_candidates(
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash): :func:`simhash_column` of every row's text."""
+    return df.select(F.col(id_col), simhash_column(text_col).alias("simhash"))
+
+
+def simhash_column(text_col: str) -> Column:
     """64-bit SimHash over whitespace tokens: per bit position, sum +1/-1
     votes weighted by token occurrence, sign → bit (tie = 0).
 
@@ -229,12 +234,11 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         zeros,
         lambda acc, h: F.zip_with(acc, pow2, lambda a, p: a + F.when(h.bitwiseAND(p) != 0, 1).otherwise(-1)),
     )
-    fingerprint = F.aggregate(
+    return F.aggregate(
         F.zip_with(votes, pow2, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long"))),
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    return df.select(F.col(id_col), fingerprint.alias("simhash"))
 
 
 # Hot-set broadcast ceiling: the hot-bucket guard's anti-join side is

@@ -812,6 +812,8 @@ def ivfpq_topk(
     The full composed 100 TB ANN shape: cell pruning bounds IO, codes
     bound bandwidth, re-rank bounds accuracy loss.
     Returns (query_id, neighbor_id, sq_dist, rank≤k)."""
+    from lakehouse_spark_spark.sources.loaders import arrow_rows_df
+
     m, kk = len(codebooks), len(codebooks[0])
     spark = corpus.sparkSession
 
@@ -820,9 +822,7 @@ def ivfpq_topk(
         (int(qid), cell, lut)
         for qid, cell, lut in ivfpq_probe_lut_rows(qrows, centroids, codebooks, n_probe)
     ]
-    probes = spark.createDataFrame(
-        probe_rows, "query_id BIGINT, cell INT, lut ARRAY<DOUBLE>"
-    )
+    probes = arrow_rows_df(spark, probe_rows, "query_id BIGINT, cell INT, lut ARRAY<DOUBLE>")
 
     cand = index.select(F.col(id_col).alias("neighbor_id"), "cell", "codes").join(
         F.broadcast(probes), "cell"

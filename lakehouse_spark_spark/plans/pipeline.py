@@ -135,8 +135,8 @@ def run_pipeline(spark: SparkSession, data_dir: str, orphan_to_unknown: bool = F
 
 def run_log(spark: SparkSession, result: PipelineResult, run_id: str, started_at, ended_at) -> DataFrame:
     """One-row observability record (src/pipeline.py:333-366). Built
-    JVM-side (local_rows_df) — a Python LocalRelation costs seconds per
-    write action in Spark 4, absurd for a 1-row control record."""
+    JVM-side (local_rows_df) — a pickled-row Python list costs seconds
+    per write action in Spark 4, absurd for a 1-row control record."""
     from lakehouse_spark_spark.sources.loaders import local_rows_df
 
     dur = (ended_at - started_at).total_seconds()

@@ -1954,7 +1954,7 @@ def audio_neardup_afp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Video near-dup via frame-sampled pHash voting: the fourth modality
 # of the dedup family. Clips are FSTK framestacks of 6
 # textured 48x48 scenes keyed by (doc_id, frame) — parsed, decoded, and
-# hashed FOR REAL (sample_frames + image_hashes); EVERY sampled doc
+# hashed FOR REAL (video_frame_fingerprints); EVERY sampled doc
 # plants a twin whose frames are half-size re-renderings of its own
 # scenes. A clip pair survives when >= 3 of the 6 sampled lower-clip
 # frames match within Hamming 10. Measured at sf0.1 (125 clips + 125

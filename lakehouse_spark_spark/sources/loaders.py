@@ -140,14 +140,16 @@ def local_rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
     """JVM-native in-memory row source (SURVEY.md S2) for small
     control-plane tables (run logs, synthetic dimension members).
 
-    ``spark.createDataFrame(rows)`` builds a Python-side LocalRelation
-    that Spark 4 re-ships through a several-second py4j/serialization
-    handshake on EVERY write action (measured ~4 s for ONE row, vs
-    0.2 s for the same data built from ``spark.range``). This helper
-    keeps the literals entirely JVM-side: each column is an array
-    literal indexed by ``range(n)``, so writes of control tables cost
-    milliseconds. Use for driver-known constants only — data rows come
-    from real sources.
+    ``spark.createDataFrame(rows)`` with a Python list pickles the rows
+    into a ``PythonRDD`` (the plan's ``Scan ExistingRDD``): every action
+    over it starts a Python daemon with its own workers to unpickle them
+    again (measured ~4 s for ONE row on a write, vs 0.2 s for the same
+    data built from ``spark.range``). This helper keeps the literals
+    entirely JVM-side: each column is an array literal indexed by
+    ``range(n)``, so writes of control tables cost milliseconds. Use for
+    driver-known constants only — data rows come from real sources;
+    driver-computed tables too large for literals go through
+    :func:`arrow_rows_df`.
 
     ``schema``: "name type, name type, …" (the createDataFrame DDL
     subset; values are cast to the declared types).
@@ -160,6 +162,24 @@ def local_rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFr
             for i, (name, typ) in enumerate(fields)
         ]
     )
+
+
+def arrow_rows_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-computed table (search probes, collected query vectors)
+    as a JVM ``LocalRelation``: the rows go to the JVM as one Arrow
+    table, so the plan is a ``LocalTableScan`` — whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says — and no action
+    over it starts a Python worker. A Python list would become a
+    pickled-row ``PythonRDD`` (see :func:`local_rows_df`), a pandas
+    frame one too when that conf is off. ``schema`` is a DDL string;
+    the columns are cast to it."""
+    import pyarrow as pa
+
+    from pyspark.sql.types import DataType
+
+    names = DataType.fromDDL(schema).names
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    return spark.createDataFrame(pa.table({n: list(c) for n, c in zip(names, cols)}), schema)
 
 
 def parallelize_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -492,16 +492,10 @@ def multimodal_ingest_foreach_batch(
     text_max_hamming: int = 3,
     image_index_path: str | None = None,
     image_col: str | None = None,
-    image_max_hamming: int = 10,
-    image_verify_dhash_max_hamming: int | None = 8,
     audio_index_path: str | None = None,
     audio_col: str | None = None,
-    audio_max_hamming: int = 6,
-    audio_verify_alt_max_hamming: int | None = 4,
     video_index_path: str | None = None,
     video_col: str | None = None,
-    video_max_hamming: int = 10,
-    video_min_matched_frames: int = 3,
     video_every_n: int = 4,
     frame_key_stride: int = 1_000_000,
     max_bucket: int | None = None,
@@ -519,9 +513,11 @@ def multimodal_ingest_foreach_batch(
     1. hash each supplied modality ONCE (text SimHash; image
        pHash+dHash from one decode — image_hashes; audio afp+alt
        geometry from one decode — audio_hashes; video frame pHash);
-    2. probe each modality's index — image and audio probes run the
-       persisted verify conjunction when the index carries the aux
-       column (``aux_fp_cols``) and the verify radius is not None,
+    2. probe each modality's index at the one-shot disposition's radii
+       (image pHash 10, audio afp 6, video frame pHash 10 with a
+       3-frame vote) — image and audio probes run the persisted verify
+       conjunction (dHash within 8, second afp geometry within 4)
+       whenever the index carries the aux column (``aux_fp_cols``),
        killing the phase-adjacent single-signal false pairs exactly
        like the one-shot disposition's verify stage; video probes with
        the frame vote;
@@ -602,14 +598,9 @@ def multimodal_ingest_foreach_batch(
                 .localCheckpoint(eager=True)
             )
             _skew(image_index_path, idx, fps, id_col)
-            verify = (
-                ("dhash", image_verify_dhash_max_hamming)
-                if image_verify_dhash_max_hamming is not None and "dhash" in idx.aux_fp_cols
-                else None
-            )
+            verify = ("dhash", 8) if "dhash" in idx.aux_fp_cols else None
             cand = media_candidates_against_index(
-                fps, idx, id_col, "fp", max_hamming=image_max_hamming,
-                max_bucket=max_bucket, verify_aux=verify,
+                fps, idx, id_col, "fp", max_hamming=10, max_bucket=max_bucket, verify_aux=verify,
             )
             dup_frames.append(cand.select(F.col("new_id").alias(id_col)))
             folds.append((image_index_path, fps, "asset"))
@@ -623,14 +614,9 @@ def multimodal_ingest_foreach_batch(
                 .localCheckpoint(eager=True)
             )
             _skew(audio_index_path, idx, fps, id_col)
-            verify = (
-                ("afp_alt", audio_verify_alt_max_hamming)
-                if audio_verify_alt_max_hamming is not None and "afp_alt" in idx.aux_fp_cols
-                else None
-            )
+            verify = ("afp_alt", 4) if "afp_alt" in idx.aux_fp_cols else None
             cand = media_candidates_against_index(
-                fps, idx, id_col, "fp", max_hamming=audio_max_hamming,
-                max_bucket=max_bucket, verify_aux=verify,
+                fps, idx, id_col, "fp", max_hamming=6, max_bucket=max_bucket, verify_aux=verify,
             )
             dup_frames.append(cand.select(F.col("new_id").alias(id_col)))
             folds.append((audio_index_path, fps, "asset"))
@@ -642,10 +628,8 @@ def multimodal_ingest_foreach_batch(
             ).localCheckpoint(eager=True)
             _skew(video_index_path, idx, fps, "doc_id")
             cand = video_candidates_against_index(
-                None, idx, every_n=video_every_n, max_hamming=video_max_hamming,
-                min_matched_frames=video_min_matched_frames,
-                frame_key_stride=frame_key_stride, max_bucket=max_bucket,
-                frame_fps=fps,
+                None, idx, every_n=video_every_n, max_hamming=10, min_matched_frames=3,
+                frame_key_stride=frame_key_stride, max_bucket=max_bucket, frame_fps=fps,
             )
             dup_frames.append(cand.select(F.col("new_id").alias(id_col)))
             folds.append((video_index_path, fps, "frames"))

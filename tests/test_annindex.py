@@ -45,6 +45,34 @@ def test_persisted_search_equals_inplan_operator(spark, emb, tmp_path):
     assert got.count() == 5 * 5
 
 
+def test_search_probe_tables_are_local_table_scans(spark, emb, tmp_path):
+    """Both search fronts ship their driver-computed probe and query
+    tables to the JVM as Arrow: the executed plans scan them as a
+    LocalTableScan, never a pickled-row ExistingRDD (which starts a
+    Python daemon per action), whether or not the session's pyspark
+    Arrow conversion is enabled."""
+    idx = write_ann_index(emb, "vec_id", "embedding", str(tmp_path / "ann"), n_cells=8, m=8, k=16)
+    probes = emb.filter(F.col("vec_id") < 3)
+    inline_index = ivfpq_encode(emb, "vec_id", "embedding", idx.centroids, idx.codebooks)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for out in (
+                ann_index_topk(idx, probes, "embedding", k=3, n_probe=2, shortlist=8),
+                ivfpq_topk(
+                    emb, inline_index, probes, "vec_id", "embedding", idx.centroids,
+                    idx.codebooks, k=3, n_probe=2, shortlist=8,
+                ),
+            ):
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (arrow, plan)
+                assert out.count() == 3 * 3
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_search_is_corpus_free_and_reads_only_probed_cells(spark, emb, tmp_path):
     """The incremental contract: after write_ann_index, search consumes
     ONLY the index. The embeddings parquet is DELETED before execution

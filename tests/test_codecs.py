@@ -789,6 +789,146 @@ def test_video_frame_key_past_stride_fails_loudly(spark):
     assert video_neardup_phash(media, every_n=1, min_matched_frames=3).collect() == []
 
 
+def test_media_passes_quarantine_null_and_empty_payloads(spark):
+    """NULL, empty, truncated-PNG and non-FSTK payloads give NULL hashes
+    or no frames in every fingerprint pass — the per-modality ones and
+    the disposition's fused one — beside a good payload of each kind,
+    instead of failing the query."""
+    from lakehouse_spark_spark.operators.multimodal import (
+        audio_hashes,
+        encode_png_pixels,
+        image_hashes,
+        make_framestack,
+        make_wav_pcm,
+        multimodal_dedup_disposition,
+        sample_frames,
+        video_frame_fingerprints,
+    )
+
+    png = encode_png_pixels(_video_scene(1, 0))
+    clip = make_framestack([png, encode_png_pixels(_video_scene(1, 1))])
+    bad = [None, b"", png[:30], b"not an FSTK container"]  # ids 1..4
+    rows = [(0, bytearray(png), bytearray(make_wav_pcm(_audio_scene(1), 8000)), bytearray(clip))]
+    for i, p in enumerate(bad):
+        b = None if p is None else bytearray(p)
+        rows.append((i + 1, b, b, b))  # the same bad payload in every modality
+    assets = spark.createDataFrame(rows, "doc_id bigint, image binary, audio binary, video binary")
+
+    def media(col):
+        return assets.select("doc_id", F.col(col).alias("media"))
+
+    img = {r["doc_id"]: (r["phash"], r["dhash"]) for r in image_hashes(media("image")).collect()}
+    aud = {r["doc_id"]: (r["afp"], r["afp_alt"]) for r in audio_hashes(media("audio")).collect()}
+    assert None not in img[0] and None not in aud[0]
+    assert all(img[i] == (None, None) and aud[i] == (None, None) for i in range(1, 5))
+    sampled = {r["doc_id"] for r in sample_frames(media("video"), every_n=1).collect()}
+    assert {0, 3, 4} <= sampled and not sampled & {1, 2}  # NULL/empty sample nothing
+    fps = video_frame_fingerprints(media("video"), every_n=1).collect()
+    assert sorted(r["doc_id"] for r in fps) == [0, 1]  # clip 0's two frames only
+    out = multimodal_dedup_disposition(
+        assets, "doc_id", image_col="image", audio_col="audio", video_col="video", video_every_n=1
+    ).collect()
+    assert sorted((r["doc_id"], r["keep"]) for r in out) == [(i, True) for i in range(5)]
+
+
+def test_disposition_reads_its_assets_once(spark, tmp_path):
+    """The disposition scans its input once for all four modalities and
+    the id list: a mapInPandas source that records the rows it emits
+    sees each asset exactly once per disposition run."""
+    import os
+
+    from lakehouse_spark_spark.operators.multimodal import (
+        encode_png_pixels,
+        make_framestack,
+        make_wav_pcm,
+        multimodal_dedup_disposition,
+    )
+
+    n = 6
+    log_dir = str(tmp_path / "emitted")
+    os.makedirs(log_dir)
+    payloads = [  # built here: the source closure must not pickle this module
+        (
+            encode_png_pixels(_video_scene(i, 0)),
+            make_wav_pcm(_audio_scene(i), 8000),
+            make_framestack([encode_png_pixels(_video_scene(i, f)) for f in range(3)]),
+            "asset %d words" % i,
+        )
+        for i in range(n)
+    ]
+
+    def source(batches):
+        import uuid
+
+        import pandas as pd  # noqa: PLC0415
+
+        for pdf in batches:
+            rows = [(int(i), *payloads[int(i)]) for i in pdf["id"]]
+            with open(os.path.join(log_dir, uuid.uuid4().hex), "w") as fh:
+                fh.write(str(len(rows)))
+            yield pd.DataFrame(rows, columns=["doc_id", "image", "audio", "video", "text"])
+
+    assets = spark.range(n).mapInPandas(
+        source, "doc_id long, image binary, audio binary, video binary, text string"
+    )
+    out = multimodal_dedup_disposition(
+        assets, "doc_id", text_col="text", image_col="image", audio_col="audio",
+        video_col="video", video_every_n=1,
+    ).collect()
+    assert sorted(r["doc_id"] for r in out) == list(range(n))
+    emitted = sum(int(open(os.path.join(log_dir, f)).read()) for f in os.listdir(log_dir))
+    assert emitted == n
+
+
+def test_video_pass_equals_sample_frames_then_image_hashes(spark):
+    """The one-pass video fingerprints equal the composition they
+    replace — sample_frames, the composite key, image_hashes — on clips
+    with an undecodable frame, a clip shorter than ``every_n``, a NULL
+    clip and a non-FSTK payload; a sampled frame past the stride still
+    fails the query when that frame does not decode."""
+    from lakehouse_spark_spark.operators.multimodal import (
+        encode_png_pixels,
+        image_hashes,
+        make_framestack,
+        sample_frames,
+        video_frame_fingerprints,
+    )
+
+    def frames(i, k):
+        return [encode_png_pixels(_video_scene(i, f)) for f in range(k)]
+
+    clips = [
+        make_framestack(frames(1, 7)[:3] + [b"\x89PNG\r\n\x1a\n-broken"] + frames(1, 7)[4:]),
+        make_framestack(frames(2, 2)),  # shorter than every_n = 3
+        None,
+        b"\x89not-a-container" * 8,
+    ]
+    media = spark.createDataFrame(
+        [(i, c if c is None else bytearray(c)) for i, c in enumerate(clips)], "doc_id bigint, media binary"
+    )
+    for every_n in (1, 3):
+        stride = 1_000_000
+        ref = (
+            image_hashes(
+                sample_frames(media, every_n=every_n).select(
+                    (F.col("doc_id") * stride + F.col("frame_idx")).alias("doc_id"),
+                    F.col("frame").alias("media"),
+                )
+            )
+            .filter(F.col("phash").isNotNull())
+            .select("doc_id", F.col("phash").alias("fp"))
+        )
+        got = sorted(map(tuple, video_frame_fingerprints(media, every_n=every_n).collect()))
+        assert got == sorted(map(tuple, ref.collect())), every_n
+        assert got  # non-vacuous
+    broken_last = spark.createDataFrame(
+        [(9, bytearray(make_framestack(frames(3, 3) + [b"\x89PNG\r\n\x1a\n-broken"])))],
+        "doc_id bigint, media binary",
+    )
+    with pytest.raises(Exception, match="frame_key_stride"):  # sampled frame 3 does not decode
+        video_frame_fingerprints(broken_last, every_n=3, frame_key_stride=3).collect()
+
+
 def test_multimodal_dedup_disposition_attributes_each_modality(spark):
     """r12: the cross-modal composition. Four assets each plant a twin
     duplicating EXACTLY ONE modality (image/audio/video/text, fresh

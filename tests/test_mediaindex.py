@@ -563,7 +563,7 @@ def test_multimodal_ingest_loop_redrain_safe(spark, tmp_path):
     fn = multimodal_ingest_foreach_batch(
         kept_out, "doc_id",
         text_index_path=t_idx, text_col="text", text_max_hamming=12,
-        image_index_path=i_idx, image_col="image", image_max_hamming=10,
+        image_index_path=i_idx, image_col="image",
     )
     batches = [
         spark.createDataFrame(rows, "doc_id long, text string, image binary")
