@@ -33,7 +33,7 @@ Search against a loaded index never reads the corpus embeddings
 (tests/test_annindex.py deletes them before executing) and reads only
 the probed cell partitions — asserted on the plan's PartitionFilters,
 NOT on ``DataFrame.inputFiles()``, which lists the relation's files
-ignoring partition pruning entirely (verified; see SCALE.md r10 note).
+ignoring partition pruning entirely.
 At 100 TB the per-query cost is n_probe/n_cells of the CODED corpus
 (~32× smaller than the floats) plus |shortlist| vector fetches.
 """
@@ -49,7 +49,17 @@ import pandas as pd  # module-level: pandas_udf resolves stringified type hints 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lakehouse_spark_spark.operators.similarity import ivfpq_encode, train_ivfpq
+from lakehouse_spark_spark.operators.similarity import (
+    adc_dist,
+    dot,
+    ivfpq_encode,
+    ivfpq_probe_lut_rows,
+    ivfpq_probe_luts_np,
+    l2_norm,
+    nearest_cells,
+    sq_dist,
+    train_ivfpq,
+)
 
 
 class AnnIndex(NamedTuple):
@@ -66,7 +76,7 @@ class AnnIndex(NamedTuple):
     codebooks: list[list[list[float]]]
     id_col: str
     cells_path: str
-    # active tombstones keyed on id_col, or None (r14): `cells` is
+    # active tombstones keyed on id_col, or None: `cells` is
     # already filtered, but the partition-pruned RE-reads of cells_path
     # (search tails, semantic dedup) must re-apply the anti-join — they
     # bypass the loaded frame on purpose for cell pruning
@@ -146,7 +156,7 @@ def _residual_stats(cell_vec: DataFrame, centroids: list[list[float]]) -> dict:
     O(batch), no corpus reads; the p99 is ``approx_percentile`` (a
     bounded-memory sketch — a 1.5x rebuild trigger doesn't need the
     exact quantile, and the exact form buffered every residual of a
-    multi-million-row fold in one aggregation buffer; r11 ADVICE)."""
+    multi-million-row fold in one aggregation buffer)."""
     from pyspark.sql.functions import broadcast
 
     spark = cell_vec.sparkSession
@@ -197,7 +207,7 @@ def _residual_stats(cell_vec: DataFrame, centroids: list[list[float]]) -> dict:
 # frozen quantizer is no longer representative of what's being folded.
 ANN_REBUILD_RESID_RATIO = 1.5
 
-# Occupancy trigger (r12): n_cells is FROZEN at build while folds grow
+# Occupancy trigger: n_cells is FROZEN at build while folds grow
 # the corpus, so the in-cell quadratics (semantic_dedup_against_index,
 # ann_index_semantic_join) grow with corpus²/n_cells² — residual drift
 # alone never notices a same-distribution corpus simply outgrowing its
@@ -221,7 +231,7 @@ def _write_recall_panel(
     panel_k: int,
     out_dir: str = "panel",
 ) -> dict | None:
-    """Measured-recall probe panel (r12): a fixed, deterministic sample
+    """Measured-recall probe panel: a fixed, deterministic sample
     of ``panel_n`` corpus vectors plus their EXACT top-``panel_k``
     neighbors (squared-L2, self excluded, neighbor-id tiebreak — the
     search's own re-rank metric), persisted under ``{path}/panel``.
@@ -232,8 +242,6 @@ def _write_recall_panel(
     bounded, and never again); panel members are picked by md5-of-id
     order, so the panel is reproducible without an RNG. Returns the
     manifest panel record, or None for an empty corpus."""
-    from lakehouse_spark_spark.operators.similarity import sq_dist
-
     if panel_n <= 0:
         return None
     base = cells_rb.select(F.col(id_col), "vec")
@@ -375,7 +383,7 @@ def write_ann_index(
     # drift baseline: residual stats of the corpus the model was trained
     # to represent, from a column-pruned (cell, vec) read-back of the
     # just-written cells table (no second encode pass). Its per-cell
-    # counts seed the manifest's cumulative occupancy tracker (r12).
+    # counts seed the manifest's cumulative occupancy tracker.
     rb = spark.read.parquet(f"{path}/cells")
     baseline = _residual_stats(rb.select("cell", "vec"), cents)
     panel_info = _write_recall_panel(rb, id_col, path, panel_n, panel_k)
@@ -439,7 +447,7 @@ def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:
 
 
 def delete_from_ann_index(spark: SparkSession, path: str, ids, batch_id: int | None = None) -> bool:
-    """Takedown/opt-out for the persisted ANN family (r14): record the
+    """Takedown/opt-out for the persisted ANN family: record the
     vector ids in the index's tombstone ledger (sources/sinks.
     add_tombstones — the shared exactly-once protocol). Logically
     immediate (:func:`load_ann_index` anti-joins the cells frame, so no
@@ -548,9 +556,9 @@ def compact_ann_index(spark: SparkSession, path: str, target_file_mb: int = 256)
     emit up to n × n_cells files, re-creating the small-files problem
     the compaction exists to fix).
 
-    Publish protocol (r11 — the bloom module's versioned-dir +
-    manifest-pointer commit, replacing the r10 ``_swap_dirs`` rename
-    dance whose mid-swap crash left the index unreadable): the rewrite
+    Publish protocol (the bloom module's versioned-dir +
+    manifest-pointer commit; a rename-based swap would leave the index
+    unreadable after a mid-swap crash): the rewrite
     lands in a FRESH ``cells_v{n+1}`` dir — never touching the current
     dir, which the rewrite plan is still reading — and becomes current
     only when the manifest pointer flips (atomic whole-file replace; no
@@ -558,7 +566,7 @@ def compact_ann_index(spark: SparkSession, path: str, target_file_mb: int = 256)
     flip: old index fully readable, the orphan dir is GC'd by the next
     compaction. The superseded dir is retained ONE cycle for in-flight
     readers. Returns the data-file count after the rewrite.
-    Single-writer contract, like updates. Tombstoned vectors (r14) are
+    Single-writer contract, like updates. Tombstoned vectors are
     physically PURGED by the rewrite (the ledger itself is retained —
     a not-yet-watermarked fold replay could re-append purged rows)."""
     import math
@@ -589,7 +597,7 @@ def compact_ann_index(spark: SparkSession, path: str, target_file_mb: int = 256)
     _write_manifest(path, {**mf, "cells_dir": next_dir})
     _gc_cells_versions(path, next_dir, retain_dir=cur)
     if tomb is not None:
-        # audit evidence (r15): the deletions this rewrite carried are
+        # audit evidence: the deletions this rewrite carried are
         # now physically durable — stamp the purge watermark
         from lakehouse_spark_spark.sources.sinks import record_tombstone_purge
 
@@ -692,8 +700,8 @@ def rebuild_ann_index(
     baseline = _residual_stats(rb.select("cell", "vec"), cents)
     # panel geometry is index configuration, not a rebuild default:
     # inherit the existing panel's n/k unless the caller overrides
-    # (review catch: resetting to 64/5 silently changed the metric an
-    # operator configured at write_ann_index time)
+    # (resetting to 64/5 would silently change the metric an operator
+    # configured at write_ann_index time)
     old_panel = mf.get("panel") or {}
     pn = panel_n if panel_n is not None else int(old_panel.get("n", 64))
     pk = panel_k if panel_k is not None else int(old_panel.get("k", 5))
@@ -779,7 +787,7 @@ def ann_index_health(
         # <= n_cells distinct vectors — centroids coincide with the
         # points) is a REAL measurement, and any nonzero drift against
         # it is infinite, not unknowable; a falsy-zero guard would
-        # silently disable the rebuild trigger forever (r11 review)
+        # silently disable the rebuild trigger forever
         if base_mean is None or mean_resid is None:
             return None
         if base_mean == 0.0:
@@ -861,7 +869,7 @@ def ann_index_semantic_join(
     sides scan (id, vec) column-pruned from their cell-partitioned
     tables, duplicate rows from partially-replayed appends are
     id-deduped per side, and the quadratic term never sees a corpus,
-    only a cell — whose size ``max_cell`` (r12) bounds when folds have
+    only a cell — whose size ``max_cell`` bounds when folds have
     outgrown the frozen n_cells (cells past the cap on either side are
     skipped; the occupancy ``rebuild_flag`` names the durable fix).
     Zero-norm semantics are the module's pinned rule
@@ -869,8 +877,6 @@ def ann_index_semantic_join(
 
     Returns (id_a, id_b, cell, cosine), one row per qualifying pair.
     """
-    from lakehouse_spark_spark.operators.similarity import l2_norm
-
     if index_a.centroids != index_b.centroids or index_a.codebooks != index_b.codebooks:
         raise ValueError(
             "ann_index_semantic_join: the two indexes carry different frozen "
@@ -892,7 +898,7 @@ def ann_index_semantic_join(
         .withColumn("__nb", l2_norm("__vb"))
     )
     if max_cell is not None:
-        # hot-cell candidate cap (r12): a cell past max_cell distinct
+        # hot-cell candidate cap: a cell past max_cell distinct
         # vectors on EITHER side is skipped — its per-cell cross product
         # is the quadratic the frozen n_cells lets grow without bound
         # (same trade as semantic_dedup_against_index's cap; the
@@ -937,8 +943,6 @@ def _topk_against_cells(
     SOURCE-FREE frames (collected literals or checkpointed), or the
     caller's corpus scan would splice back into the search plan.
     Returns (query_id, neighbor_id, sq_dist, rank<=k)."""
-    from lakehouse_spark_spark.operators.similarity import adc_dist, sq_dist
-
     spark = index.cells.sparkSession
     id_col = index.id_col
     m, kk = len(index.codebooks), len(index.codebooks[0])
@@ -989,7 +993,6 @@ def ann_index_topk(
     (millions of queries) belongs on :func:`ann_index_topk_distributed`,
     which computes the same LUTs executor-side and never collects a
     vector. Returns (query_id, neighbor_id, sq_dist, rank<=k)."""
-    from lakehouse_spark_spark.operators.similarity import ivfpq_probe_lut_rows
     from lakehouse_spark_spark.sources.loaders import arrow_rows_df
 
     spark = index.cells.sparkSession
@@ -1024,7 +1027,7 @@ def ann_index_topk_distributed(
     shortlist: int = 50,
 ) -> DataFrame:
     """Batch-scale IVF-PQ search against the persisted index with NO
-    driver collect of query vectors (r10 verdict task 1): the frozen
+    driver collect of query vectors: the frozen
     model (KB-sized centroids + codebooks) ships inside a mapInPandas
     closure, and the per-query, per-probed-cell ADC lookup tables are
     computed executor-side in Arrow batches — the same
@@ -1063,8 +1066,6 @@ def ann_index_topk_distributed(
     def lut_batches(batches):
         import numpy as np
 
-        from lakehouse_spark_spark.operators.similarity import ivfpq_probe_luts_np
-
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame({"query_id": [], "cell": [], "lut": []})
@@ -1090,11 +1091,9 @@ def ann_index_topk_distributed(
 def _zero_safe_cosine(va: str, vb: str, na: str, nb: str):
     """Rounded cosine with the module's pinned zero-norm semantics:
     zero-vs-zero = 1.0 (byte-identical degenerate payloads must flag),
-    zero-vs-nonzero = -1.0 (nothing in common) — the r10 second-review
-    rule, shared by the arrival-time dedup and the index-vs-index join
+    zero-vs-nonzero = -1.0 (nothing in common) — one rule, shared
+    by the arrival-time dedup and the index-vs-index join
     so the two can never drift."""
-    from lakehouse_spark_spark.operators.similarity import dot
-
     return (
         F.when(
             (F.col(na) > 0) & (F.col(nb) > 0),
@@ -1102,31 +1101,6 @@ def _zero_safe_cosine(va: str, vb: str, na: str, nb: str):
         )
         .when((F.col(na) == 0) & (F.col(nb) == 0), F.lit(1.0))
         .otherwise(F.lit(-1.0))
-    )
-
-
-def _assign_cells(
-    df: DataFrame, id_col: str, vec_col: str, centroids: list[list[float]]
-) -> DataFrame:
-    """(id, cell, vec): nearest-coarse-centroid assignment only — the
-    first step of :func:`ivfpq_encode` without the PQ code computation
-    (the m × k per-subspace distance matrices), for consumers that need
-    the cell but not the codes."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("int")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1).astype("int32"))
-
-    return df.select(
-        F.col(id_col),
-        cell_of(F.col(vec_col)).alias("cell"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
 
 
@@ -1155,7 +1129,9 @@ def semantic_dedup_against_index(
     near-dup straddling a cell boundary is missed at the same
     documented rate as the batch operator). The driver sees only the
     DISTINCT batch cell ids (≤ n_cells — for the partition-pruning
-    isin), never the vectors.
+    isin), never the vectors. A NULL batch vector has no cell: the
+    query fails with a ``PythonException`` carrying the worker's
+    ``ValueError``.
 
     Id-equal pairs are excluded so a REPLAYED batch (its vectors
     already folded into the index) is not flagged as a duplicate of
@@ -1165,10 +1141,10 @@ def semantic_dedup_against_index(
     ``(id, cell, codes, vec)`` so an ingest loop that also FOLDS the
     batch encodes it exactly once (the Arrow encode pass is the
     dominant per-batch cost); standalone probes leave it None and get
-    the cheaper cell-only assignment (:func:`_assign_cells` — the PQ
+    the cheaper cell-only assignment (similarity.nearest_cells — the PQ
     codes are fold-side state the probe never reads).
 
-    ``n_probe_cells`` (r11, multi-probe): with the default 1 each batch
+    ``n_probe_cells`` (multi-probe): with the default 1 each batch
     vector probes only its HOME cell, so a near-dup pair straddling a
     cell boundary (each side quantized to a different-but-adjacent
     cell) is invisible — the documented single-cell miss. p > 1 probes
@@ -1180,7 +1156,7 @@ def semantic_dedup_against_index(
     always probe rank 0, so p=1 output is byte-identical to a
     home-cell-only probe.
 
-    ``max_cell`` (r12) bounds the in-cell quadratic: corpus cells
+    ``max_cell`` bounds the in-cell quadratic: corpus cells
     holding more than this many distinct vectors are skipped for
     matching — see the inline comment for the full trade. Pair it with
     the occupancy ``rebuild_flag`` in :func:`ann_index_health`: the cap
@@ -1192,7 +1168,7 @@ def semantic_dedup_against_index(
     flag as a dup or identical zero vectors would accumulate without
     bound in an ingest loop) and -1.0 for zero-vs-nonzero (nothing in
     common). Without this the division's NULL coalesced to dup=False
-    forever (r10 second-review finding). This INTENTIONALLY diverges
+    forever. This INTENTIONALLY diverges
     from the one-shot similarity.semantic_dedup, whose NULL cosine
     keeps every zero vector: a batch operator sees the whole corpus at
     once so keep-and-quarantine is safe there, while an unbounded
@@ -1202,12 +1178,14 @@ def semantic_dedup_against_index(
     (id, cell, max_corpus_cos, dup) — max_corpus_cos NULL when the
     probed cell holds no other corpus vector.
     """
-    from lakehouse_spark_spark.operators.similarity import l2_norm
-
     spark = index.cells.sparkSession
     id_col = index.id_col
     if encoded is None:
-        encoded = _assign_cells(batch, id_col, vec_col, index.centroids)
+        encoded = batch.select(
+            F.col(id_col),
+            nearest_cells(F.col(vec_col), index.centroids)[0].alias("cell"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
+        )
     enc = (
         encoded.select(id_col, "cell", "vec")
         .withColumn("__n", l2_norm("vec"))
@@ -1221,22 +1199,9 @@ def semantic_dedup_against_index(
         # (the fold's home assignment can't be reused for ranks 1..p-1),
         # exploded to p slim probe rows per vector. The probe JOIN key
         # becomes the probed cell; the output keeps the home cell.
-        import numpy as np
-
-        from pyspark.sql.functions import pandas_udf
-
-        C = np.asarray(index.centroids, dtype=np.float64)
-        p = min(n_probe_cells, len(index.centroids))
-
-        @pandas_udf("array<int>")
-        def top_cells(vs: pd.Series) -> pd.Series:
-            X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-            d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            order = np.argsort(d, axis=1, kind="stable")[:, :p].astype("int32")
-            return pd.Series(list(order))
-
         probe = enc.select(
-            id_col, "vec", "__n", F.explode(top_cells("vec")).alias("cell")
+            id_col, "vec", "__n",
+            F.explode(nearest_cells(F.col("vec"), index.centroids, n_probe_cells)).alias("cell"),
         )
     probe = probe.localCheckpoint(eager=True) if n_probe_cells > 1 else probe
     batch_cells = sorted(r["cell"] for r in probe.select("cell").distinct().collect())
@@ -1247,7 +1212,7 @@ def semantic_dedup_against_index(
         .withColumn("__cn", l2_norm("__cv"))
     )
     if max_cell is not None:
-        # hot-cell candidate cap (r12, the neardup.max_bucket twin): a
+        # hot-cell candidate cap (the neardup.max_bucket twin): a
         # frozen n_cells means fold-heavy cells grow without bound, and
         # every batch vector probing one pays |cell| exact-cosine rows.
         # Cells holding more than max_cell DISTINCT corpus vectors are

@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline, encode_jpeg_baseline
+
 # Decoded-media metadata schema appended by decode_images().
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -116,8 +118,6 @@ def make_jpeg_real(width: int, height: int, quality: int = 90) -> bytes:
     compliant viewer) holding a deterministic grayscale gradient+texture
     pattern — the pixel-true fixture for the jpegcodec round trip."""
     import numpy as np
-
-    from lakehouse_spark_spark.operators.jpegcodec import encode_jpeg_baseline
 
     y, x = np.mgrid[0:height, 0:width]
     img = ((x * 7 + y * 3 + (x * y) % 13) % 256).astype(np.uint8)
@@ -370,29 +370,35 @@ def attach_synthetic_media(df: DataFrame, id_col: str, text_col: str) -> DataFra
     return df.select(F.col(id_col), F.col(text_col)).mapInPandas(synth, out_schema)
 
 
-def decode_image(payload: bytes) -> dict:
+def decode_image(payload: bytes | None) -> dict | None:
     """Decode one payload's metadata: real header parse for PNG/JPEG/GIF,
     deterministic stub for unrecognized bytes (format tagged 'unknown'
-    so downstream can quarantine)."""
-    meta = parse_image_header(bytes(payload))
+    so downstream can quarantine). None for a NULL or empty payload."""
+    if not payload:
+        return None
+    raw = bytes(payload)
+    meta = parse_image_header(raw)
     if meta is None:
-        meta = dict(decode_image_stub(bytes(payload)), format="unknown")
-    meta["sha256"] = hashlib.sha256(bytes(payload)).hexdigest()
+        meta = dict(decode_image_stub(raw), format="unknown")
+    meta["sha256"] = hashlib.sha256(raw).hexdigest()
     return meta
 
 
 def decode_images(media: DataFrame) -> DataFrame:
     """mapInPandas decode: per-partition Arrow batches in, metadata rows
     out. PNG/JPEG/GIF dimensions come from the actual container headers
-    (parse_image_header); only unrecognized formats hit the stub."""
+    (parse_image_header); only unrecognized formats hit the stub. A NULL
+    or empty payload gives NULL format, dimensions and digest (its
+    ``media_size_bytes`` is NULL or 0); the query does not fail."""
+    no_meta = dict.fromkeys(("format", "width", "height", "sha256"))
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            meta = [decode_image(p) for p in pdf["media"]]
+            meta = [decode_image(p) or no_meta for p in pdf["media"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "media_size_bytes": [len(p) for p in pdf["media"]],
+                    "media_size_bytes": [None if p is None else len(p) for p in pdf["media"]],
                     "format": [m["format"] for m in meta],
                     "width": [m["width"] for m in meta],
                     "height": [m["height"] for m in meta],
@@ -416,9 +422,11 @@ RESIZED_SCHEMA = T.StructType(
 def _pil_resize(payload: bytes, max_side: int) -> tuple[bytes, int, int] | None:
     """Optional-dependency seam: decode/resize/re-encode via Pillow when
     it is installed (JPEG/GIF/WebP real pixels), else None. Kept OUTSIDE
-    the hot loop's imports: the probe caches a module-level result so
-    absent-PIL costs one failed import per Python worker, total."""
-    global _PIL_IMAGE  # noqa: PLW0603 — per-worker memoized probe
+    the hot loop's imports: the probe caches its result in this module's
+    globals. Workers get the module's functions pickled by value, with a
+    fresh globals dict per deserialized task, so absent-PIL costs one
+    failed import per task, not one per payload."""
+    global _PIL_IMAGE  # noqa: PLW0603 — per-task memoized probe
     try:
         probe = _PIL_IMAGE
     except NameError:
@@ -454,15 +462,12 @@ def resize_images(media: DataFrame, max_side: int = 256) -> DataFrame:
     optional Pillow seam (``_pil_resize``) when the library is present;
     without it they keep the header-true dimension math with a
     truncation stand-in body — the Arrow plumbing is identical in all
-    paths, so swapping codecs never touches the Spark side."""
+    paths, so swapping codecs never touches the Spark side. A NULL or
+    empty payload gives NULL media and dimensions; the query does not
+    fail."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
-
-        from lakehouse_spark_spark.operators.jpegcodec import (
-            decode_jpeg_baseline,
-            encode_jpeg_baseline,
-        )
 
         def resample(px, w0, h0):
             scale = min(1.0, max_side / max(w0, h0))
@@ -474,6 +479,9 @@ def resize_images(media: DataFrame, max_side: int = 256) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+                if not payload:
+                    rows.append((doc_id, None, None, None))
+                    continue
                 payload = bytes(payload)
                 px = decode_png_pixels(payload)
                 if px is not None:
@@ -557,7 +565,9 @@ def extract_audio_features(media: DataFrame, n_features: int = 8) -> DataFrame:
     sum 1) — the actual shape of a spectral feature extractor, feeding
     straight into the embedding similarity operators as array<float>.
     Non-WAV payloads keep the deterministic byte-derived stub (real
-    compressed-audio decode needs soundfile/librosa in the same loop)."""
+    compressed-audio decode needs soundfile/librosa in the same loop).
+    A NULL or empty payload gives NULL duration, RMS and features; the
+    query does not fail."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -565,6 +575,9 @@ def extract_audio_features(media: DataFrame, n_features: int = 8) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
+                if not payload:
+                    rows.append((doc_id, None, None, None))
+                    continue
                 payload = bytes(payload)
                 parsed = parse_wav(payload)
                 if parsed is not None:
@@ -579,11 +592,8 @@ def extract_audio_features(media: DataFrame, n_features: int = 8) -> DataFrame:
                     rows.append((doc_id, dur, rms, feats))
                     continue
                 dur = len(payload) / 1000.0
-                rms = (sum(b * b for b in payload[:1000]) / max(1, min(len(payload), 1000))) ** 0.5
-                if payload:
-                    feats = [float((payload[i % len(payload)] - 128) / 128.0) for i in range(n_features)]
-                else:  # empty media: zero-vector, consistent with dur/rms guards
-                    feats = [0.0] * n_features
+                rms = (sum(b * b for b in payload[:1000]) / min(len(payload), 1000)) ** 0.5
+                feats = [float((payload[i % len(payload)] - 128) / 128.0) for i in range(n_features)]
                 rows.append((doc_id, dur, rms, feats))
             yield pd.DataFrame(rows, columns=["doc_id", "duration_s", "rms", "features"])
 
@@ -763,8 +773,6 @@ def _decode_pixels(payload: bytes | None):
     (truncated IHDR, corrupt IDAT): one malformed payload in a corpus
     must quarantine, not fail the Spark task (decode_jpeg_baseline is
     already total)."""
-    from lakehouse_spark_spark.operators.jpegcodec import decode_jpeg_baseline
-
     if not payload:
         return None
     raw = bytes(payload)
@@ -902,7 +910,7 @@ def image_neardup_phash(
     RANDOM pair collides into the join with p ≈ 1-(255/256)^8 ≈ 3%.
     ``blocks = max_hamming + 1`` (11) restores the full guarantee but
     its 5-bit blocks collide ~30% of ALL pairs — the candidate join
-    degrades toward all-pairs on a large corpus (review catch). Returns
+    degrades toward all-pairs on a large corpus. Returns
     (id_a, id_b, hamming), id_a < id_b. ``max_bucket`` is the shared
     join's hot-bucket guard — see :func:`image_neardup_dhash` (same
     semantics; letterbox bars and solid-color stills are pHash's

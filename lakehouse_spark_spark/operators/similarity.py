@@ -1,10 +1,17 @@
-"""Embedding similarity search: brute-force cosine top-k (exact
-baseline) and random-hyperplane LSH bucketing (the scale path).
+"""Embedding similarity search: brute-force cosine top-k (the exact
+baseline), random-hyperplane LSH, IVF, PQ and IVF-PQ (the scale paths).
 
-Vector math is expressed with higher-order functions
-(``zip_with``/``aggregate``) over array<float> columns — JVM-side, no
-Python UDFs. Casts to double happen element-wise before multiply so the
-arithmetic is IEEE-deterministic and oracle-comparable.
+Exact scores (cosine, squared L2, ADC table sums) are Column arithmetic
+over array columns (``zip_with``/``aggregate``): element-wise casts to
+double, summed in array order, so they are IEEE-deterministic and
+comparable with the DuckDB oracles. Model-driven steps run in Arrow
+UDFs that carry the model in their closure, so a model's size never
+enters the plan: IVF cell assignment (:func:`nearest_cells`), PQ codes
+(:func:`_pq_codes`) and LSH sign buckets (:func:`band_signatures`). One
+numpy kernel, :func:`_nearest_rows`, ranks centroids for every model,
+on the driver (k-means fits, probe tables) and on the executors alike.
+These model-side choices only gate candidates; a near-tie between two
+centroids or a dot product next to zero may fall either way.
 
 Scale notes: brute force is O(|Q|·|C|) — correct shape only when the
 query set is small enough to broadcast (it is here: broadcast join, no
@@ -19,6 +26,7 @@ numpy kernel (``_pq_codebooks_np``).
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf resolves stringified type hints here
 
 from pyspark.sql import Column, DataFrame, Window
@@ -61,28 +69,21 @@ def cosine_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def rp_lsh_signature(vec_col: Column | str, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: sign bit per plane packed into a
-    long. Planes are a plain Python list (broadcast with the plan)."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(vec_col, p) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig + F.shiftleft(bit, i)
-    return sig
-
-
 def ann_lsh_topk(
     corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, planes: list[list[float]], k: int = 5
 ) -> DataFrame:
     """Approximate top-k: only candidates in the query's hyperplane
     bucket are scored. Recall improves with fewer planes / multi-probe;
-    the join is an equi-join on the bucket id — the 100 TB shape."""
+    the join is an equi-join on the bucket id — the 100 TB shape. The
+    bucket is the sign signature of one band holding every plane
+    (:func:`band_signatures`). A NULL vector in ``corpus`` or
+    ``queries`` has no bucket: the query fails with a
+    ``PythonException`` carrying the worker's ``ValueError``."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")).withColumn(
-        "bucket", rp_lsh_signature("__cv", planes)
+        "bucket", band_signatures(F.col("__cv"), [planes])[0]
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).withColumn(
-        "bucket", rp_lsh_signature("__qv", planes)
+        "bucket", band_signatures(F.col("__qv"), [planes])[0]
     )
     pairs = c.join(F.broadcast(q), "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select("query_id", "neighbor_id", F.round(cosine("__qv", "__cv"), 6).alias("cosine_sim"))
@@ -117,34 +118,32 @@ def embedding_neardup_pairs(
     )
 
 
-def band_signatures(df: DataFrame, id_col: str, vec_col: str, band_planes: list[list[list[float]]]) -> DataFrame:
-    """``(id, band, bucket)`` rows: one sign-bucket per band per vector.
+def band_signatures(vec: Column, band_planes: list[list[list[float]]]) -> Column:
+    """array<long>: the random-hyperplane sign bucket of ``vec`` in each
+    band, bit i set when the vector's dot with the band's plane i is
+    non-negative.
 
-    Signatures are computed by a VECTORIZED pandas_udf (one numpy matmul
-    per Arrow batch against the (b·r × dim) plane matrix) rather than an
-    expression tree — b·r·dim literal nodes would dwarf codegen limits
-    at production band counts (64 bands × 12 planes × 64 dims ≈ 49k
-    literals). Signatures never need cross-engine agreement: they only
-    GATE candidate generation; the verify stage recomputes exact cosine
-    with the engine-deterministic sequential-sum expression.
+    Computed by a VECTORIZED pandas_udf (one numpy matmul per Arrow
+    batch against the (b·r × dim) plane matrix, carried in the closure)
+    rather than an expression tree — b·r·dim literal nodes would dwarf
+    codegen limits at production band counts (64 bands × 12 planes × 64
+    dims ≈ 49k literals). Signatures never need cross-engine agreement:
+    they only GATE candidate generation; the verify stage recomputes
+    exact cosine with the engine-deterministic sequential-sum expression.
+    A NULL vector fails the query (a ``PythonException`` carrying the
+    worker's ``ValueError``).
     """
-    import numpy as np
-    from pyspark.sql.types import ArrayType, LongType
-
     P = np.array([p for band in band_planes for p in band], dtype=np.float64)
     b, r = len(band_planes), len(band_planes[0])
     weights = 1 << np.arange(r, dtype=np.int64)
 
-    @F.pandas_udf(ArrayType(LongType()))
+    @F.pandas_udf("array<long>")
     def sig(vs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        X = _vector_matrix(vs, "an LSH band signature", P.shape[1])
         bits = (X @ P.T >= 0).astype(np.int64).reshape(len(vs), b, r)
         return pd.Series(list(bits @ weights))
 
-    return (
-        df.select(F.col(id_col).alias("__id"), sig(F.col(vec_col)).alias("__bk"))
-        .select("__id", F.posexplode("__bk").alias("band", "bucket"))
-    )
+    return sig(vec)
 
 
 def embedding_neardup_lsh_verified(
@@ -185,7 +184,11 @@ def embedding_neardup_lsh_verified(
     v = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")).withColumn(
         "__n", l2_norm("__v")
     )
-    sig_rows = band_signatures(df, id_col, vec_col, band_planes).localCheckpoint(eager=False)
+    sig_rows = (
+        df.select(F.col(id_col).alias("__id"), band_signatures(F.col(vec_col), band_planes).alias("__bk"))
+        .select("__id", F.posexplode("__bk").alias("band", "bucket"))
+        .localCheckpoint(eager=False)
+    )
     a = sig_rows.select(F.col("__id").alias("id_a"), "band", "bucket")
     b = sig_rows.select(F.col("__id").alias("id_b"), "band", "bucket")
     cand = (
@@ -212,16 +215,17 @@ def embedding_neardup_lsh_verified(
 _TRAIN_SAMPLE_SEED = 42
 
 
-def _vector_matrix(vecs: pd.Series, vec_col: str):
-    """Collected vectors as an N × dim float64 matrix; an empty sample
-    or a null vector fails here, naming the column."""
-    import numpy as np
-
-    if vecs.empty:
-        raise ValueError(f"no {vec_col!r} vectors to train on")
-    if vecs.isna().any():
-        raise ValueError(f"null vector in {vec_col!r}")
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
+def _vector_matrix(vs: pd.Series, what: str, dim: int = -1):
+    """Vectors as a len × ``dim`` float64 matrix. A null vector fails,
+    naming ``what`` (the column, or the step that needed the vector): a
+    fit, a cell, a code and a bucket need every vector. A training
+    sample leaves ``dim`` to the rows and fails when empty; an Arrow
+    batch passes its ``dim``, so an empty batch is fine."""
+    if vs.isna().any():
+        raise ValueError(f"null vector in {what}")
+    if vs.empty and dim < 0:
+        raise ValueError(f"no {what} vectors to train on")
+    return np.asarray([np.asarray(v, dtype=np.float64) for v in vs]).reshape(len(vs), dim)
 
 
 def _train_sample(corpus: DataFrame, vec_col: str, max_train_rows: int):
@@ -232,14 +236,12 @@ def _train_sample(corpus: DataFrame, vec_col: str, max_train_rows: int):
     fraction) cut to ``max_train_rows``. Rows come back sorted, because
     Lloyd sums each mean in row order and the collected order follows
     the partitioning."""
-    import numpy as np
-
     vecs = corpus.select(vec_col)
     sample = vecs.limit(max_train_rows + 1).toPandas()[vec_col]
     if len(sample) > max_train_rows:
         fraction = min(1.0, 1.2 * max_train_rows / corpus.count())
         sample = vecs.sample(fraction=fraction, seed=_TRAIN_SAMPLE_SEED).limit(max_train_rows).toPandas()[vec_col]
-    X = _vector_matrix(sample, vec_col)
+    X = _vector_matrix(sample, repr(vec_col))
     return X[np.lexsort(X.T[::-1])]
 
 
@@ -260,22 +262,20 @@ def train_ivf_centroids(
     return _pq_codebooks_np(_train_sample(corpus, vec_col, max_train_rows), m=1, k=n_cells)[0]
 
 
-def _nearest_cells(vec: Column, centroids: list[list[float]], n: int) -> Column:
-    """Indices of the ``n`` centroids nearest to ``vec`` (squared L2 in
-    doubles), nearest first, ties to the lower index."""
-    dists = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(vec, F.array(*[F.lit(x) for x in c]), lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for c in centroids
-        ]
-    )
-    idx = F.sequence(F.lit(0), F.lit(len(centroids) - 1))
-    pairs = F.zip_with(dists, idx, lambda dist, i: F.struct(dist.alias("d"), i.alias("i")))
-    return F.slice(F.transform(F.array_sort(pairs), lambda s: s["i"]), 1, n)
+def nearest_cells(vec: Column, centroids: list[list[float]], n: int = 1) -> Column:
+    """array<int>: the ``n`` centroids nearest to ``vec``
+    (:func:`_nearest_rows`), nearest first, ties to the lower index. One
+    Arrow UDF pass with the centroid table in its closure, so the plan
+    is the same size for any model. A NULL vector fails the query (a
+    ``PythonException`` carrying the worker's ``ValueError``)."""
+    C = np.asarray(centroids, dtype=np.float64)
+
+    @F.pandas_udf("array<int>")
+    def cells(vs: pd.Series) -> pd.Series:
+        X = _vector_matrix(vs, "an IVF cell assignment", C.shape[1])
+        return pd.Series(list(_nearest_rows(X, C, n).astype(np.int32)))
+
+    return cells(vec)
 
 
 def ivf_topk(
@@ -300,15 +300,19 @@ def ivf_topk(
     (the recommended shape for repeated queries); otherwise one bounded
     sample-fit runs via ``train_ivf_centroids`` (≤ ``max_train_rows``
     vectors regardless of corpus size).
+
+    A NULL vector in ``corpus`` or ``queries`` has no cell: the fit
+    raises ``ValueError``; with given ``centroids`` the query fails with
+    a ``PythonException`` carrying the worker's ``ValueError``.
     """
     if centroids is None:
         centroids = train_ivf_centroids(corpus, vec_col, n_cells=n_cells, max_train_rows=max_train_rows)
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")).withColumn(
-        "cell", F.element_at(_nearest_cells(F.col("__cv"), centroids, 1), 1)
+        "cell", nearest_cells(F.col("__cv"), centroids)[0]
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).withColumn(
-        "cell", F.explode(_nearest_cells(F.col("__qv"), centroids, n_probe))
+        "cell", F.explode(nearest_cells(F.col("__qv"), centroids, n_probe))
     )
     pairs = c.join(F.broadcast(q), "cell").filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select("query_id", "neighbor_id", F.round(cosine("__qv", "__cv"), 6).alias("cosine_sim"))
@@ -339,7 +343,10 @@ def semantic_dedup(
     a~b~c where a̸~c).
 
     Returns every corpus row as (id, cell, kept, dup_of): ``dup_of`` is
-    the smallest qualifying witness (NULL when kept).
+    the smallest qualifying witness (NULL when kept). A NULL vector has
+    no cell: the fit raises ``ValueError``; with given ``centroids`` the
+    query fails with a ``PythonException`` carrying the worker's
+    ``ValueError``.
 
     Scale: the O(m²) cosine work is per-cell (m = cell size, controlled
     by n_cells — at 100 TB you size n_cells so cells fit the executor,
@@ -363,7 +370,7 @@ def semantic_dedup(
 
     assigned = corpus.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("cell", F.element_at(_nearest_cells(F.col("__v"), centroids, 1), 1)).withColumn(
+    ).withColumn("cell", nearest_cells(F.col("__v"), centroids)[0]).withColumn(
         "__n", l2_norm("__v")
     ).localCheckpoint(eager=False)
     a = assigned.select(F.col("__id").alias("id_a"), "cell", F.col("__v").alias("__va"), F.col("__n").alias("__na"))
@@ -449,23 +456,34 @@ def train_pq_codebooks(
     plain floats (a few KB; broadcast it).
     """
     sample = corpus.select(vec_col).limit(max_train_rows).toPandas()[vec_col]
-    return _pq_codebooks_np(_vector_matrix(sample, vec_col), m=m, k=k, iters=iters)
+    return _pq_codebooks_np(_vector_matrix(sample, repr(vec_col)), m=m, k=k, iters=iters)
 
 
 _DIST_BLOCK_ELEMS = 1 << 22  # a distance block's rows × k × d temporary: 32 MB of float64
 
 
-def _nearest_rows(S, cents):
-    """Index of the nearest row of ``cents`` (squared L2) for each row
-    of ``S``, in row blocks; each distance sums the same elements in the
-    same order as the unblocked N × k × d form."""
-    import numpy as np
-
+def _nearest_rows(S, cents, n: int = 1):
+    """The library's one nearest-centroid kernel: for each row of ``S``
+    the indices of its ``n`` nearest rows of ``cents`` (squared L2 in
+    doubles), nearest first, ties to the lower index — an N × min(n, k)
+    int matrix; ``n=1`` is the plain argmin. Computed in row blocks;
+    each distance sums the same elements in the same order as the
+    unblocked N × k × d form."""
     rows = max(1, _DIST_BLOCK_ELEMS // (len(cents) * S.shape[1]))
     blocks = range(0, max(len(S), 1), rows)  # one empty block when N = 0
-    return np.concatenate(
-        [((S[i : i + rows, None] - cents[None]) ** 2).sum(axis=2).argmin(axis=1) for i in blocks]
-    )
+
+    def rank(d):
+        return d.argmin(axis=1)[:, None] if n == 1 else np.argsort(d, axis=1, kind="stable")[:, :n]
+
+    return np.concatenate([rank(((S[i : i + rows, None] - cents[None]) ** 2).sum(axis=2)) for i in blocks])
+
+
+def _pq_codes(X, books):
+    """N × m int32 PQ codes of the rows of ``X``: in each contiguous
+    subspace j, the nearest codeword of ``books[j]``."""
+    d_sub = books[0].shape[1]
+    cols = [_nearest_rows(X[:, j * d_sub : (j + 1) * d_sub], b)[:, 0] for j, b in enumerate(books)]
+    return np.stack(cols, axis=1).astype(np.int32)
 
 
 def _pq_codebooks_np(X, m: int = 8, k: int = 16, iters: int = 10) -> list[list[list[float]]]:
@@ -474,8 +492,6 @@ def _pq_codebooks_np(X, m: int = 8, k: int = 16, iters: int = 10) -> list[list[l
     ``m=1`` is plain k-means (the IVF quantizer); ``m>1`` trains PQ
     codebooks. Deterministic farthest-point init, ``iters`` Lloyd
     steps; memory stays bounded at any N (:func:`_nearest_rows`)."""
-    import numpy as np
-
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -497,7 +513,7 @@ def _pq_codebooks_np(X, m: int = 8, k: int = 16, iters: int = 10) -> list[list[l
         if len(cents) < k:  # degenerate corpora: pad by repeating
             cents = np.vstack([cents] * ((k // max(len(cents), 1)) + 1))[:k]
         for _ in range(iters):
-            assign = _nearest_rows(S, cents)
+            assign = _nearest_rows(S, cents)[:, 0]
             for c in range(k):
                 mask = assign == c
                 if mask.any():
@@ -510,26 +526,16 @@ def pq_encode(
     df: DataFrame, id_col: str, vec_col: str, codebooks: list[list[list[float]]]
 ) -> DataFrame:
     """(id, codes array<int> of length m): nearest-centroid code per
-    subspace, computed in ONE vectorized Arrow batch pass (numpy einsum
-    over the batch — no per-row Python). This is the compressed corpus
-    you persist: m ints per vector instead of the float array."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
+    subspace (:func:`_pq_codes`), computed in ONE vectorized Arrow batch
+    pass (numpy over the batch — no per-row Python). This is the
+    compressed corpus you persist: m ints per vector instead of the
+    float array."""
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    d_sub = books[0].shape[1]
+    dim = len(books) * books[0].shape[1]
 
-    @pandas_udf("array<int>")
+    @F.pandas_udf("array<int>")
     def codes(vs: pd.Series) -> pd.Series:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        out = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            S = X[:, j * d_sub : (j + 1) * d_sub]
-            d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            out[:, j] = d2.argmin(axis=1)
-        return pd.Series([list(map(int, row)) for row in out])
+        return pd.Series(list(_pq_codes(_vector_matrix(vs, repr(vec_col), dim), books)))
 
     return df.select(F.col(id_col), codes(F.col(vec_col)).alias("codes"))
 
@@ -554,8 +560,6 @@ def pq_adc_topk(
     Returns (query_id, neighbor_id, adc_dist, rank≤k), deterministic
     tie-break on neighbor id.
     """
-    import numpy as np
-
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m, kk, d_sub = len(books), books[0].shape[0], books[0].shape[1]
     qrows = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")).collect()
@@ -643,15 +647,13 @@ def ivfpq_probe_luts_np(
     the per-row Python loop this replaces was fine for 10 collected
     probes and 50× too slow for the 10k-probe distributed front; every
     reduction keeps the same element order as the row-at-a-time form,
-    so the produced floats are bit-identical."""
-    import numpy as np
-
+    so the produced floats are bit-identical. The cells are ranked by
+    the shared kernel (:func:`_nearest_rows`)."""
     C = np.asarray(centroids, dtype=np.float64)
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m, kk, d_sub = len(books), books[0].shape[0], books[0].shape[1]
     X = np.asarray(X, dtype=np.float64)
-    cd = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)          # b×n_cells
-    cells = np.argsort(cd, axis=1, kind="stable")[:, :n_probe]       # b×p
+    cells = _nearest_rows(X, C, n_probe)                             # b×p
     R = X[:, None, :] - C[cells]                                     # b×p×d
     luts = np.empty((X.shape[0], cells.shape[1], m * kk), dtype=np.float64)
     for j in range(m):
@@ -678,8 +680,6 @@ def ivfpq_probe_lut_rows(
     so the two fronts are exactly equal by construction). Returns
     ``[(query_id, cell, lut)]`` with the query id passed through
     untouched (callers own the id dtype)."""
-    import numpy as np
-
     if not qrows:
         return []
     qids = [r["query_id"] for r in qrows]
@@ -744,12 +744,10 @@ def train_ivfpq(
     (:func:`_pq_codebooks_np`): the centroids at ``m=1``, then the books
     on that sample's residuals. Deterministic across hosts and
     partitionings; under the cap the Spark work is one collect."""
-    import numpy as np
-
     X = _train_sample(corpus, vec_col, max_train_rows)
     cents = _pq_codebooks_np(X, m=1, k=n_cells, iters=iters)[0]
     C = np.asarray(cents)
-    books = _pq_codebooks_np(X - C[_nearest_rows(X, C)], m=m, k=k, iters=iters)
+    books = _pq_codebooks_np(X - C[_nearest_rows(X, C)[:, 0]], m=m, k=k, iters=iters)
     return cents, books
 
 
@@ -761,30 +759,17 @@ def ivfpq_encode(
     codebooks: list[list[list[float]]],
 ) -> DataFrame:
     """(id, cell, codes): nearest coarse cell + PQ codes of the
-    residual, one vectorized Arrow pass. This is the persisted index:
-    1 int + m small codes per vector."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-
+    residual, one vectorized Arrow pass through the shared kernels
+    (:func:`_nearest_rows`, :func:`_pq_codes`). This is the persisted
+    index: 1 int + m small codes per vector."""
     C = np.asarray(centroids, dtype=np.float64)
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    d_sub = books[0].shape[1]
 
-    @pandas_udf("struct<cell:int, codes:array<int>>")
+    @F.pandas_udf("struct<cell:int, codes:array<int>>")
     def enc(vs: pd.Series) -> pd.DataFrame:
-        X = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
-        assign = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-        R = X - C[assign]
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            S = R[:, j * d_sub : (j + 1) * d_sub]
-            d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.DataFrame(
-            {"cell": assign.astype(np.int32), "codes": [list(map(int, r)) for r in codes]}
-        )
+        X = _vector_matrix(vs, repr(vec_col), C.shape[1])
+        cell = _nearest_rows(X, C)[:, 0]
+        return pd.DataFrame({"cell": cell.astype(np.int32), "codes": list(_pq_codes(X - C[cell], books))})
 
     return df.select(
         F.col(id_col), enc(F.col(vec_col)).alias("__e")

@@ -1780,15 +1780,13 @@ def multimodal_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="image near-dup: dHash over decoded PNG pixels + pigeonhole Hamming blocks (planted +-1-gray twins)",
 )
 def image_neardup_dhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lakehouse_spark_spark.operators.multimodal import image_neardup_dhash
+    from lakehouse_spark_spark.operators.multimodal import encode_png_pixels, image_neardup_dhash
 
     docs = _tp(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0).select("doc_id")
 
     def synth(batches):
         import numpy as np
         import pandas as pd  # noqa: PLC0415
-
-        from lakehouse_spark_spark.operators.multimodal import encode_png_pixels
 
         for pdf in batches:
             ids, payloads = [], []
@@ -1836,7 +1834,7 @@ def image_neardup_dhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="resize-robust image near-dup: 32x32 DCT pHash + Hamming blocks (planted half-size twins)",
 )
 def image_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lakehouse_spark_spark.operators.multimodal import image_neardup_phash
+    from lakehouse_spark_spark.operators.multimodal import encode_png_pixels, image_neardup_phash
 
     # _t, not _tp: the hot path is two chained mapInPandas stages and
     # the parallelized scan fans one warm Python worker into N cold
@@ -1846,8 +1844,6 @@ def image_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth(batches):
         import numpy as np
         import pandas as pd  # noqa: PLC0415
-
-        from lakehouse_spark_spark.operators.multimodal import encode_png_pixels
 
         def scene(i: int):
             # 48x48: big enough that the half-size rendering (24x24)
@@ -1902,7 +1898,7 @@ def image_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="audio near-dup: spectral-shape fingerprint over decoded PCM WAV + pigeonhole Hamming blocks (planted re-levelled+dithered twins)",
 )
 def audio_neardup_afp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lakehouse_spark_spark.operators.multimodal import audio_neardup_afp
+    from lakehouse_spark_spark.operators.multimodal import audio_neardup_afp, make_wav_pcm
 
     # _t, not _tp: chained mapInPandas stages (see the pHash entry)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 40 == 0).select("doc_id")
@@ -1910,8 +1906,6 @@ def audio_neardup_afp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth(batches):
         import numpy as np
         import pandas as pd  # noqa: PLC0415
-
-        from lakehouse_spark_spark.operators.multimodal import make_wav_pcm
 
         RATE, SEG, NSEG = 8000, 400, 8
 
@@ -1971,7 +1965,11 @@ def audio_neardup_afp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="video near-dup: frame-sampled pHash + Hamming blocks + 3-of-6 frame vote (planted half-size twins)",
 )
 def video_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from lakehouse_spark_spark.operators.multimodal import video_neardup_phash
+    from lakehouse_spark_spark.operators.multimodal import (
+        encode_png_pixels,
+        make_framestack,
+        video_neardup_phash,
+    )
 
     # _t, not _tp: chained mapInPandas stages (see the pHash entry)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 40 == 0).select("doc_id")
@@ -1979,8 +1977,6 @@ def video_neardup_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     def synth(batches):
         import numpy as np
         import pandas as pd  # noqa: PLC0415
-
-        from lakehouse_spark_spark.operators.multimodal import encode_png_pixels, make_framestack
 
         def scene(i: int, f: int):
             # 4-component random low-frequency mixture per (clip, frame):
@@ -2046,17 +2042,17 @@ def _disposition_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled doc carries all four modality columns; EVERY sampled doc
     plants ONE twin (id + 10,000,000) whose duplicated modality rotates
     by sample index % 4."""
+    from lakehouse_spark_spark.operators.multimodal import (
+        encode_png_pixels,
+        make_framestack,
+        make_wav_pcm,
+    )
+
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 40 == 0).select("doc_id")
 
     def synth(batches):
         import numpy as np
         import pandas as pd  # noqa: PLC0415
-
-        from lakehouse_spark_spark.operators.multimodal import (
-            encode_png_pixels,
-            make_framestack,
-            make_wav_pcm,
-        )
 
         RATE, SEG, NSEG = 8000, 400, 8
 
@@ -2217,7 +2213,7 @@ def media_neardup_persisted_ingest_q(spark: SparkSession, sf_dir: str) -> DataFr
         update_media_fp_index,
         write_media_fp_index,
     )
-    from lakehouse_spark_spark.operators.multimodal import image_hashes
+    from lakehouse_spark_spark.operators.multimodal import encode_png_pixels, image_hashes
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0).select("doc_id")
 
@@ -2232,8 +2228,6 @@ def media_neardup_persisted_ingest_q(spark: SparkSession, sf_dir: str) -> DataFr
         def fn(batches):
             import numpy as np
             import pandas as pd  # noqa: PLC0415
-
-            from lakehouse_spark_spark.operators.multimodal import encode_png_pixels
 
             def scene(key: int):
                 rng = np.random.RandomState(key % (2**31))

@@ -13,7 +13,8 @@ cluster and for DuckDB-oracle comparability:
 - Arrow enabled for the few Pandas-UDF code paths, and for Python
   UDTFs,
 - Spark's cache of generated (whole-stage codegen) classes sized to
-  the working set of one driver, so a repeated plan reuses its classes
+  the working set of one driver, and keyed by the generated code
+  without the stage's number, so a repeated plan reuses its classes
   instead of recompiling them with Janino on every run.
 """
 
@@ -64,6 +65,13 @@ def get_session(app_name: str = "lakehouse_spark_spark", cpus: str | int | None 
         # unchanged; only whether an identical class is reused differs.
         # A static conf: it takes effect only when the session starts.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # That cache is keyed by the generated source, whose class name
+        # carries the stage number by default. Under adaptive execution
+        # one plan's stages are numbered differently from run to run (1
+        # and 2, then 2 and 3, then 2 and 1), so a warm op recompiled code
+        # it already had: 4, 4, 4, 0, 0, 0 classes in six warm medallion
+        # ops, and none without the number. Results are unchanged.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # managed (incl. bucketed) tables land outside the repo
         .config("spark.sql.warehouse.dir", os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/lakehouse_spark_warehouse"))
     )

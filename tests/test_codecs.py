@@ -831,6 +831,38 @@ def test_media_passes_quarantine_null_and_empty_payloads(spark):
     assert sorted((r["doc_id"], r["keep"]) for r in out) == [(i, True) for i in range(5)]
 
 
+def test_decode_resize_audio_give_null_rows_for_null_and_empty_payloads(spark):
+    """A NULL and an empty payload beside valid ones: decode_images,
+    resize_images and extract_audio_features each return a row with NULL
+    outputs for them, and the valid rows are unchanged."""
+    from lakehouse_spark_spark.operators.multimodal import (
+        decode_images,
+        extract_audio_features,
+        make_png,
+        make_wav,
+        resize_images,
+    )
+
+    png, wav = make_png(40, 20), make_wav(440.0)
+    valid = spark.createDataFrame([(0, bytearray(png)), (3, bytearray(wav))], "doc_id long, media binary")
+    media = valid.union(spark.createDataFrame([(1, None), (2, bytearray(b""))], "doc_id long, media binary"))
+
+    meta = {r["doc_id"]: r for r in decode_images(media).collect()}
+    assert (meta[0]["format"], meta[0]["width"], meta[0]["height"]) == ("png", 40, 20)
+    assert meta[1]["media_size_bytes"] is None and meta[2]["media_size_bytes"] == 0
+    for i in (1, 2):
+        assert (meta[i]["format"], meta[i]["width"], meta[i]["height"], meta[i]["sha256"]) == (None,) * 4
+
+    resized = {r["doc_id"]: r for r in resize_images(media, max_side=10).collect()}
+    assert (resized[0]["width"], resized[0]["height"]) == (10, 5)
+    assert all((resized[i]["media"], resized[i]["width"], resized[i]["height"]) == (None,) * 3 for i in (1, 2))
+
+    audio = {r["doc_id"]: r for r in extract_audio_features(media).collect()}
+    assert audio[3]["duration_s"] == 0.1 and len(audio[3]["features"]) == 8
+    assert all((audio[i]["duration_s"], audio[i]["rms"], audio[i]["features"]) == (None,) * 3 for i in (1, 2))
+    assert {r["doc_id"]: r for r in extract_audio_features(valid).collect()} == {0: audio[0], 3: audio[3]}
+
+
 def test_disposition_reads_its_assets_once(spark, tmp_path):
     """The disposition scans its input once for all four modalities and
     the id list: a mapInPandas source that records the rows it emits

@@ -55,7 +55,11 @@ def test_empty_training_sample_names_the_column(spark):
 
 
 def test_null_vector_fails_the_fit(spark):
-    from lakehouse_spark_spark.operators.similarity import semantic_dedup, train_ivf_centroids
+    """A null vector fails the fit, and the cell assignment of a given
+    model too."""
+    from pyspark.errors import PythonException
+
+    from lakehouse_spark_spark.operators.similarity import ivf_topk, semantic_dedup, train_ivf_centroids
 
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, None), (3, [1.0, 1.0])], "vec_id long, embedding array<double>"
@@ -64,6 +68,8 @@ def test_null_vector_fails_the_fit(spark):
         train_ivf_centroids(df, "embedding", n_cells=2)
     with pytest.raises(ValueError, match="null vector in 'embedding'"):
         semantic_dedup(df, "vec_id", "embedding", n_cells=2).collect()
+    with pytest.raises(PythonException, match="null vector"):
+        ivf_topk(df, df, "vec_id", "embedding", centroids=[[1.0, 0.0], [0.0, 1.0]]).collect()
 
 
 def _sse(X, cents) -> float:
@@ -99,13 +105,70 @@ def test_kmeans_kernel_properties(distinct, picks, k, scale):
     assert _pq_codebooks_np(X.copy(), m=1, k=k)[0] == cents
 
 
-def test_blocked_distances_match_the_unblocked_form(monkeypatch):
+def _nearest_reference(points, cents, n):
+    """Sequential-sum squared L2, then a stable sort: the n nearest
+    centroid indices per point, ties to the lower index."""
+    out = []
+    for p in points:
+        d = []
+        for c in cents:
+            acc = 0
+            for a, b in zip(p, c):
+                acc += (a - b) * (a - b)
+            d.append(acc)
+        out.append(sorted(range(len(cents)), key=lambda j: (d[j], j))[:n])
+    return out
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.integers(1, 4).flatmap(
+        lambda d: st.tuples(
+            st.lists(st.lists(st.integers(-6, 6), min_size=d, max_size=d), min_size=1, max_size=8),
+            st.lists(st.lists(st.integers(-12, 12), min_size=d, max_size=d), max_size=12),
+        )
+    ),
+    dups=st.lists(st.integers(0, 7), max_size=4),
+    mids=st.lists(st.tuples(st.integers(0, 11), st.integers(0, 11)), max_size=6),
+    n=st.integers(1, 10),
+)
+def test_blocked_distances_match_the_unblocked_form(data, dups, mids, n):
+    """The kernel against a sequential-sum reference on small integers,
+    where every sum is exact: planted duplicate centroids and points
+    equidistant from two centroids must rank the same cells in the same
+    order, ties to the lower index, for n=1 and n>1, with the default
+    block size and with one row per block."""
+    from lakehouse_spark_spark.operators import similarity
+
+    halves, pts = data
+    cents = [[2 * x for x in c] for c in halves]  # even, so every midpoint is integral
+    cents += [cents[i % len(cents)] for i in dups]
+    pts = pts + [[(a + b) // 2 for a, b in zip(cents[i % len(cents)], cents[j % len(cents)])] for i, j in mids]
+    pts += cents[:2]
+    X, C = np.asarray(pts, dtype=np.float64), np.asarray(cents, dtype=np.float64)
+    want = _nearest_reference(pts, cents, n)
+    default = similarity._DIST_BLOCK_ELEMS
+    for block in (default, 7):  # 7: one row per block
+        similarity._DIST_BLOCK_ELEMS = block
+        try:
+            assert similarity._nearest_rows(X, C, n).tolist() == want
+            assert similarity._nearest_rows(X, C).tolist() == [w[:1] for w in want]
+        finally:
+            similarity._DIST_BLOCK_ELEMS = default
+
+
+def test_blocked_float_distances_match_the_unblocked_form(monkeypatch):
+    """On float data the blocked ranks equal the unblocked N × k × d
+    form's argmin and stable argsort, and the k-means fit is the same,
+    with the default block size and with one row per block."""
     from lakehouse_spark_spark.operators import similarity
 
     rng = np.random.default_rng(5)
     X, C = rng.normal(size=(200, 8)), rng.normal(size=(5, 8))
-    unblocked = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    unblocked = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
     books = similarity._pq_codebooks_np(X, m=2, k=5)
-    monkeypatch.setattr(similarity, "_DIST_BLOCK_ELEMS", 7)  # one row per block
-    assert (similarity._nearest_rows(X, C) == unblocked).all()
-    assert similarity._pq_codebooks_np(X, m=2, k=5) == books
+    for block in (similarity._DIST_BLOCK_ELEMS, 7):  # 7: one row per block
+        monkeypatch.setattr(similarity, "_DIST_BLOCK_ELEMS", block)
+        assert (similarity._nearest_rows(X, C)[:, 0] == unblocked.argmin(axis=1)).all()
+        assert (similarity._nearest_rows(X, C, 3) == np.argsort(unblocked, axis=1, kind="stable")[:, :3]).all()
+        assert similarity._pq_codebooks_np(X, m=2, k=5) == books

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import sys
 
+import numpy as np
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -106,3 +107,66 @@ def test_linter_flags_plan_explosion(spark):
     for _ in range(_MAX_SHUFFLES + 1):
         df = df.union(d)
     assert "plan_explosion" in lint_df(df)
+
+
+def _literal_count(spark, build, monkeypatch) -> int:
+    """Literal nodes in the optimized plan of the frame ``build()``
+    returns and of every frame it checkpoints on the way (a
+    checkpoint's plan hides behind its LogicalRDD)."""
+    frame_cls = type(spark.range(0))
+    plans = []
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    plans.append(build()._jdf.queryExecution().optimizedPlan())
+    monkeypatch.undo()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def count(node, plan_node: bool) -> int:
+        own = 0 if plan_node else int(node.getClass().getSimpleName() == "Literal")
+        subs = seq(node.expressions()) if plan_node else []
+        return (
+            own
+            + sum(count(e, False) for e in subs)
+            + sum(count(c, plan_node) for c in seq(node.children()))
+        )
+
+    return sum(count(p, True) for p in plans)
+
+
+def test_model_size_does_not_grow_the_plan(spark, monkeypatch):
+    """IVF centroids and LSH hyperplanes ride in Arrow UDF closures, not
+    in the plan: ``ivf_topk`` and ``semantic_dedup`` plan the same
+    number of Literal nodes at 16 cells as at 256, and ``ann_lsh_topk``
+    the same at 8 planes as at 16."""
+    from lakehouse_spark_spark.operators.similarity import ann_lsh_topk, ivf_topk, semantic_dedup
+
+    rng = np.random.default_rng(3)
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=4)]) for i in range(64)], "vec_id long, embedding array<double>"
+    )
+    queries = vecs.filter(F.col("vec_id") < 4)
+
+    def model(rows):
+        return [[float(x) for x in r] for r in rng.normal(size=(rows, 4))]
+
+    cents = {n: model(n) for n in (16, 256)}
+    planes = {n: model(n) for n in (8, 16)}
+    for build in (
+        lambda n: ivf_topk(vecs, queries, "vec_id", "embedding", n_probe=2, centroids=cents[n]),
+        lambda n: semantic_dedup(vecs, "vec_id", "embedding", centroids=cents[n]),
+    ):
+        assert _literal_count(spark, lambda: build(16), monkeypatch) == _literal_count(
+            spark, lambda: build(256), monkeypatch
+        )
+    lsh = {
+        n: _literal_count(spark, lambda n=n: ann_lsh_topk(vecs, queries, "vec_id", "embedding", planes[n]), monkeypatch)
+        for n in planes
+    }
+    assert lsh[8] == lsh[16]
